@@ -18,22 +18,18 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..parser.api import UTF8_ERROR, parse_document, tree_to_json
+from ..operators.parse import _to_text, decode_and_parse
+from ..parser.api import UTF8_ERROR, tree_to_json
 from ..parser.extract import extract_all, extract_text_v2
-from ..parser.treebuilder import ParseBudgetExceeded
 
 
 def _doc_or_none(html):
+    # ONLY the contract's row-level errors (invalid UTF-8, parse budget)
+    # null out; a genuine parser defect must propagate, not become NULL
     if html is None:
         return None
-    try:
-        if isinstance(html, (bytes, bytearray, memoryview)):
-            html = bytes(html).decode("utf-8", errors="strict")
-        return parse_document(html, max_nodes=1_000_000, max_depth=512).doc
-    except (UnicodeDecodeError, ParseBudgetExceeded):
-        # ONLY the contract's row-level error paths null out; a genuine
-        # parser defect must propagate, not silently become NULL
-        return None
+    parsed, _ = decode_and_parse(html)
+    return None if parsed is None else parsed.doc
 
 
 def _udf_extract_text(html):
@@ -71,8 +67,7 @@ def _udf_parse_error(html):
         if h is None:
             return None
         try:
-            if isinstance(h, (bytes, bytearray, memoryview)):
-                bytes(h).decode("utf-8", errors="strict")
+            _to_text(h)
             return None
         except UnicodeDecodeError:
             return UTF8_ERROR
@@ -105,9 +100,7 @@ def _udf_fragment_json(html):
         if h is None:
             return None
         try:
-            if isinstance(h, (bytes, bytearray, memoryview)):
-                h = bytes(h).decode("utf-8", errors="strict")
-            return fragment_to_json(parse_fragment(h, "div"))
+            return fragment_to_json(parse_fragment(_to_text(h), "div"))
         except UnicodeDecodeError:
             return None
 

@@ -36,15 +36,13 @@ a task failure.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
 import pyarrow as pa
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from ..parser.dom import ELEMENT, HTML_NS, TEXT
-from .parse import DEFAULT_MAX_DEPTH, DEFAULT_MAX_NODES
-from .select import _parse_or_error
+from .parse import DEFAULT_MAX_DEPTH, DEFAULT_MAX_NODES, emit_error, \
+    map_documents
 
 __all__ = [
     "to_markdown",
@@ -225,6 +223,17 @@ def _doc_markdown(doc) -> str:
     return _NL_RUN.sub("\n\n", md).strip().replace("\x00", "\n")
 
 
+def emit_markdown(out: dict, parsed, err) -> int:
+    """The ``markdown`` column, shared with ``parse_and_extract``."""
+    out["markdown"].append(
+        None if parsed is None else _doc_markdown(parsed.doc)
+    )
+    return 1
+
+
+_MD_SCHEMA = pa.schema([("error", pa.string()), ("markdown", pa.string())])
+
+
 def to_markdown(
     df: DataFrame,
     id_col: str = "url",
@@ -233,39 +242,10 @@ def to_markdown(
     max_depth: int = DEFAULT_MAX_DEPTH,
 ) -> DataFrame:
     """pages → ``(<id_col>, error, markdown)``, one row per page."""
-    id_field = df.schema[id_col].dataType.simpleString()
-
-    schema = pa.schema(
-        [
-            ("id", pa.string() if id_field == "string" else pa.int64()),
-            ("error", pa.string()),
-            ("markdown", pa.string()),
-        ]
+    return map_documents(
+        df, id_col, html_col, [emit_error, emit_markdown], _MD_SCHEMA,
+        max_nodes=max_nodes, max_depth=max_depth,
     )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            rows = []
-            for did, html in zip(ids, htmls):
-                doc, err = _parse_or_error(did, html, max_nodes, max_depth)
-                rows.append(
-                    {
-                        "id": did,
-                        "error": err,
-                        "markdown": None if doc is None else _doc_markdown(doc),
-                    }
-                )
-            yield pa.RecordBatch.from_pylist(rows, schema=schema)
-
-    pruned = df.select(
-        F.col(id_col).alias("id"), F.col(html_col).alias("html")
-    )
-    out_type = "string" if id_field == "string" else "bigint"
-    return pruned.mapInArrow(
-        fn, f"id {out_type}, error string, markdown string"
-    ).withColumnRenamed("id", id_col)
 
 
 # ---------------------------------------------------------------------------

@@ -1,28 +1,35 @@
 """HTML parse + extract operators — the Spark mapping of the reference's
 four entry points (``lib/html5ever.ex:40-129``).
 
-Execution model: one ``mapInArrow`` call per Arrow batch of documents —
-zero per-row Python dispatch (the analog of the reference's one
-dirty-CPU NIF call per document, ``lib.rs:24,:43``; Arrow zero-copy
-replaces the BEAM term-copy avoidance of ``CHANGELOG.md:176-178``).
-Column pruning happens *before* the Python stage: only (url, html) cross
-the JVM→Python boundary, so the parquet scan reads exactly two columns.
+Execution model: :func:`map_documents` is the one HTML document kernel.
+Every per-document HTML operator (here, ``select``, ``tables``,
+``markdown``) is a list of emitters over its single ``mapInArrow``
+stage — one Python call per Arrow batch, zero per-row dispatch (the
+analog of the reference's one dirty-CPU NIF call per document,
+``lib.rs:24,:43``; Arrow zero-copy replaces the BEAM term-copy
+avoidance of ``CHANGELOG.md:176-178``). Column pruning happens *before*
+the Python stage: only (url, html) cross the JVM→Python boundary, so
+the parquet scan reads exactly two columns.
 
-Row-level error semantics: invalid UTF-8 yields an ``error`` column
-value (the reference's only error path, ``lib.rs:10-22``) with null
-outputs; the job never fails on malformed input.
+Row-level error semantics: invalid UTF-8 or an exceeded parse budget
+yields an ``error`` value (the reference's only error path,
+``lib.rs:10-22``) with null outputs; the job never fails on malformed
+input.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructField, StructType
 
-from ..parser.api import UTF8_ERROR, flat_rows, parse_document, tree_to_json
-from ..parser.treebuilder import ParseBudgetExceeded
+from ..parser.api import UTF8_ERROR, parse_document, tree_to_json
+from ..parser.extract import extract_all
+from ..parser.treebuilder import ParseBudgetExceeded, TreeBuilder
 
 # per-document DOM node cap: ~3 orders of magnitude above the web
 # average (~600 nodes/page, reference lib.rs:32-35) — bounds executor
@@ -31,7 +38,6 @@ DEFAULT_MAX_NODES = 1_000_000
 # open-element-stack cap (browser parity: Blink caps at 512); bounds the
 # O(depth²) scope scans on never-closed-tag bombs
 DEFAULT_MAX_DEPTH = 512
-from ..parser.extract import extract_all
 
 # per-doc metric columns emitted alongside text/title/links — histogram-
 # class queries aggregate these instead of exploding every DOM node
@@ -42,18 +48,32 @@ _METRIC_KEYS = (
     "n_texts", "n_comments", "n_doctypes", "n_pis", "n_documents",
 )
 
-PARSED_FIELDS = (
-    "url string, error string, text string, title string, "
-    "links array<string>, n_parse_errors bigint, tree_json string, "
-    "markdown string, "
-    + ", ".join(f"{k} bigint" for k in _METRIC_KEYS)
+PARSED_SCHEMA = pa.schema(
+    [
+        ("error", pa.string()),
+        ("text", pa.string()),
+        ("title", pa.string()),
+        ("links", pa.list_(pa.string())),
+        ("n_parse_errors", pa.int64()),
+        ("tree_json", pa.string()),
+        ("markdown", pa.string()),
+        *[(k, pa.int64()) for k in _METRIC_KEYS],
+    ]
 )
 
-NODES_FIELDS = (
-    "url string, node_id bigint, parent_id bigint, children array<bigint>, "
-    "type string, name string, "
-    "attrs array<struct<name:string,value:string>>, "
-    "attrs_map map<string,string>, contents string"
+NODES_SCHEMA = pa.schema(
+    [
+        ("node_id", pa.int64()),
+        ("parent_id", pa.int64()),
+        ("children", pa.list_(pa.int64())),
+        ("type", pa.string()),
+        ("name", pa.string()),
+        ("attrs", pa.list_(
+            pa.struct([("name", pa.string()), ("value", pa.string())])
+        )),
+        ("attrs_map", pa.map_(pa.string(), pa.string())),
+        ("contents", pa.string()),
+    ]
 )
 
 
@@ -72,6 +92,156 @@ def _to_text_sniff(v) -> str:
 
         return sniff_decode(bytes(v))[0]
     return v
+
+
+def decode_and_parse(
+    html,
+    decode: Callable = _to_text,
+    max_nodes: int = DEFAULT_MAX_NODES,
+    max_depth: int = DEFAULT_MAX_DEPTH,
+) -> tuple[TreeBuilder | None, str | None]:
+    """One document through the reference's per-call contract
+    (``lib.rs:10-35``): decode gate, then budgeted parse. Returns
+    ``(builder, None)``, or ``(None, error)`` with the one error
+    taxonomy — ``UTF8_ERROR`` or ``"parse budget exceeded: …"``. Null
+    html parses as the empty document."""
+    try:
+        text = decode(html) if html is not None else ""
+        return (
+            parse_document(text, max_nodes=max_nodes, max_depth=max_depth),
+            None,
+        )
+    except UnicodeDecodeError:
+        return None, UTF8_ERROR
+    except ParseBudgetExceeded as exc:
+        return None, f"parse budget exceeded: {exc}"
+
+
+# An emitter turns one parsed document into output rows:
+# ``emit(out, parsed, err) -> n_rows`` appends its columns' values to
+# the lists in ``out`` (column name → list) and returns how many rows it
+# added. ``parsed`` is the TreeBuilder (``parsed.doc`` is the document)
+# or None when ``err`` holds the row-level error.
+Emitter = Callable[[dict, TreeBuilder | None, str | None], int]
+
+
+def map_documents(
+    df: DataFrame,
+    id_col: str,
+    html_col: str,
+    emitters: list[Emitter],
+    schema: pa.Schema,
+    id_name: str | None = None,
+    max_nodes: int = DEFAULT_MAX_NODES,
+    max_depth: int = DEFAULT_MAX_DEPTH,
+    passthrough_cols: tuple[str, ...] = (),
+    encoding: str = "strict",
+) -> DataFrame:
+    """The HTML document kernel: every per-document HTML operator is one
+    list of emitters over this single ``mapInArrow`` stage.
+
+    Per Arrow batch: decode (``encoding="strict"`` UTF-8 gate or
+    ``"sniff"`` crawl chain) → budgeted parse → the one error taxonomy
+    (:func:`decode_and_parse`) → every emitter, in order → one columnar
+    RecordBatch. Output columns: ``id_name`` (default ``id_col``; the id
+    keeps its input type), then ``schema``, then ``passthrough_cols``.
+    The id and passthrough columns never become Python objects: each is
+    the input column ``take``-n by every output row's document index.
+    A ``schema`` column that no emitter appended to in a batch is all
+    null (e.g. ``tree_json`` when it is not requested). Only
+    (id, html, passthrough) cross the JVM→Python boundary, so a parquet
+    scan reads exactly those columns."""
+    decode = _to_text if encoding == "strict" else _to_text_sniff
+    names = schema.names
+    n_pass = len(passthrough_cols)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            out: dict[str, list] = {k: [] for k in names}
+            doc_idx: list[int] = []
+            for i, html in enumerate(batch.column(1).to_pylist()):
+                parsed, err = decode_and_parse(
+                    html, decode, max_nodes, max_depth
+                )
+                for emit in emitters:
+                    n = emit(out, parsed, err)
+                doc_idx.extend([i] * n)
+            if not doc_idx:
+                continue
+            take = pa.array(doc_idx, pa.int32())
+            cols = [batch.column(0).take(take)]
+            for f in schema:
+                vals = out[f.name]
+                cols.append(
+                    pa.array(vals, f.type) if vals
+                    else pa.nulls(len(doc_idx), f.type)
+                )
+            cols += [batch.column(2 + j).take(take) for j in range(n_pass)]
+            yield pa.RecordBatch.from_arrays(
+                cols, names=[id_name or id_col, *names, *passthrough_cols]
+            )
+
+    pruned = df.select(
+        F.col(id_col), F.col(html_col), *[F.col(c) for c in passthrough_cols]
+    )
+    in_fields = pruned.schema.fields
+    out_type = StructType(
+        [StructField(id_name or id_col, in_fields[0].dataType)]
+        + from_arrow_schema(schema).fields
+        + [StructField(f.name, f.dataType) for f in in_fields[2:]]
+    )
+    return pruned.mapInArrow(fn, out_type)
+
+
+def emit_error(out: dict, parsed, err) -> int:
+    """The ``error`` column of a one-row-per-document operator."""
+    out["error"].append(err)
+    return 1
+
+
+_EXTRACT_KEYS = ("text", "title", "links", *_METRIC_KEYS)
+
+
+def _emit_extract(out: dict, parsed, err) -> int:
+    if parsed is None:
+        for k in (*_EXTRACT_KEYS, "n_parse_errors"):
+            out[k].append(None)
+        return 1
+    m = extract_all(parsed.doc)  # fused single traversal
+    for k in _EXTRACT_KEYS:
+        out[k].append(m[k])
+    out["n_parse_errors"].append(
+        parsed.parse_errors + parsed.tokenizer.parse_errors
+    )
+    return 1
+
+
+def _emit_tree_json(out: dict, parsed, err) -> int:
+    out["tree_json"].append(
+        None if parsed is None else tree_to_json(parsed.doc)
+    )
+    return 1
+
+
+def rows_emitter(walk: Callable, names: tuple[str, ...]) -> Emitter:
+    """Emitter for an operator with an ``error`` column plus ``names``:
+    ``walk(doc)`` returns the document's rows as tuples over ``names``
+    (any number, error null); an error document is ONE sentinel row —
+    the error, ``names`` null (``lib/html5ever.ex:117-119``)."""
+
+    def emit(out: dict, parsed, err) -> int:
+        if parsed is None:
+            out["error"].append(err)
+            for k in names:
+                out[k].append(None)
+            return 1
+        rows = walk(parsed.doc)
+        out["error"].extend([None] * len(rows))
+        for k, col in zip(names, zip(*rows)):
+            out[k].extend(col)
+        return len(rows)
+
+    return emit
 
 
 def parse_and_extract(
@@ -103,93 +273,19 @@ def parse_and_extract(
     prescan → UTF-8 attempt → windows-1252 fallback (WHATWG chain,
     parser/encoding.py) — legacy cp1252/latin-1 pages decode instead of
     becoming error rows; output schema is unchanged."""
-    decode = _to_text if encoding == "strict" else _to_text_sniff
+    emitters = [emit_error, _emit_extract]
+    if with_tree_json:
+        emitters.append(_emit_tree_json)
+    if with_markdown:
+        # lazy: markdown imports this module
+        from .markdown import emit_markdown
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        if with_markdown:
-            # lazy: markdown → select → parse would cycle at load time
-            from .markdown import _doc_markdown
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            out = {
-                "url": urls,
-                "error": [],
-                "text": [],
-                "title": [],
-                "links": [],
-                "n_parse_errors": [],
-                "tree_json": [],
-                "markdown": [],
-                **{k: [] for k in _METRIC_KEYS},
-            }
-            for html in htmls:
-                try:
-                    text_in = decode(html) if html is not None else ""
-                    builder = parse_document(
-                        text_in, max_nodes=max_nodes, max_depth=max_depth
-                    )
-                except (UnicodeDecodeError, ParseBudgetExceeded) as exc:
-                    out["error"].append(
-                        UTF8_ERROR
-                        if isinstance(exc, UnicodeDecodeError)
-                        else f"parse budget exceeded: {exc}"
-                    )
-                    for k in ("text", "title", "links", "n_parse_errors",
-                              "tree_json", "markdown", *_METRIC_KEYS):
-                        out[k].append(None)
-                    continue
-                doc = builder.doc
-                m = extract_all(doc)  # fused single traversal
-                out["error"].append(None)
-                out["text"].append(m["text"])
-                out["title"].append(m["title"])
-                out["links"].append(m["links"])
-                for k in _METRIC_KEYS:
-                    out[k].append(m[k])
-                out["n_parse_errors"].append(
-                    builder.parse_errors + builder.tokenizer.parse_errors
-                )
-                out["tree_json"].append(tree_to_json(doc) if with_tree_json else None)
-                out["markdown"].append(
-                    _doc_markdown(doc) if with_markdown else None
-                )
-            rb = pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema(
-                    [
-                        ("url", pa.string()),
-                        ("error", pa.string()),
-                        ("text", pa.string()),
-                        ("title", pa.string()),
-                        ("links", pa.list_(pa.string())),
-                        ("n_parse_errors", pa.int64()),
-                        ("tree_json", pa.string()),
-                        ("markdown", pa.string()),
-                        *[(k, pa.int64()) for k in _METRIC_KEYS],
-                    ]
-                ),
-            )
-            for j, name in enumerate(passthrough_cols):
-                rb = rb.append_column(
-                    pa.field(name, batch.schema.field(2 + j).type),
-                    batch.column(2 + j),
-                )
-            yield rb
-
-    pruned = df.select(
-        F.col(url_col).alias("url"),
-        F.col(html_col).alias("html"),
-        *[F.col(c) for c in passthrough_cols],
+        emitters.append(emit_markdown)
+    return map_documents(
+        df, url_col, html_col, emitters, PARSED_SCHEMA, id_name="url",
+        max_nodes=max_nodes, max_depth=max_depth,
+        passthrough_cols=passthrough_cols, encoding=encoding,
     )
-    out_fields = PARSED_FIELDS
-    if passthrough_cols:
-        pass_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in df.select(*passthrough_cols).schema.fields
-        )
-        out_fields = PARSED_FIELDS + ", " + pass_schema
-    return pruned.mapInArrow(fn, out_fields)
 
 
 def flat_parse_nodes(
@@ -208,81 +304,47 @@ def flat_parse_nodes(
     ``{:error, reason}`` return (``lib/html5ever.ex:117-119``); real
     node rows always have ``type IN (document, element, text, comment,
     doctype, pi)``, so filters on those types are unaffected."""
+    # r9: columnar assembly — column lists plus one Arrow build is ~4x
+    # faster than per-node row dicts through from_pylist (measured
+    # 0.27s -> 0.06s per 512-doc batch)
 
-    arrow_schema = pa.schema(
-        [
-            ("url", pa.string()),
-            ("node_id", pa.int64()),
-            ("parent_id", pa.int64()),
-            ("children", pa.list_(pa.int64())),
-            ("type", pa.string()),
-            ("name", pa.string()),
-            ("attrs", pa.list_(
-                pa.struct([("name", pa.string()), ("value", pa.string())])
-            )),
-            ("attrs_map", pa.map_(pa.string(), pa.string())),
-            ("contents", pa.string()),
-        ]
+    def emit(out: dict, parsed, err) -> int:
+        (c_id, c_pid, c_ch, c_ty, c_nm, c_at, c_am, c_ct) = (
+            out[k].append for k in NODES_SCHEMA.names
+        )
+        if parsed is None:
+            c_id(None); c_pid(None); c_ch(None); c_ty("error")
+            c_nm(None); c_at(None); c_am(None); c_ct(err)
+            return 1
+        n_rows = 0
+        stack = [parsed.doc]
+        while stack:
+            node = stack.pop()
+            t = node.type
+            if t == "element":
+                attrs = [(n, v) for n, v in node.attrs]
+                am: dict = {}
+                for nk, v in node.attrs:
+                    if nk not in am:
+                        am[nk] = v
+                aml = list(am.items())
+            else:
+                attrs = None
+                aml = None
+            c_id(node.id)
+            c_pid(node.parent.id if node.parent is not None else None)
+            c_ch([c.id for c in node.children])
+            c_ty(t)
+            c_nm(node.name)
+            c_at(attrs)
+            c_am(aml)
+            c_ct(node.contents)
+            n_rows += 1
+            if node.children:
+                stack.extend(reversed(node.children))
+        return n_rows
+
+    return map_documents(
+        df, url_col, html_col, [emit], NODES_SCHEMA, id_name="url",
+        max_nodes=max_nodes, max_depth=max_depth,
     )
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # r9: columnar assembly — building 9 column lists and one
-        # from_pydict is ~4x faster than per-node row dicts through
-        # from_pylist (measured 0.27s -> 0.06s per 512-doc batch);
-        # values identical (same DFS, same first-wins attrs_map)
-        names = ("url", "node_id", "parent_id", "children", "type",
-                 "name", "attrs", "attrs_map", "contents")
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            cols: dict[str, list] = {k: [] for k in names}
-            (c_url, c_id, c_pid, c_ch, c_ty, c_nm, c_at, c_am,
-             c_ct) = (cols[k].append for k in names)
-            n_rows = 0
-            for url, html in zip(urls, htmls):
-                try:
-                    text_in = _to_text(html) if html is not None else ""
-                    doc = parse_document(
-                        text_in, max_nodes=max_nodes, max_depth=max_depth
-                    ).doc
-                except (UnicodeDecodeError, ParseBudgetExceeded) as exc:
-                    c_url(url); c_id(None); c_pid(None); c_ch(None)
-                    c_ty("error"); c_nm(None); c_at(None); c_am(None)
-                    c_ct(
-                        UTF8_ERROR
-                        if isinstance(exc, UnicodeDecodeError)
-                        else f"parse budget exceeded: {exc}"
-                    )
-                    n_rows += 1
-                    continue
-                stack = [doc]
-                while stack:
-                    node = stack.pop()
-                    t = node.type
-                    if t == "element":
-                        attrs = [(n, v) for n, v in node.attrs]
-                        am: dict = {}
-                        for nk, v in node.attrs:
-                            if nk not in am:
-                                am[nk] = v
-                        aml = list(am.items())
-                    else:
-                        attrs = None
-                        aml = None
-                    c_url(url)
-                    c_id(node.id)
-                    c_pid(node.parent.id if node.parent is not None else None)
-                    c_ch([c.id for c in node.children])
-                    c_ty(t)
-                    c_nm(node.name)
-                    c_at(attrs)
-                    c_am(aml)
-                    c_ct(node.contents)
-                    n_rows += 1
-                    if node.children:
-                        stack.extend(reversed(node.children))
-            if n_rows:
-                yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
-
-    pruned = df.select(F.col(url_col).alias("url"), F.col(html_col).alias("html"))
-    return pruned.mapInArrow(fn, NODES_FIELDS)

@@ -508,9 +508,13 @@ def _lloyd_rounds_local(members, seeds, iters, round6, round9):
     6dp-rounded left-fold of squared diffs (tie-break on cid),
     centroid = 9dp-rounded per-dim mean folded in sort_key order,
     empty cells drop out — so the result is bit-identical to the
-    unrolled-CTE oracle. Returns {cid: vec}."""
+    unrolled-CTE oracle. No seeds means no centroid to assign to: the
+    result is empty, as the oracle's assign join is. Returns
+    {cid: vec}."""
     cents = dict(seeds)
     for _ in range(iters):
+        if not cents:
+            break
         groups: dict = {}
         clist = sorted(cents.items())
         for _, vec in members:
@@ -610,7 +614,8 @@ def ivf_assign(
         r9 = lambda x: _round_like_spark(x, 9)  # noqa: E731
         cents = _lloyd_rounds_local(rows, seeds, iters, r6, r9)
         cids = sorted(cents)
-        yield pd.DataFrame({"cid": cids, "c": [cents[c] for c in cids]})
+        if cids:  # an empty frame cannot carry the array<double> type
+            yield pd.DataFrame({"cid": cids, "c": [cents[c] for c in cids]})
 
     cents = train.coalesce(1).mapInPandas(
         lloyd_fn, "cid bigint, c array<double>"
@@ -656,7 +661,11 @@ def ann_ivf_topk(
     the probed cells. At corpus scale the candidate join is an
     equi-join on cell id (same shape as the SRP bucket join); the
     centroid table is k rows, always broadcast; the build trains on a
-    bounded hash-sample (see :func:`ivf_assign`)."""
+    bounded hash-sample (see :func:`ivf_assign`).
+
+    Not lazy: construction runs one eager Spark job, the centroid
+    ``localCheckpoint`` (the Lloyd kernel and its sample scan), before
+    the frame is returned."""
     assignment, cents = ivf_assign(
         emb, k_cells, iters, id_col, vec_col, train_frac, train_salt
     )
@@ -912,7 +921,9 @@ def ivf_pq_topk(
         # per-subspace Lloyd over the vec_id-ordered members
         by_j: dict = {}
         for vid, vec, _, ip in rows:
-            if not ip:
+            # an empty coarse sample trains no centroid: the row has no
+            # residual, as in the oracle's residual join
+            if not ip or not clist:
                 continue
             best = None
             for cid, c in clist:
@@ -938,9 +949,10 @@ def ivf_pq_topk(
                 o_a.append(j)
                 o_b.append(code)
                 o_w.append(cbj[code])
-        yield pd.DataFrame(
-            {"kind": o_kind, "a": o_a, "b": o_b, "w": o_w}
-        )
+        if o_kind:  # an empty frame cannot carry the array<double> type
+            yield pd.DataFrame(
+                {"kind": o_kind, "a": o_a, "b": o_b, "w": o_w}
+            )
 
     trained = train_in.coalesce(1).mapInPandas(
         fused_train_fn, "kind int, a bigint, b bigint, w array<double>"

@@ -976,7 +976,11 @@ def lm_buckets(
        tiny aggregates, broadcast back;
     4. bucket from rank by the exact ntile rule (the first n mod b
        buckets get ⌈n/b⌉ rows, the rest ⌊n/b⌋) — all integer
-       arithmetic, so it matches DuckDB's ntile bit-for-bit."""
+       arithmetic, so it matches DuckDB's ntile bit-for-bit.
+
+    Not lazy: with ``materialize=True`` (the default) construction runs
+    one eager Spark job, the ``localCheckpoint`` of the scored,
+    range-partitioned rows, before the frame is returned."""
     from pyspark.sql import Window
 
     scored = lm_score(docs, ref, text_col, id_col)

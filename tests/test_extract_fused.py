@@ -13,12 +13,13 @@ from html5ever_elixir_spark.parser.extract import (
 )
 from html5ever_elixir_spark.sources.pages import _CASES, _LINKFARM
 
-REF = pathlib.Path("/root/reference/priv/test_data")
+FIXTURES = pathlib.Path(__file__).resolve().parent / "fixtures"
 
 DOCS = (
     [html for _, html in _CASES]
     + [_LINKFARM]
-    + [(REF / n).read_text() for n in ("example.html", "drudgereport.html")]
+    + [(FIXTURES / n).read_text()
+       for n in ("placeholder_page.html", "linkfarm_page.html")]
     + [
         "<title>T1</title><svg><title>svg t</title></svg><title>T2</title>",
         "<div class='sidebar'><a href='/x'>x</a><title>inside</title></div><p>keep</p>",

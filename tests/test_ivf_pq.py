@@ -109,3 +109,36 @@ def test_dim_not_divisible_raises(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     with pytest.raises(ValueError):
         ivf_pq_topk(emb, m=5, dim=64)
+
+
+@pytest.mark.parametrize(
+    "first_id, n, train_frac",
+    [
+        # PQ-gated rows (ids < k_pq) but an empty coarse sample: no
+        # coarse seeds (ids >= k_cells) and no hash-sample draws
+        (2, 6, 0.0),
+        # a non-empty coarse sample that holds no seed id at all
+        (20, 20, 0.5),
+    ],
+)
+def test_degenerate_coarse_sample_matches_oracle(spark, first_id, n,
+                                                 train_frac):
+    # no coarse seed → no centroid: every row drops out of the build
+    # (the oracle's assign/residual joins are empty), never a task
+    # failure
+    rows = [
+        (i, [float((i * 7 + d) % 5) for d in range(4)])
+        for i in range(first_id, first_id + n)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    params = dict(dim=4, k_cells=2, m=2, k_pq=8, n_queries=30,
+                  train_frac=train_frac)
+    got = sorted(tuple(r) for r in ivf_pq_topk(emb, **params).collect())
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE embeddings AS SELECT * FROM (VALUES "
+        + ", ".join(f"({i}, {v}::FLOAT[])" for i, v in rows)
+        + ") t(vec_id, embedding)"
+    )
+    ora = sorted(con.execute(oracle_ivf_pq_sql(**params)).fetchall())
+    assert got == ora == []

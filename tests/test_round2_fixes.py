@@ -146,11 +146,13 @@ def test_normalize_url_port_strip_is_scheme_aware(spark):
 
 def test_sql_udf_narrow_exception_trap(spark, monkeypatch):
     from html5ever_elixir_spark.functions import sql_udfs
+    from html5ever_elixir_spark.operators import parse as kernel
 
     assert sql_udfs._doc_or_none(b"\xff") is None  # UTF-8 → NULL
     with pytest.raises(RuntimeError):
+        # _doc_or_none parses through the HTML document kernel's helper
         monkeypatch.setattr(
-            sql_udfs,
+            kernel,
             "parse_document",
             lambda *a, **k: (_ for _ in ()).throw(RuntimeError("bug")),
         )

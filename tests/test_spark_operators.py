@@ -166,3 +166,167 @@ def test_wet_reader_skips_response_records_and_flags_bad_blobs(spark):
     # response record skipped silently; only the conversion row emerges
     assert [(r.url, r.text) for r in ok] == [("https://a/wet", "clean text")]
     assert len(bad) == 1 and bad[0].error is not None and bad[0].url is None
+
+
+# ---------------------------------------------------------------------------
+# row-level error contract of the HTML document operators
+
+
+_CONTRACT_PAGE = (
+    b"<!DOCTYPE html><html><head><title>Shop &amp; Co</title></head><body>"
+    b"<h1>Deals</h1><p class=lead>Fresh <a href='/a'>apples</a></p>"
+    b"<table><tr><th>item</th><th>price</th></tr>"
+    b"<tr><td colspan=2>sold out</td></tr></table></body></html>"
+)
+_BUDGET_ERROR = "parse budget exceeded: document exceeds max tree depth 512"
+_MD = "# Deals\n\nFresh [apples](/a)\n\n| item | price |\n| --- | --- |\n| sold out |"
+_METRICS = ("n_nodes bigint, n_elements bigint, n_anchors bigint, "
+            "n_text_chars bigint, max_depth bigint, n_texts bigint, "
+            "n_comments bigint, n_doctypes bigint, n_pis bigint, "
+            "n_documents bigint")
+
+
+def test_html_operators_error_contract(spark):
+    """Every HTML document operator under the four contract inputs — a
+    valid page, invalid UTF-8, a 600-deep ``<div>`` bomb (depth budget)
+    and null html — pinned row for row (schema included), and identical
+    whether the four documents arrive as one Arrow batch or four."""
+    from html5ever_elixir_spark.operators.markdown import to_markdown
+    from html5ever_elixir_spark.operators.parse import (
+        flat_parse_nodes,
+        parse_and_extract,
+    )
+    from html5ever_elixir_spark.operators.select import (
+        select_counts,
+        select_nodes,
+    )
+    from html5ever_elixir_spark.operators.tables import (
+        extract_table_cells,
+        extract_table_grid,
+    )
+    from html5ever_elixir_spark.parser.api import UTF8_ERROR
+
+    pages = spark.createDataFrame(
+        [("ok", bytearray(_CONTRACT_PAGE)),
+         ("utf8", bytearray(b"<p>caf\xe9</p>")),
+         ("bomb", bytearray(b"<div>" * 600)),
+         ("null", None)],
+        "url string, html binary",
+    ).coalesce(1)
+    u8, bud = UTF8_ERROR, _BUDGET_ERROR
+    text = "Deals\nFresh apples\nitem\nprice\nsold out"
+    tree = (
+        '["#doc",[["d","html","",""],["e","html",[],[["e","head",[],'
+        '[["e","title",[],["Shop & Co"]]]],["e","body",[],[["e","h1",[],'
+        '["Deals"]],["e","p",[["class","lead"]],["Fresh ",["e","a",'
+        '[["href","/a"]],["apples"]]]],["e","table",[],[["e","tbody",[],'
+        '[["e","tr",[],[["e","th",[],["item"]],["e","th",[],["price"]]]],'
+        '["e","tr",[],[["e","td",[["colspan","2"]],["sold out"]]]]]]]]]]]]]]'
+    )
+    empty_tree = (
+        '["#doc",[["e","html",[],[["e","head",[],[]],["e","body",[],[]]]]]]'
+    )
+    null16 = (None,) * 16
+    ok_metrics = (23, 14, 1, 43, 7, 7, 0, 1, 0, 1)
+    null_metrics = (4, 3, 0, 0, 2, 0, 0, 0, 0, 1)
+    parsed_ddl = (
+        "url string, error string, text string, title string, "
+        "links array<string>, n_parse_errors bigint, tree_json string, "
+        "markdown string, " + _METRICS
+    )
+    cases = {
+        "parse_and_extract": (
+            lambda d: parse_and_extract(d),
+            parsed_ddl,
+            [("bomb", bud, *null16),
+             ("null", None, "", None, [], 1, None, None, *null_metrics),
+             ("ok", None, text, "Shop & Co", ["/a"], 0, None, None,
+              *ok_metrics),
+             ("utf8", u8, *null16)],
+        ),
+        "parse_and_extract+tree+md": (
+            lambda d: parse_and_extract(
+                d, with_tree_json=True, with_markdown=True),
+            parsed_ddl,
+            [("bomb", bud, *null16),
+             ("null", None, "", None, [], 1, empty_tree, "", *null_metrics),
+             ("ok", None, text, "Shop & Co", ["/a"], 0, tree, _MD,
+              *ok_metrics),
+             ("utf8", u8, *null16)],
+        ),
+        "flat_parse_nodes": (
+            flat_parse_nodes,
+            "url string, node_id bigint, parent_id bigint, "
+            "children array<bigint>, type string, name string, "
+            "attrs array<struct<name:string,value:string>>, "
+            "attrs_map map<string,string>, contents string",
+            [("bomb", None, None, None, "error", None, None, None, bud),
+             ("null", 0, None, [1], "document", None, None, None, None),
+             ("null", 1, 0, [2, 3], "element", "html", [], {}, None),
+             ("null", 2, 1, [], "element", "head", [], {}, None),
+             ("null", 3, 1, [], "element", "body", [], {}, None),
+             ("utf8", None, None, None, "error", None, None, None, u8)],
+        ),
+        "select_nodes": (
+            lambda d: select_nodes(d, "p a, th"),
+            "url string, error string, node_id bigint, name string, "
+            "text string",
+            [("bomb", bud, None, None, None),
+             ("ok", None, 11, "a", "apples"),
+             ("ok", None, 16, "th", "item"),
+             ("ok", None, 18, "th", "price"),
+             ("utf8", u8, None, None, None)],
+        ),
+        "select_counts": (
+            lambda d: select_counts(d, {"links": "a", "cells": "td, th"}),
+            "url string, error string, links bigint, cells bigint",
+            [("bomb", bud, None, None), ("null", None, 0, 0),
+             ("ok", None, 1, 3), ("utf8", u8, None, None)],
+        ),
+        "extract_table_cells": (
+            extract_table_cells,
+            "url string, error string, table_idx bigint, row_idx bigint, "
+            "col_idx bigint, is_header bigint, cell_text string",
+            [("bomb", bud, None, None, None, None, None),
+             ("ok", None, 1, 1, 1, 1, "item"),
+             ("ok", None, 1, 1, 2, 1, "price"),
+             ("ok", None, 1, 2, 1, 0, "sold out"),
+             ("utf8", u8, None, None, None, None, None)],
+        ),
+        "extract_table_grid": (
+            extract_table_grid,
+            "url string, error string, table_idx bigint, grid_row bigint, "
+            "col_idx bigint, grid_col bigint, rowspan bigint, "
+            "colspan bigint, is_header bigint, cell_text string",
+            [("bomb", bud, *(None,) * 8),
+             ("ok", None, 1, 1, 1, 1, 1, 1, 1, "item"),
+             ("ok", None, 1, 1, 2, 2, 1, 1, 1, "price"),
+             ("ok", None, 1, 2, 1, 1, 1, 2, 0, "sold out"),
+             ("utf8", u8, *(None,) * 8)],
+        ),
+        "to_markdown": (
+            to_markdown,
+            "url string, error string, markdown string",
+            [("bomb", bud, None), ("null", None, ""), ("ok", None, _MD),
+             ("utf8", u8, None)],
+        ),
+    }
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for name, (op, ddl, expected) in cases.items():
+            got = {}
+            for n in (1, 512):
+                spark.conf.set(key, str(n))
+                df = op(pages)
+                assert df.schema.simpleString() == spark.createDataFrame(
+                    [], ddl).schema.simpleString(), name
+                got[n] = sorted((tuple(r) for r in df.collect()), key=repr)
+            assert got[1] == got[512], name
+            rows = got[512]
+            if name == "flat_parse_nodes":
+                assert sum(r[0] == "ok" for r in rows) == 23
+                rows = [r for r in rows if r[0] != "ok"]
+            assert rows == sorted(expected, key=repr), name
+    finally:
+        spark.conf.set(key, old)
