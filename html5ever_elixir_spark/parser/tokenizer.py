@@ -6,13 +6,25 @@ we re-implement it here. Design notes:
 
 * Tokens are plain tuples (speed):
     ("chars", data)
-    ("start", name, attrs, self_closing)   # attrs: list[[name, value]]
+    ("start", name, attrs, self_closing)   # attrs: list of (name, value)
     ("end", name)
     ("comment", data)
     ("doctype", name, public_id, system_id, force_quirks)  # ids None if absent
     ("eof",)
+  The attribute pairs are lists or tuples; the tree builder copies them.
 * Character data is emitted in large chunks found via ``str.find`` —
   one Python-level iteration per markup construct, not per character.
+  Each special character's next position is cached and found again
+  only once the cursor passes it, so a scan never rescans to the end
+  of the document per run (data, script data and comments alike).
+* The common tag is one compiled match in the data state: a lowercase
+  name, and for a start tag only simple double-quoted attributes
+  (lowercase names, values without ``&`` or NUL, no name twice). That
+  is an exact early exit from the tag states: on such input they
+  produce the same token and count no parse error. Every other tag goes
+  through the character-exact states (``_tag_open`` / ``_read_tag``).
+  No flag selects the path, and ``tests/test_parser_digest.py`` pins
+  its output.
 * In-tag duplicate attributes are dropped first-wins (the WHATWG
   "duplicate-attribute" parse error; reference behavior per
   ``lib/html5ever.ex:46-47`` and ``test/html5ever_test.exs:67-91``).
@@ -42,12 +54,12 @@ from html.entities import html5 as _ENTITIES
 _TAG_NAME_RE = re.compile(r"[^\t\n\x0c />]+")
 _ATTR_NAME_RE = re.compile(r"[^\t\n\x0c /=>]+")
 _WS_RE = re.compile(r"[\t\n\x0c ]+")
-# r9 fast path: a whole run of simple double-quoted attributes up to
-# '>' — lowercase-ASCII names, values without '&'/'"'/NUL (no charref
-# or replacement processing needed), single-ws separated, no trailing
-# solidus. Anything else falls back to the character-exact loop.
-_ATTRS_FAST_RE = re.compile(
-    r'(?:[\t\n\x0c ]+[a-z][a-z0-9_-]*="[^"&\x00]*")+>'
+# The common tag in one match (see "Design notes"): no character
+# reference or NUL replacement can apply inside it. A duplicate
+# attribute name or an end tag with attributes still takes the
+# character-exact path, which counts their parse errors.
+_TAG_RE = re.compile(
+    r'<(/?)([a-z][a-z0-9]*)((?:[\t\n\x0c ]+[a-z][a-z0-9_-]*="[^"&\x00]*")*)>'
 )
 _ATTR_PAIR_RE = re.compile(r'([a-z][a-z0-9_-]*)="([^"]*)"')
 
@@ -151,6 +163,9 @@ class Tokenizer:
         (after any tag emission)."""
         s, n = self.s, self.n
         start_state = self.state
+        emit = self._emit_tok
+        tag_match = _TAG_RE.match
+        attr_pairs = _ATTR_PAIR_RE.findall
         buf: list[str] = []
         p = self.p
         # cached next-occurrence positions for the text-run scan (r9):
@@ -165,14 +180,36 @@ class Tokenizer:
             c = s[p]
             if c == "<":
                 if lt_is_markup:
-                    self.p = p
-                    if buf:
-                        self._chars("".join(buf))
+                    if buf:  # every piece in buf is non-empty
+                        emit(("chars", "".join(buf)))
                         buf = []
-                    self._tag_open()
+                    m = tag_match(s, p)
+                    if m is not None:
+                        end, name, attr_run = m.groups()
+                        if not attr_run:
+                            self.p = p = m.end()
+                            if end:
+                                emit(("end", name))
+                            else:
+                                self.last_start = name
+                                emit(("start", name, [], False))
+                        elif not end and (
+                            len(pairs := attr_pairs(attr_run))
+                            == len({a for a, _ in pairs})
+                        ):
+                            self.p = p = m.end()
+                            self.last_start = name
+                            emit(("start", name, pairs, False))
+                        else:
+                            m = None
+                    if m is None:
+                        self.p = p
+                        self._tag_open()
+                        p = self.p
+                    # the fast path sets no state: this branch runs only
+                    # in DATA, and only the sink switches it
                     if self.state != start_state:
                         return
-                    p = self.p
                 else:
                     # RCDATA / RAWTEXT: only "</" + appropriate tag closes
                     if self._at_appropriate_end_tag(p):
@@ -420,27 +457,6 @@ class Tokenizer:
             else:
                 self._emit_tok(("end", name))
             return
-        # fast path 2 (r9): a run of simple double-quoted attributes
-        # ending in '>' — byte-equivalent to the loop below for this
-        # shape (names already lowercase, values need no charref/NUL
-        # processing, '>' terminated); duplicate names fall through so
-        # the loop's first-wins + parse_error accounting is preserved
-        ma = _ATTRS_FAST_RE.match(s, q)
-        if ma:
-            pairs = _ATTR_PAIR_RE.findall(s, q, ma.end())
-            names = [a for a, _ in pairs]
-            if len(set(names)) == len(names):
-                self.p = ma.end()
-                self.state = DATA
-                if is_start:
-                    self.last_start = name
-                    self._emit_tok(
-                        ("start", name, [list(a) for a in pairs], False)
-                    )
-                else:
-                    self.parse_errors += 1  # end-tag-with-attributes
-                    self._emit_tok(("end", name))
-                return
         attrs: list[list[str]] = []
         seen: set[str] = set()
         self_closing = False
@@ -599,6 +615,7 @@ class Tokenizer:
             self.p = p + 2
             self._emit(("comment", ""))
             return
+        q1 = q2 = -1
         while True:
             if p >= n:
                 self.parse_errors += 1  # eof-in-comment
@@ -635,13 +652,18 @@ class Tokenizer:
                 buf.append("�")
                 p += 1
             else:
-                q1 = s.find("-", p)
-                q2 = s.find("\x00", p)
-                q = n
-                if q1 != -1:
-                    q = q1
-                if q2 != -1 and q2 < q:
-                    q = q2
+                # monotone next-occurrence cache, as in _data_like: a
+                # fresh find per dash run rescans to the end of the
+                # document when NUL (or '-') never occurs again
+                if q1 < p:
+                    q1 = s.find("-", p)
+                    if q1 == -1:
+                        q1 = n
+                if q2 < p:
+                    q2 = s.find("\x00", p)
+                    if q2 == -1:
+                        q2 = n
+                q = q1 if q1 < q2 else q2
                 buf.append(s[p:q])
                 p = q
 

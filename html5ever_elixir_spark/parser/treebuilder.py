@@ -299,6 +299,27 @@ class TreeBuilder:
                         return
                     tok = ("chars", data)
         guard = 0
+        op = self.open
+        if (
+            self.mode == M_IN_BODY
+            and op
+            and op[-1].namespace == HTML_NS
+            and self.fragment_context is None
+        ):
+            # the common case, dispatched directly: in body with an
+            # HTML current node the foreign-content check is false and
+            # _h_in_body would route exactly this way
+            t = tok[0]
+            if t == "start":
+                h = _HOT_START.get(tok[1])
+                tok = h(self, tok) if h is not None else self._in_body_start(tok)
+            elif t == "end":
+                tok = self._in_body_end(tok)
+            else:
+                tok = self._h_in_body(tok)
+            if tok is None:
+                return
+            guard = 1
         dispatch = _MODE_DISPATCH
         while tok is not None:
             guard += 1
@@ -472,9 +493,18 @@ class TreeBuilder:
                 if prev.type == TEXT:
                     prev.contents += data
                     return
-            tnode = self._new_node(TEXT)
+            # _new_node + append_child inline (a new node has nothing
+            # to detach)
+            nid = self.next_id
+            if self.max_nodes is not None and nid >= self.max_nodes:
+                raise ParseBudgetExceeded(
+                    f"document exceeds {self.max_nodes} DOM nodes"
+                )
+            self.next_id = nid + 1
+            tnode = Node(nid, TEXT)
             tnode.contents = data
-            target.append_child(tnode)
+            tnode.parent = target
+            children.append(tnode)
             return
         parent, index = self._appropriate_place(override)
         prev = None
@@ -503,9 +533,33 @@ class TreeBuilder:
             raise ParseBudgetExceeded(
                 f"document exceeds max tree depth {self.max_depth}"
             )
-        el = self._create_element(tok[1], [list(a) for a in tok[2]], namespace)
+        name = tok[1]
+        if (
+            namespace == HTML_NS
+            and name != "template"
+            and not self.foster_parenting
+        ):
+            # _create_element + _new_node + append_child inline, on
+            # _appropriate_place's non-foster branch
+            nid = self.next_id
+            if self.max_nodes is not None and nid >= self.max_nodes:
+                raise ParseBudgetExceeded(
+                    f"document exceeds {self.max_nodes} DOM nodes"
+                )
+            self.next_id = nid + 1
+            el = Node(nid, ELEMENT)
+            el.name = name
+            attrs = tok[2]
+            el.attrs = [list(a) for a in attrs] if attrs else []
+            target = self.open[-1]
+            if target.name == "template" and target.namespace == HTML_NS:
+                target = target.template_contents
+            el.parent = target
+            target.children.append(el)
+            self.open.append(el)
+            return el
+        el = self._create_element(name, [list(a) for a in tok[2]], namespace)
         if not self.foster_parenting:
-            # fast path mirroring _appropriate_place's non-foster branch
             target = self.open[-1]
             if target.name == "template" and target.namespace == HTML_NS:
                 target = target.template_contents
@@ -581,14 +635,18 @@ class TreeBuilder:
     def _adoption_agency(self, tok):
         subject = tok[1]
         cur = self.open[-1] if self.open else None
-        if (
-            cur is not None
-            and cur.namespace == HTML_NS
-            and cur.name == subject
-            and self._afe_index_of(cur) is None
-        ):
-            self.open.pop()
-            return None
+        if cur is not None and cur.namespace == HTML_NS and cur.name == subject:
+            afe = self.afe
+            if afe and afe[-1] is not MARKER and afe[-1][0] is cur:
+                # the subject is the current node and the last formatting
+                # entry: no furthest block, so the loop below would pop
+                # it and drop its entry, after two scans
+                self.open.pop()
+                afe.pop()
+                return None
+            if self._afe_index_of(cur) is None:
+                self.open.pop()
+                return None
         for _ in range(8):
             fmt_idx = None
             for i in range(len(self.afe) - 1, -1, -1):
@@ -1391,6 +1449,15 @@ class TreeBuilder:
 
     def _in_body_end(self, tok):
         name = tok[1]
+        op = self.open
+        if name in _ONE_POP_END and op:
+            cur = op[-1]
+            if cur.name == name and cur.namespace == HTML_NS:
+                # closing the current node: the scope check holds, no end
+                # tag is implied above it and no parse error is counted,
+                # so the spec steps for these names reduce to one pop
+                op.pop()
+                return None
         h = _HOT_END.get(name)
         if h is not None:
             return h(self, tok)
@@ -2443,6 +2510,12 @@ for _t in ("div", "center", "blockquote", "section", "article", "aside",
            # name is one of …"); the START-tag sets deliberately differ
            "pre", "listing", "button"):
     _HOT_END[_t] = TreeBuilder._eb_block
+
+# end tags whose in-body steps are one pop when the current node is the
+# HTML element being closed (see _in_body_end)
+_ONE_POP_END = BLOCK_CLOSERS | HEADINGS | frozenset(
+    ("p", "li", "dd", "dt", "pre", "listing", "button", "span")
+)
 
 _MODE_DISPATCH = {
     M_INITIAL: TreeBuilder._h_initial,

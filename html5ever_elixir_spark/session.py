@@ -21,7 +21,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         n = cpus if cpus != "*" else "32"
