@@ -22,8 +22,12 @@ md5-hex based in BOTH engines so results are bit-identical.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import release_checkpoint
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -931,10 +935,13 @@ def lsh_connected_components(
     shingle: int = 5,
     max_iter: int = 10,
 ) -> DataFrame:
-    """Full connected components over the band-bucket graph via
-    alternating min-label propagation (the large-star/small-star style
-    loop; each round is two shuffles, convergence in O(log n) rounds for
-    real dup graphs). Output (doc_id, cluster_id).
+    """Full connected components over the band-bucket graph: min-label
+    propagation over the doc–bucket graph (:func:`_propagate_min_labels`;
+    each round is the bucket-min of member labels, then the doc-min of
+    bucket labels — two shuffles). Each round carries a label one
+    doc–doc hop, so it takes O(diameter) rounds: dup clusters are
+    near-cliques, and short edit chains (v1 → v2 → v3) converge in a
+    few rounds. Output (doc_id, cluster_id).
 
     Iterative, but ``max_iter`` is a compile-time constant, so the
     rounds unroll to chained CTEs for the DuckDB oracle
@@ -943,51 +950,40 @@ def lsh_connected_components(
     the fixed-depth unroll produce identical labels. Also pytest-gated
     against a brute-force union-find on small inputs. The result is
     materialized via ``localCheckpoint(eager=True)`` (truncated
-    lineage) so the loop's caches can be released immediately; the
-    checkpoint blocks themselves are reclaimed by Spark's
-    ContextCleaner once the returned frame is unreferenced — no manual
-    unpersist obligation on callers.
+    lineage) so the loop's frames can be released immediately; the
+    result's blocks are reclaimed by Spark's ContextCleaner once the
+    returned frame is unreferenced — no manual unpersist obligation on
+    callers.
 
     The banded membership is persisted for the loop (each round reads
     it twice; without a persist every round would recompute the MinHash
-    lineage from scratch), and each round's labels are persisted and the
-    previous round's dropped so the plan doesn't grow unboundedly."""
+    lineage from scratch)."""
     from pyspark.sql import Window
 
     banded = _lsh_banded(docs, text_col, id_col, k, bands, shingle)
     bucket_membership = banded.select(id_col, "band", "bh").persist()
-    # doc -> current label, seeded by the single-round bucket minimum
-    labels = (
-        bucket_membership.withColumn(
-            "_rep", F.min(id_col).over(Window.partitionBy("band", "bh"))
-        )
-        .groupBy(id_col)
-        .agg(F.min("_rep").alias("lbl"))
-        .persist()
-    )
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         # bucket label = min member label; doc label = min bucket label
         with_lbl = bucket_membership.join(labels, id_col)
         bucket_min = with_lbl.groupBy("band", "bh").agg(
             F.min("lbl").alias("blbl")
         )
-        new_labels = (
+        return (
             bucket_membership.join(bucket_min, ["band", "bh"])
             .groupBy(id_col)
             .agg(F.min("blbl").alias("lbl"))
-            .persist()
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), id_col)
-            .where(F.col("n.lbl") != F.col("o.lbl"))
-            .limit(1)
-            .count()
+
+    # doc -> current label, seeded by the single-round bucket minimum
+    seed = (
+        bucket_membership.withColumn(
+            "_rep", F.min(id_col).over(Window.partitionBy("band", "bh"))
         )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
+        .groupBy(id_col)
+        .agg(F.min("_rep").alias("lbl"))
+    )
+    labels = _propagate_min_labels(seed, step, id_col, max_iter)
     out = (
         docs.select(id_col)
         .join(labels, id_col, "left")
@@ -995,11 +991,10 @@ def lsh_connected_components(
             F.col(id_col),
             F.coalesce(F.col("lbl"), F.col(id_col)).alias("cluster_id"),
         )
+        .localCheckpoint(eager=True)
     )
-    # materialize with truncated lineage, then release the loop caches
-    out = out.localCheckpoint(eager=True)
     bucket_membership.unpersist()
-    labels.unpersist()
+    release_checkpoint(labels)
     return out
 
 
@@ -1861,11 +1856,43 @@ FROM w LEFT JOIN agg a USING (doc_id)
 
 
 # ---------------------------------------------------------------------------
-# generic connected components over an explicit pair list (neighbor-min
-# label propagation) — the cluster step shared by any candidate-pair
-# producer (image dHash, custom edge sources); text LSH and embedding
-# near-dup keep their fused builders (lsh_connected_components /
-# similarity.neardup_clusters) whose edge generation rides one lineage
+# connected components: one min-label propagation loop
+# (_propagate_min_labels); each operator passes its per-round step
+
+
+def _propagate_min_labels(
+    seed: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    id_col: str,
+    max_iter: int,
+) -> DataFrame:
+    """Min-label propagation from ``seed`` (``id_col``, ``lbl``):
+    ``labels = step(labels)`` until nothing changes or ``max_iter``
+    rounds have run. Returns the last round, an eager checkpoint the
+    caller releases (:func:`release_checkpoint`) once nothing reads it.
+
+    Each round is an eager ``localCheckpoint`` (a ``persist()`` barrier
+    keeps the lineage, so a step that reads the labels twice doubles
+    the plan every round), and the previous round is released after
+    the change check. Stopping only when nothing changed keeps the
+    unrolled-CTE oracles exact (the step is monotone and idempotent
+    after convergence). The check stays a ``count()`` action, which
+    perfbench counts as ``dedup.cc_rounds``."""
+    labels = seed.localCheckpoint(eager=True)
+    for _ in range(max_iter):
+        new = step(labels).localCheckpoint(eager=True)
+        changed = (
+            new.alias("n")
+            .join(labels.alias("o"), id_col)
+            .where(F.col("n.lbl") != F.col("o.lbl"))
+            .limit(1)
+            .count()
+        )
+        release_checkpoint(labels)
+        labels = new
+        if changed == 0:
+            break
+    return labels
 
 
 def cc_label_propagation(
@@ -1886,8 +1913,8 @@ def cc_label_propagation(
     fixed-depth unrolled CTE (:func:`oracle_cc_label_propagation_sql`)
     produces identical labels. Per round: one edge join + one group-by
     on uniform id keys — O(graph diameter) rounds, and dup clusters are
-    near-cliques (diameter 1-2). Labels persist round-over-round; the
-    result is localCheckpointed so loop caches release immediately."""
+    near-cliques (diameter 1-2). The result reads the last round's
+    checkpoint."""
     edges = (
         pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
         .union(
@@ -1895,8 +1922,8 @@ def cc_label_propagation(
         )
         .persist()
     )
-    labels = ids.select(F.col(id_col), F.col(id_col).alias("lbl")).persist()
-    for _ in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         nbr_min = (
             edges.join(
                 labels.select(F.col(id_col).alias("_d"), "lbl"),
@@ -1905,33 +1932,19 @@ def cc_label_propagation(
             .groupBy("s")
             .agg(F.min("lbl").alias("nlbl"))
         )
-        new_labels = (
-            labels.join(nbr_min, labels[id_col] == nbr_min["s"], "left")
-            .select(
-                F.col(id_col),
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .persist()
+        return labels.join(
+            nbr_min, labels[id_col] == nbr_min["s"], "left"
+        ).select(
+            F.col(id_col),
+            F.least(
+                F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
+            ).alias("lbl"),
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), id_col)
-            .where(F.col("n.lbl") != F.col("o.lbl"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    out = labels.select(
-        F.col(id_col), F.col("lbl").alias("cluster_id")
-    ).localCheckpoint(eager=True)
+
+    seed = ids.select(F.col(id_col), F.col(id_col).alias("lbl"))
+    labels = _propagate_min_labels(seed, step, id_col, max_iter)
     edges.unpersist()
-    labels.unpersist()
-    return out
+    return labels.select(F.col(id_col), F.col("lbl").alias("cluster_id"))
 
 
 def oracle_cc_label_propagation_sql(

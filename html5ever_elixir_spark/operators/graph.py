@@ -34,6 +34,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from . import release_checkpoint
+
 __all__ = [
     "link_edges",
     "pagerank",
@@ -140,7 +142,6 @@ def pagerank(
     iters: int = 3,
     scale: int = 10**9,
     damping_pct: int = 85,
-    materialize: bool = True,
 ) -> DataFrame:
     """Fixed-point integer PageRank with dangling-mass redistribution.
 
@@ -167,9 +168,8 @@ def pagerank(
     plain aggregation hot key — partial aggregation + AQE handle it;
     there is no window or collect over the hot key.
 
-    ``materialize`` (default True — the 100 TB path): each round's
-    ranks are **eagerly localCheckpointed** (the text_bpe_train
-    per-round barrier). A fully lazy chain (``materialize=False``)
+    Each round's ranks are **eagerly localCheckpointed** (the
+    text_bpe_train per-round barrier). A fully lazy chain
     references round i-1 from BOTH the contribution join and the
     dangling-mass aggregate, so the logical plan re-derives it ~3× per
     round (3^iters growth — 158 exchange nodes at iters=3, measured);
@@ -182,9 +182,9 @@ def pagerank(
     driver time per action at iters=3 vs 0.2 s of execution; iters is
     a parameter, and the analysis cost was exponential in it). The
     eager localCheckpoint truncates the logical plan to a LogicalRDD:
-    constant per-round analysis, same bigint values. Each round's
-    checkpoint holds MEMORY_AND_DISK storage for the session (iters ×
-    one (node, rank) table — disk-backed, never an OOM).
+    constant per-round analysis, same bigint values. Round i-1's
+    checkpoint is released once round i's is materialized, so only
+    the returned round holds storage.
     """
     outdeg = edges.groupBy("src").agg(F.count("*").cast("bigint").alias("od"))
     edges_w = edges.join(outdeg, "src")
@@ -199,7 +199,7 @@ def pagerank(
     ranks = nodes.select(
         "node", F.lit(scale).cast("bigint").alias("rank")
     )
-    for _ in range(iters):
+    for i in range(iters):
         contribs = edges_w.join(
             ranks, edges_w["src"] == ranks["node"]
         ).select(
@@ -218,7 +218,9 @@ def pagerank(
             .withColumn("ck", F.lit(1))
         )
         scalars = n_df.join(F.broadcast(dang), "ck")
-        ranks = (
+        # per-round barrier: truncate the logical plan (see docstring —
+        # persist+count kept the exponential lineage)
+        new = (
             nodes.withColumn("ck", F.lit(1))
             .join(F.broadcast(scalars), "ck")
             .join(inflow, "node", "left")
@@ -229,11 +231,11 @@ def pagerank(
                     " + dang div n)) div 100 as bigint)"
                 ).alias("rank"),
             )
+            .localCheckpoint(eager=True)
         )
-        if materialize:
-            # per-round barrier: truncate the logical plan (see
-            # docstring — persist+count kept the exponential lineage)
-            ranks = ranks.localCheckpoint(eager=True)
+        if i:
+            release_checkpoint(ranks)
+        ranks = new
     return ranks
 
 

@@ -378,50 +378,12 @@ def neardup_clusters(
     (oracle_neardup_clusters_sql) produces identical labels. Edges
     shuffle on uniform vector ids; per-round cost is one edge join +
     one group-by — O(diameter) rounds, and real near-dup graphs are
-    tiny diameter (dup sets are near-cliques)."""
+    tiny diameter (dup sets are near-cliques). The loop is
+    :func:`dedup.cc_label_propagation` over those pairs."""
+    from .dedup import cc_label_propagation
+
     pairs = neardup_pairs(emb, threshold, id_col, vec_col, block_col, max_block)
-    edges = (
-        pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
-        .union(pairs.select(F.col("id_b").alias("s"), F.col("id_a").alias("d")))
-        .persist()
-    )
-    labels = emb.select(F.col(id_col), F.col(id_col).alias("lbl")).persist()
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(
-                labels.select(F.col(id_col).alias("_d"), "lbl"),
-                F.col("d") == F.col("_d"),
-            )
-            .groupBy("s")
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels[id_col] == nbr_min["s"], "left")
-            .select(
-                F.col(id_col),
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
-                ).alias("lbl"),
-            )
-            .persist()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), id_col)
-            .where(F.col("n.lbl") != F.col("o.lbl"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-    out = labels.select(
-        F.col(id_col), F.col("lbl").alias("cluster_id")
-    ).localCheckpoint(eager=True)
-    edges.unpersist()
-    labels.unpersist()
-    return out
+    return cc_label_propagation(emb.select(id_col), pairs, id_col, max_iter)
 
 
 def oracle_neardup_clusters_sql(

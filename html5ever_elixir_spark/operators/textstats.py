@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import release_checkpoint
+
 # small deterministic stopword marker lists (heuristic language-ID)
 LANG_MARKERS = {
     "en": ["the", "and", "of", "to", "in", "is", "with", "for"],
@@ -949,7 +951,6 @@ def lm_buckets(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_range_parts: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """CCNet's head/middle/tail split: bucket the LM quality score into
     ``n_buckets`` PER ``part_col`` group (bucket 1 = head = most
@@ -978,9 +979,9 @@ def lm_buckets(
        buckets get ⌈n/b⌉ rows, the rest ⌊n/b⌋) — all integer
        arithmetic, so it matches DuckDB's ntile bit-for-bit.
 
-    Not lazy: with ``materialize=True`` (the default) construction runs
-    one eager Spark job, the ``localCheckpoint`` of the scored,
-    range-partitioned rows, before the frame is returned."""
+    Not lazy: construction runs one eager Spark job, the
+    ``localCheckpoint`` of the scored, range-partitioned rows, before
+    the frame is returned."""
     from pyspark.sql import Window
 
     scored = lm_score(docs, ref, text_col, id_col)
@@ -1000,10 +1001,8 @@ def lm_buckets(
     # and the two computations' spark_partition_id/rank assignments are
     # only consistent because the range partitioner is deterministic;
     # the eager checkpoint makes them consistent BY CONSTRUCTION and
-    # runs the scoring once. Values unchanged; ``materialize=False``
-    # keeps the fully lazy plan (plan-shape tests read it there).
-    if materialize:
-        local = local.localCheckpoint(eager=True)
+    # runs the scoring once. Values unchanged.
+    local = local.localCheckpoint(eager=True)
     # tiny manifest: rows per (range partition, part) → per-part offset
     # of each partition (exclusive prefix sum over pid) + per-part total
     counts = local.groupBy("_pid", part_col).agg(
@@ -1217,10 +1216,11 @@ def bpe_train(
     O(vocab²) — tiny vs the corpus) + a 1-row top-1 + a row-local
     ``replace()`` update; the segmentation is localCheckpointed per
     round (the PageRank barrier — otherwise round i's lazy plan
-    re-derives round i-1 twice, 2^n growth). ``train_frac`` gates
-    training on the deterministic md5 hash-sample (the IVF recipe —
-    industrial BPE trainers sample exactly this way); the oracle
-    mirrors the gate."""
+    re-derives round i-1 twice, 2^n growth), and each corpus-sized
+    segmentation is released once the next one is materialized.
+    ``train_frac`` gates training on the deterministic md5 hash-sample
+    (the IVF recipe — industrial BPE trainers sample exactly this way);
+    the oracle mirrors the gate."""
     from .sampling import _uniform_expr
 
     san = _bpe_sanitize(text_col, "spark")
@@ -1263,7 +1263,7 @@ def bpe_train(
             )
         )
         if i < n_merges:
-            seg = (
+            new = (
                 seg.crossJoin(F.broadcast(m))
                 .select(
                     "doc_id",
@@ -1274,6 +1274,10 @@ def bpe_train(
                 )
                 .localCheckpoint(eager=True)
             )
+            release_checkpoint(seg)
+            seg = new
+    # the merges read only their 1-row checkpoints, never the corpus
+    release_checkpoint(seg)
     out = merges[0]
     for m in merges[1:]:
         out = out.unionByName(m)

@@ -125,12 +125,12 @@ def test_pagerank_partitioning_invariant(spark):
         assert got == ref, f"parallelism changed ranks at P={parts}"
 
 
-def test_pagerank_plan_scale_shape(spark):
+def test_pagerank_plan_scale_shape(spark, checkpoint_plans):
     # agg state must be scalar (no per-dst member lists) and the scalar
     # attachments must be broadcast constant-key joins, not cartesians
     nodes = spark.range(100).selectExpr("id AS node")
     edges = spark.range(99).selectExpr("id AS src", "id + 1 AS dst")
-    df = pagerank(edges, nodes, iters=2)
+    df, round_plans = checkpoint_plans(lambda: pagerank(edges, nodes, iters=2))
     df.collect()
     # r9 barrier: the returned frame IS the final round's eager
     # localCheckpoint — a truncated LogicalRDD scan, so every later
@@ -138,22 +138,17 @@ def test_pagerank_plan_scale_shape(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Scan ExistingRDD" in plan
     assert "collect_list" not in plan and "CartesianProduct" not in plan
-    # the round pipeline's join/agg shape is only visible in the lazy
-    # build (the checkpointed plan truncates it away): agg state must
-    # be scalar (no per-dst member lists), scalar (n, dangling-mass)
-    # attaches fold to BroadcastNestedLoopJoin — acceptable ONLY
-    # because every BNLJ build side here is a broadcast 1-row aggregate
-    # (the repo's IVF constant-key pattern); the corpus-side joins must
-    # all be hash joins
-    lazy_df = pagerank(edges, nodes, iters=2, materialize=False)
-    lplan = lazy_df._jdf.queryExecution().executedPlan().toString()
-    assert "collect_list" not in lplan
-    assert "CartesianProduct" not in lplan
-    assert "BroadcastHashJoin" in lplan or "SortMergeJoin" in lplan
-    # lazy mode produces identical values (bigint determinism), just a
-    # bigger plan
-    lazy = {r.node: r.rank for r in lazy_df.collect()}
-    assert lazy == {r.node: r.rank for r in df.collect()}
+    # the round pipeline's join/agg shape is in the plans of the rounds'
+    # checkpoint jobs: agg state must be scalar (no per-dst member
+    # lists), scalar (n, dangling-mass) attaches fold to
+    # BroadcastNestedLoopJoin — acceptable ONLY because every BNLJ build
+    # side here is a broadcast 1-row aggregate (the repo's IVF
+    # constant-key pattern); the corpus-side joins must all be hash joins
+    assert len(round_plans) == 2
+    for lplan in round_plans:
+        assert "collect_list" not in lplan
+        assert "CartesianProduct" not in lplan
+        assert "BroadcastHashJoin" in lplan or "SortMergeJoin" in lplan
 
 
 def test_paragraph_dedup_first_occurrence(spark):

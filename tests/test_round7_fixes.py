@@ -61,15 +61,17 @@ def _lm_inputs(spark):
     return docs.where("doc_id % 10 <> 0"), docs.where("doc_id % 10 = 0")
 
 
-def test_lm_buckets_no_skewed_lang_window(spark):
+def test_lm_buckets_no_skewed_lang_window(spark, checkpoint_plans):
     from html5ever_elixir_spark.operators.textstats import lm_buckets
 
     d, r = _lm_inputs(spark)
-    # materialize=False: the r9 checkpoint barrier truncates the final
-    # plan to a LogicalRDD scan; the two-pass shape under test is the
-    # lazy build (values identical — asserted by the parity test below)
-    out = lm_buckets(d, r, materialize=False)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    # the r9 checkpoint barrier truncates the returned frame's plan to a
+    # LogicalRDD scan; the two-pass shape under test is in the plan of
+    # the eager checkpoint job (values: the parity test below)
+    out, (ck_plan,) = checkpoint_plans(lambda: lm_buckets(d, r))
+    plan = "\n".join(
+        [ck_plan, out._jdf.queryExecution().optimizedPlan().toString()]
+    )
     # no Window whose partition spec is the bare lang column over corpus
     # rows: every corpus-scale window key includes the range-partition id
     for line in plan.splitlines():
@@ -77,8 +79,10 @@ def test_lm_buckets_no_skewed_lang_window(spark):
             raise AssertionError(f"ntile survived the rewrite: {line}")
         if "row_number" in line and "windowspecdefinition" in line:
             assert "_pid" in line, f"corpus window keyed on lang only: {line}"
-    # the two-pass plan range-partitions on (lang, score, id)
-    assert "REPARTITION_BY_RANGE" in plan or "RepartitionByExpression" in plan
+    # the two-pass plan range-partitions on (lang, score, id) and ranks
+    # within (range partition, lang)
+    assert "rangepartitioning(lang" in ck_plan
+    assert "row_number() windowspecdefinition(_pid" in ck_plan
 
 
 def test_lm_buckets_matches_ntile_exactly(spark):
