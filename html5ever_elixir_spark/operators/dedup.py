@@ -8,9 +8,11 @@ Python in the hot path):
 * exact dedup        — md5 hash group-by (one shuffle on the hash)
 * MinHash signatures — row-local higher-order exprs (no shuffle, no
   explode); k minimums over word-shingle md5 hashes
-* LSH candidate pairs— band → bucket-join (the one necessary shuffle;
-  at 100 TB this is the canonical distributed MinHash-LSH layout,
-  band key is uniformly distributed by construction so no skew)
+* LSH candidate pairs— band → in-bucket pairs (the one necessary
+  shuffle; at 100 TB this is the canonical distributed MinHash-LSH
+  layout, band key is uniformly distributed by construction so no
+  skew). Every bucketed pair operator (LSH, MinHash estimate, SimHash
+  and 64-bit Hamming) generates its pairs in ``_bucket_pairs``
 * SimHash            — row-local 32-bit fingerprint via per-bit
   majority over word hashes (higher-order filter, no explode)
 * n-gram Jaccard     — exact pairwise similarity over candidate pairs
@@ -639,6 +641,65 @@ def _lsh_banded(
     return exploded.select(*cols)
 
 
+def _bucket_pairs(
+    rows: DataFrame,
+    bucket: list[str],
+    member: dict[str, str],
+    fields: str = "",
+    keep: str | None = None,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
+) -> DataFrame:
+    """The one in-bucket pair generator behind every bucketed pair
+    operator. ``rows`` has one row per (item, bucket); ``bucket`` names
+    the bucket-key columns. ``member`` maps struct field → column with
+    the id field ``i`` FIRST, so each sorted member list is in id order
+    and every pair has ``id_a < id_b``. ``fields`` adds
+    ``named_struct`` fields (``'name', expr`` over members ``x``, ``y``)
+    after ``id_a``, ``id_b``; ``keep`` is a predicate over the pair
+    ``p``. Output: ``id_a``, ``id_b`` and the ``fields``, distinct.
+
+    Buckets of more than ``max_bucket`` rows emit no pairs: they are
+    (near-)identical clusters whose B²/2 edges carry nothing a pairwise
+    verify could use (:func:`lsh_clusters` labels them in O(B)). The
+    size is a ``count(*)`` window over the bucket, which streams (and
+    spills) a mega-bucket instead of collecting it, and the groupBy
+    reuses its hashpartitioning: one exchange for the bucketing, one
+    for the final ``distinct``, and no join (a bucket self-join's
+    second leg is broadcast and re-runs the whole upstream lineage). A
+    row with a null id counts toward its bucket's size but never pairs
+    — exactly the oracles' ``small`` CTE and ``a.doc_id < b.doc_id``."""
+    if not isinstance(max_bucket, int) or max_bucket < 1:
+        raise ValueError(
+            f"max_bucket must be a positive int, got {max_bucket!r}"
+        )
+    from pyspark.sql import Window
+
+    capped = rows.withColumn(
+        "_bsz", F.count("*").over(Window.partitionBy(*bucket))
+    ).where(F.col("_bsz") <= max_bucket)
+    m = F.struct(*[F.col(c).alias(f) for f, c in member.items()])
+    grp = capped.groupBy(*bucket).agg(
+        F.sort_array(
+            F.collect_list(F.when(F.col(member["i"]).isNotNull(), m))
+        ).alias("_m")
+    )
+    pairs = (
+        "transform(slice(_m, i + 2, size(_m)), y -> "
+        f"named_struct('id_a', x.i, 'id_b', y.i{', ' if fields else ''}"
+        f"{fields}))"
+    )
+    if keep is not None:
+        pairs = f"filter({pairs}, p -> {keep})"
+    return (
+        grp.select(
+            F.explode(F.expr(f"flatten(transform(_m, (x, i) -> {pairs}))"))
+            .alias("p")
+        )
+        .select("p.*")
+        .distinct()
+    )
+
+
 def lsh_candidate_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -646,49 +707,16 @@ def lsh_candidate_pairs(
     k: int = 16,
     bands: int = 4,
     shingle: int = 5,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates: docs sharing any band of r=k/bands
     consecutive signature entries. Output (id_a, id_b) with id_a < id_b,
-    distinct. The band bucket join is the single shuffle.
-
-    Buckets larger than ``max_bucket`` are skipped (no pairs emitted):
-    such buckets are (near-)identical clusters whose B²/2 pairwise edges
-    are redundant — :func:`lsh_clusters` labels them in O(B). The size
-    pre-count is a window over (band, bh) that streams (and spills)
-    mega-buckets instead of materializing them. Pass ``max_bucket=None``
-    for uncapped.
-
-    r9 plan shape: pairs are generated IN-BUCKET from a sorted
-    ``collect_list`` of member ids (bounded ≤ max_bucket by the window
-    pre-filter) instead of the former (band, bh) self-join — the
-    groupBy reuses the window's hashpartitioning (no second exchange),
-    and the join's second leg (which AQE planned as a BroadcastExchange
-    re-running the whole MinHash lineage — a second Python stage) is
-    gone. One exchange for the bucketing, one for the final distinct;
-    identical output (sorted ids ⇒ id_a < id_b, same pair set)."""
-    from pyspark.sql import Window
-
+    distinct. The (band, bh) bucketing is the single shuffle; pairs
+    come from :func:`_bucket_pairs`, so band buckets larger than
+    ``max_bucket`` emit none."""
     banded = _lsh_banded(docs, text_col, id_col, k, bands, shingle)
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "bh")
-        banded = (
-            banded.withColumn("_bsz", F.count("*").over(w))
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-    grp = banded.groupBy("band", "bh").agg(
-        F.sort_array(F.collect_list(F.col(id_col))).alias("_ids")
-    )
-    pair_expr = (
-        "flatten(transform(_ids, (x, i) -> "
-        "transform(slice(_ids, i + 2, size(_ids)), y -> "
-        "named_struct('id_a', x, 'id_b', y))))"
-    )
-    return (
-        grp.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .distinct()
+    return _bucket_pairs(
+        banded, ["band", "bh"], {"i": id_col}, max_bucket=max_bucket
     )
 
 
@@ -699,7 +727,7 @@ def minhash_jaccard_estimate(
     k: int = 16,
     bands: int = 4,
     shingle: int = 5,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """MinHash Jaccard estimator over the LSH candidate pairs: the
     fraction of agreeing signature components (the standard unbiased
@@ -710,47 +738,23 @@ def minhash_jaccard_estimate(
     candidates and run the exact verify only above a threshold.
     Output (id_a, id_b, jaccard_est).
 
-    Plan shape (r9): the signatures ride THROUGH the banding
-    (keep_sig) into a sorted in-bucket ``collect_list`` of
-    (id, sig) members — bounded ≤ max_bucket by the streaming window
-    pre-filter on the SAME exchange — and pairs + estimates are
-    generated row-locally, exactly like :func:`lsh_candidate_pairs`.
-    The former (band, bh) self-join (whose second leg AQE broadcast,
-    re-running the whole MinHash lineage) is gone; the naive
-    pairs ⋈ sigs ⋈ sigs formulation planned as 4 scans + 3 joins."""
-    from pyspark.sql import Window
-
+    Plan shape: the signatures ride THROUGH the banding (keep_sig)
+    into the (id, sig) bucket members of :func:`_bucket_pairs`, and the
+    estimates are computed row-locally per pair — no pairs ⋈ sigs ⋈
+    sigs join (which planned as 4 scans + 3 joins)."""
     banded = _lsh_banded(
         docs, text_col, id_col, k, bands, shingle, keep_sig=True
-    )
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "bh")
-        banded = (
-            banded.withColumn("_bsz", F.count("*").over(w))
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-    grp = banded.groupBy("band", "bh").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(F.col(id_col).alias("i"), F.col("sig").alias("s"))
-            )
-        ).alias("_m")
     )
     matches = (
         "aggregate(zip_with(x.s, y.s, (u, v) -> if(u <=> v, 1, 0)), "
         "0, (acc, w) -> acc + w)"
     )
-    pair_expr = (
-        "flatten(transform(_m, (x, i) -> "
-        "transform(slice(_m, i + 2, size(_m)), y -> "
-        "named_struct('id_a', x.i, 'id_b', y.i, "
-        f"'jaccard_est', round(cast({matches} as double) / {k}, 6)))))"
-    )
-    return (
-        grp.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.id_a", "p.id_b", "p.jaccard_est")
-        .distinct()
+    return _bucket_pairs(
+        banded,
+        ["band", "bh"],
+        {"i": id_col, "s": "sig"},
+        fields=f"'jaccard_est', round(cast({matches} as double) / {k}, 6)",
+        max_bucket=max_bucket,
     )
 
 
@@ -1258,84 +1262,20 @@ def oracle_simhash64_sql(table: str = "documents") -> str:
     )
 
 
-# the four 16-bit chunks of (hi, lo); Hamming distance <= 3 guarantees
-# at least one chunk is bit-identical (pigeonhole over 4 chunks)
-_CHUNK_EXPRS = (
-    "shiftright(simhash_hi, 16) & 65535",
-    "simhash_hi & 65535",
-    "shiftright(simhash_lo, 16) & 65535",
-    "simhash_lo & 65535",
-)
-
-
 def simhash_pairs(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Near-dup candidates by 64-bit SimHash Hamming distance:
-    bucket on each of the four 16-bit chunks (any Hamming-≤3 pair
-    shares a chunk), join in-bucket only, verify exact distance with
-    bit_count(xor). Oversized chunk buckets (identical/boilerplate
-    clusters) are skipped like lsh_candidate_pairs — route those
-    through exact_dedup / lsh_clusters. Output (id_a, id_b, hamming).
-
-    Recall contract: the pigeonhole guarantee (every qualifying pair
-    shares a chunk) holds only for ``max_hamming <= 3``. Larger
-    thresholds are CANDIDATE GENERATION — pairs whose differing bits
-    touch all four chunks are missed, like any LSH scheme."""
-    sh = simhash64(docs, text_col, id_col)
-    chunked = sh.select(
-        F.col(id_col),
-        "simhash_hi",
-        "simhash_lo",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("chunk"), F.expr(e).alias("cv")
-                )
-                for i, e in enumerate(_CHUNK_EXPRS)
-            ])
-        ).alias("cc"),
-    ).select(id_col, "simhash_hi", "simhash_lo", "cc.chunk", "cc.cv")
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        chunked = (
-            chunked.withColumn(
-                "_bsz",
-                F.count("*").over(Window.partitionBy("chunk", "cv")),
-            )
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-    grp = chunked.groupBy("chunk", "cv").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).alias("i"),
-                    F.col("simhash_hi").alias("h"),
-                    F.col("simhash_lo").alias("l"),
-                )
-            )
-        ).alias("_m")
-    )
-    # r9: in-bucket pair generation (see hamming_pairs_64) — the former
-    # (chunk, cv) self-join re-ran the SimHash lineage on its broadcast
-    # leg; identical pair set, distances, and cap semantics.
-    ham = "cast(bit_count(x.h ^ y.h) + bit_count(x.l ^ y.l) as bigint)"
-    pair_expr = (
-        "flatten(transform(_m, (x, i) -> "
-        f"filter(transform(slice(_m, i + 2, size(_m)), y -> "
-        f"named_struct('id_a', x.i, 'id_b', y.i, 'hamming', {ham})), "
-        f"p -> p.hamming <= {max_hamming})))"
-    )
-    return (
-        grp.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.id_a", "p.id_b", "p.hamming")
-        .distinct()
+    :func:`hamming_pairs_64` over :func:`simhash64`. Output
+    (id_a, id_b, hamming); see there for the recall contract and the
+    bucket cap."""
+    return hamming_pairs_64(
+        simhash64(docs, text_col, id_col), id_col, "simhash_hi",
+        "simhash_lo", max_hamming, max_bucket,
     )
 
 
@@ -1388,23 +1328,22 @@ def hamming_pairs_64(
     hi_col: str = "hash_hi",
     lo_col: str = "hash_lo",
     max_hamming: int = 3,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Near-dup candidate pairs over ANY 64-bit fingerprint stored as
     two non-negative 32-bit halves (the repo's sign-safe convention,
     see :func:`simhash64`): bucket on each of the four 16-bit chunks
-    (pigeonhole — any Hamming-<=3 pair shares one), join in-bucket
-    only, verify exact distance with bit_count(xor). Oversized buckets
-    (identical-fingerprint clusters) are skipped like
-    :func:`lsh_candidate_pairs`; route those through exact dedup.
+    (pigeonhole — any Hamming-<=3 pair shares one), generate pairs
+    in-bucket with :func:`_bucket_pairs` over (id, hi, lo) members,
+    and keep those whose exact distance, bit_count(xor), is at most
+    ``max_hamming``. Chunk buckets over ``max_bucket`` (identical-
+    fingerprint clusters) emit no pairs; route those through exact
+    dedup. Output (id_a, id_b, hamming).
 
-    The same 100 TB plan as :func:`simhash_pairs` — bucketed, never an
-    all-pairs product. r9: pairs + distances are generated IN-BUCKET
-    from a sorted ``collect_list`` of (id, hi, lo) members (bounded
-    ≤ max_bucket by the streaming window pre-filter on the SAME
-    exchange) instead of the former self-join, whose second leg AQE
-    planned as a BroadcastExchange re-running the upstream lineage.
-    Output (id_a, id_b, hamming) — identical pair set and distances."""
+    Recall contract: the pigeonhole guarantee (every qualifying pair
+    shares a chunk) holds only for ``max_hamming <= 3``. Larger
+    thresholds are CANDIDATE GENERATION — pairs whose differing bits
+    touch all four chunks are missed, like any LSH scheme."""
     chunk_exprs = (
         f"shiftright({hi_col}, 16) & 65535",
         f"{hi_col} & 65535",
@@ -1422,40 +1361,14 @@ def hamming_pairs_64(
             ])
         ).alias("cc"),
     ).select(id_col, hi_col, lo_col, "cc.chunk", "cc.cv")
-    if max_bucket is not None:
-        from pyspark.sql import Window
-
-        chunked = (
-            chunked.withColumn(
-                "_bsz", F.count("*").over(Window.partitionBy("chunk", "cv"))
-            )
-            .where(F.col("_bsz") <= max_bucket)
-            .drop("_bsz")
-        )
-    grp = chunked.groupBy("chunk", "cv").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col(id_col).alias("i"),
-                    F.col(hi_col).alias("h"),
-                    F.col(lo_col).alias("l"),
-                )
-            )
-        ).alias("_m")
-    )
-    ham = (
-        "cast(bit_count(x.h ^ y.h) + bit_count(x.l ^ y.l) as bigint)"
-    )
-    pair_expr = (
-        "flatten(transform(_m, (x, i) -> "
-        f"filter(transform(slice(_m, i + 2, size(_m)), y -> "
-        f"named_struct('id_a', x.i, 'id_b', y.i, 'hamming', {ham})), "
-        f"p -> p.hamming <= {max_hamming})))"
-    )
-    return (
-        grp.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.id_a", "p.id_b", "p.hamming")
-        .distinct()
+    ham = "cast(bit_count(x.h ^ y.h) + bit_count(x.l ^ y.l) as bigint)"
+    return _bucket_pairs(
+        chunked,
+        ["chunk", "cv"],
+        {"i": id_col, "h": hi_col, "l": lo_col},
+        fields=f"'hamming', {ham}",
+        keep=f"p.hamming <= {max_hamming}",
+        max_bucket=max_bucket,
     )
 
 

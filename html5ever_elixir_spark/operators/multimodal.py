@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import DEFAULT_MAX_BUCKET
+
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, payload binary, "
     "meta struct<width:int, height:int, mime:string>"
@@ -2604,14 +2606,14 @@ def image_dhash(
 def image_dhash_pairs(
     media: DataFrame,
     max_hamming: int = 3,
-    max_bucket: int | None = None,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
     grid_w: int = 8,
     grid_h: int = 8,
 ) -> DataFrame:
     """Image near-dup candidate pairs: real decode -> dHash -> the
     shared 16-bit-chunk pigeonhole bucketing (dedup.hamming_pairs_64 —
-    bucketed equi-join, never all-pairs; oversized identical-hash
-    buckets are capped). Output (id_a, id_b, hamming).
+    in-bucket pairs, never all-pairs; identical-hash buckets over
+    ``max_bucket`` emit none). Output (id_a, id_b, hamming).
 
     r9: ``hamming_pairs_64`` generates pairs in-bucket from ONE
     lineage (no self-join), so the hash table has a single consumer
@@ -2621,7 +2623,7 @@ def image_dhash_pairs(
     exactly once, inline, and the extra materialization job is gone.
     Plan-asserted in
     tests/test_dhash.py::test_dhash_pairs_plan_single_parse_stage."""
-    from .dedup import DEFAULT_MAX_BUCKET, hamming_pairs_64
+    from .dedup import hamming_pairs_64
 
     hashes = image_dhash(media, grid_w, grid_h).where(
         "decode_error IS NULL"
@@ -2632,7 +2634,7 @@ def image_dhash_pairs(
         hi_col="dhash_hi",
         lo_col="dhash_lo",
         max_hamming=max_hamming,
-        max_bucket=DEFAULT_MAX_BUCKET if max_bucket is None else max_bucket,
+        max_bucket=max_bucket,
     )
 
 
@@ -2739,7 +2741,7 @@ FROM (
 def image_dhash_clusters(
     media: DataFrame,
     max_hamming: int = 3,
-    max_bucket: int | None = None,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
     max_iter: int = 4,
     grid_w: int = 8,
     grid_h: int = 8,
@@ -2751,11 +2753,7 @@ def image_dhash_clusters(
     decodable image (pairless images label themselves). Output
     (media_id, cluster_id) — pick min-id (== cluster_id) or best-
     resolution per cluster as the keeper downstream."""
-    from .dedup import (
-        DEFAULT_MAX_BUCKET,
-        cc_label_propagation,
-        hamming_pairs_64,
-    )
+    from .dedup import cc_label_propagation, hamming_pairs_64
 
     hashes = (
         image_dhash(media, grid_w, grid_h)
@@ -2768,7 +2766,7 @@ def image_dhash_clusters(
         hi_col="dhash_hi",
         lo_col="dhash_lo",
         max_hamming=max_hamming,
-        max_bucket=DEFAULT_MAX_BUCKET if max_bucket is None else max_bucket,
+        max_bucket=max_bucket,
     )
     return cc_label_propagation(
         hashes.select("media_id"), pairs, id_col="media_id",

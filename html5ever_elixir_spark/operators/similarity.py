@@ -306,9 +306,14 @@ def neardup_pairs(
     uncapped pairwise generator — a hot block was an unbounded quadratic
     self-join). The size pre-count is a ``count() OVER (block)`` window
     on the SAME key the self-join shuffles on, so the second join side
-    is a ReusedExchange, not a recompute — the identical pattern to
-    ``dedup.lsh_candidate_pairs``. For corpora where one natural block
-    dominates, compose :func:`srp_bucket_ann`'s bucket string as
+    is a ReusedExchange, not a recompute. In the ``dedup`` pair
+    operators an item sits in several buckets, so they collect each
+    bucket's members and ``distinct`` the pairs
+    (``dedup._bucket_pairs``); here each row has ONE block, so this
+    stays a self-join — an uncapped block streams through the join
+    instead of collecting into one row, and no ``distinct`` exchange
+    is needed. For corpora where one natural block dominates,
+    compose :func:`srp_bucket_ann`'s bucket string as
     ``block_col`` so block size is bounded by construction (2^n_planes
     buckets of ~n/2^n_planes). Pass ``max_block=None`` for uncapped."""
     blocked = emb.select(
@@ -463,6 +468,22 @@ def _round_like_spark(x: float, scale: int) -> float:
     return 0.0 if r == 0.0 else r
 
 
+def _nearest(vec, clist, round6):
+    """The Lloyd argmin over ``clist`` = [(cid, centroid)] sorted by
+    cid: the cid with the least 6dp-rounded left-fold squared L2 to
+    ``vec``, ties to the lower cid — the SQL build's assignment."""
+    best = None
+    for cid, c in clist:
+        acc = 0.0
+        for xi, ci in zip(vec, c):
+            d = xi - ci
+            acc += d * d
+        key = (round6(acc), cid)
+        if best is None or key < best[0]:
+            best = (key, cid)
+    return best[1]
+
+
 def _lloyd_rounds_local(members, seeds, iters, round6, round9):
     """Shared fixed-iteration Lloyd kernel over IN-MEMORY rows:
     ``members`` = [(sort_key, vec)] pre-sorted ascending, ``seeds`` =
@@ -480,16 +501,7 @@ def _lloyd_rounds_local(members, seeds, iters, round6, round9):
         groups: dict = {}
         clist = sorted(cents.items())
         for _, vec in members:
-            best = None
-            for cid, c in clist:
-                acc = 0.0
-                for xi, ci in zip(vec, c):
-                    d = xi - ci
-                    acc += d * d
-                key = (round6(acc), cid)
-                if best is None or key < best[0]:
-                    best = (key, cid)
-            groups.setdefault(best[1], []).append(vec)
+            groups.setdefault(_nearest(vec, clist, round6), []).append(vec)
         cents = {}
         for cid, vs in groups.items():
             n = len(vs)
@@ -605,6 +617,32 @@ def _assign_by_cents(v: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
+def _probe_cells(
+    v: DataFrame, cents: DataFrame, n_queries: int, nprobe: int
+) -> DataFrame:
+    """(query_id, qv, cell): the queries (vec_id < ``n_queries``) and
+    their ``nprobe`` nearest cells — the broadcast k-row centroid table,
+    6dp-rounded L2 with cid tie-break. Shared by :func:`ann_ivf_topk`
+    and :func:`ivf_pq_topk`."""
+    queries = v.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    qd = (
+        queries.withColumn("_j", F.lit(1))
+        .join(F.broadcast(cents.withColumn("_j", F.lit(1))), "_j")
+        .select(
+            "query_id", "qv", "cid",
+            F.expr(_L2.replace("v, c", "qv, c")).alias("dist"),
+        )
+    )
+    wq = Window.partitionBy("query_id").orderBy("dist", "cid")
+    return (
+        qd.withColumn("rn", F.row_number().over(wq))
+        .where(F.col("rn") <= nprobe)
+        .select("query_id", "qv", F.col("cid").alias("cell"))
+    )
+
+
 def ann_ivf_topk(
     emb: DataFrame,
     n_queries: int = 10,
@@ -628,7 +666,7 @@ def ann_ivf_topk(
     Not lazy: construction runs one eager Spark job, the centroid
     ``localCheckpoint`` (the Lloyd kernel and its sample scan), before
     the frame is returned."""
-    assignment, cents = ivf_assign(
+    _, cents = ivf_assign(
         emb, k_cells, iters, id_col, vec_col, train_frac, train_salt
     )
     # cents has TWO consumers (the query-probe broadcast and the
@@ -637,25 +675,9 @@ def ann_ivf_topk(
     # consumer (plan showed the MapInPandas subtree twice). k rows;
     # materialize once (the multi-consumer lineage invariant).
     cents = cents.localCheckpoint(eager=True)
-    assignment = _assign_by_cents(_ivf_vectors(emb, id_col, vec_col), cents)
     v = _ivf_vectors(emb, id_col, vec_col)
-    queries = v.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    qd = (
-        queries.withColumn("_j", F.lit(1))
-        .join(F.broadcast(cents.withColumn("_j", F.lit(1))), "_j")
-        .select(
-            "query_id", "qv", "cid",
-            F.expr(_L2.replace("v, c", "qv, c")).alias("dist"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy("dist", "cid")
-    probes = (
-        qd.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "qv", F.col("cid").alias("cell"))
-    )
+    assignment = _assign_by_cents(v, cents)
+    probes = _probe_cells(v, cents, n_queries, nprobe)
     members = assignment.join(
         v, "vec_id"
     ).select(F.col("vec_id").alias("neighbor_id"), "cell",
@@ -887,16 +909,7 @@ def ivf_pq_topk(
             # residual, as in the oracle's residual join
             if not ip or not clist:
                 continue
-            best = None
-            for cid, c in clist:
-                acc = 0.0
-                for xi, ci in zip(vec, c):
-                    d = xi - ci
-                    acc += d * d
-                key = (r6(acc), cid)
-                if best is None or key < best[0]:
-                    best = (key, cid)
-            c = cents_d[best[1]]
+            c = cents_d[_nearest(vec, clist, r6)]
             r = [xi - ci for xi, ci in zip(vec, c)]
             for j in range(m):
                 by_j.setdefault(j, []).append(
@@ -979,24 +992,7 @@ def ivf_pq_topk(
 
     codes_rows = assign_sub(rsub, cb).select("vec_id", "j", "code")
 
-    # queries → nprobe nearest coarse cells (as in ann_ivf_topk)
-    queries = v.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    qd = (
-        queries.withColumn("_j", F.lit(1))
-        .join(F.broadcast(cents.withColumn("_j", F.lit(1))), "_j")
-        .select(
-            "query_id", "qv", "cid",
-            F.expr(_L2.replace("v, c", "qv, c")).alias("dist"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy("dist", "cid")
-    probes = (
-        qd.withColumn("rn", F.row_number().over(wq))
-        .where(F.col("rn") <= nprobe)
-        .select("query_id", "qv", F.col("cid").alias("cell"))
-    )
+    probes = _probe_cells(v, cents, n_queries, nprobe)
 
     # per-(query, probed cell) ADC lookup table: the query residual's
     # distance to EVERY codeword — m*k_pq rows per probe

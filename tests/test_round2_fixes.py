@@ -293,7 +293,7 @@ def test_simhash_pairs_cap_skips_identical_cluster(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     # every chunk bucket has 200 members > cap → no quadratic pair dump
     assert simhash_pairs(docs, max_bucket=64).count() == 0
-    assert simhash_pairs(docs, max_bucket=None).count() == 200 * 199 // 2
+    assert simhash_pairs(docs, max_bucket=200).count() == 200 * 199 // 2
 
 
 # -- duplicated-span detection ------------------------------------------------
