@@ -50,6 +50,28 @@ def test_link_edges_multi_text_children(spark):
     assert rows[0].anchor == "click  now"
 
 
+def test_link_edges_error_pages_give_no_edges(spark):
+    pages = spark.createDataFrame(
+        [("https://h.example/page1",
+          bytearray(b'<a href="/p/2">ok</a><a href="/p/3"></a>')),
+         ("https://h.example/page4", bytearray(b'<a href="/p/5">caf\xe9</a>')),
+         ("https://h.example/page6",
+          bytearray(b'<a href="/p/7">' + b"<div>" * 600)),
+         ("https://h.example/page8", None)],
+        "url string, html binary",
+    ).coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for n in (1, 512):
+            spark.conf.set(key, str(n))
+            got = sorted(tuple(r) for r in link_edges(pages).collect())
+            # invalid UTF-8 and the depth bomb are error pages: no edges
+            assert got == [(1, 2, "ok"), (1, 3, "")], n
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_link_edges_parses_once(spark):
     # r7 verdict weak #1: the gated plan executed 4 MapInArrow parse
     # stages (one per lineage branch). With the eager localCheckpoint

@@ -192,6 +192,14 @@ def test_html_operators_error_contract(spark):
     and null html — pinned row for row (schema included), and identical
     whether the four documents arrive as one Arrow batch or four."""
     from html5ever_elixir_spark.operators.markdown import to_markdown
+    from html5ever_elixir_spark.operators.metadata import (
+        jsonld_records,
+        page_metadata,
+    )
+    from html5ever_elixir_spark.operators.outline import (
+        heading_outline,
+        section_chunks,
+    )
     from html5ever_elixir_spark.operators.parse import (
         flat_parse_nodes,
         parse_and_extract,
@@ -309,6 +317,33 @@ def test_html_operators_error_contract(spark):
             "url string, error string, markdown string",
             [("bomb", bud, None), ("null", None, ""), ("ok", None, _MD),
              ("utf8", u8, None)],
+        ),
+        # the page operators drop error pages; null html is the empty
+        # document, so it has one all-null metadata row and nothing else
+        "page_metadata": (
+            page_metadata,
+            "url string, title string, description string, "
+            "og_title string, canonical string, jsonld_type string, "
+            "html_lang string",
+            [("null", *(None,) * 6),
+             ("ok", "Shop & Co", *(None,) * 5)],
+        ),
+        "jsonld_records": (
+            jsonld_records,
+            "url string, block_idx bigint, raw string",
+            [],
+        ),
+        "heading_outline": (
+            heading_outline,
+            "url string, heading_idx bigint, level bigint, text string, "
+            "parent_idx bigint",
+            [("ok", 1, 1, "Deals", None)],
+        ),
+        "section_chunks": (
+            section_chunks,
+            "url string, section_idx bigint, heading_path string, "
+            "section_text string, n_paragraphs bigint",
+            [("ok", 1, "Deals", "Fresh ", 1)],
         ),
     }
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
