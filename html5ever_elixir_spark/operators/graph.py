@@ -3,8 +3,8 @@ fixed-point PageRank.
 
 The reference engine stops at per-document parsing (it returns the tree /
 flat nodes; ``lib/html5ever.ex:40-127``) — the link graph is the canonical
-corpus-LEVEL consumer of those nodes in a crawl pipeline: extract
-``<a href>`` edges from the flat-node table, then rank hosts/documents for
+corpus-LEVEL consumer of that tree in a crawl pipeline: extract
+``<a href>`` edges from each parsed page, then rank hosts/documents for
 crawl prioritization and quality weighting (the classic web-scale use).
 
 Determinism design (the whole point of this module's shape):
@@ -31,10 +31,12 @@ same plan, smaller constant.
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from . import release_checkpoint
+from .parse import direct_text, elements_by_id, page_rows
 
 __all__ = [
     "link_edges",
@@ -47,81 +49,43 @@ __all__ = [
 # for the href/url id patterns shared by the gate wiring
 URL_ID_PATTERN = "page([0-9]+)$"
 HREF_ID_PATTERN = "^/p/([0-9]+)$"
+_ANCHOR_SCHEMA = pa.schema([("href", pa.string()), ("anchor", pa.string())])
+
+
+def _anchor_rows(doc) -> list[tuple]:
+    return [
+        (href, direct_text(a))
+        for a in elements_by_id(doc, ("a",))
+        if (href := a.get_attr("href")) is not None
+    ]
 
 
 def link_edges(
-    pages: DataFrame | None = None,
-    nodes: DataFrame | None = None,
+    pages: DataFrame,
     url_pattern: str = URL_ID_PATTERN,
     href_pattern: str = HREF_ID_PATTERN,
 ) -> DataFrame:
     """Extract the document link graph from REAL parsed HTML.
 
-    Input: either raw ``pages`` (url, html — parsed here via
-    :func:`flat_parse_nodes`) or a pre-computed flat ``nodes`` table.
-    The two branches below (anchor elements, text children) each rescan
-    their input, so when raw pages arrive the nodes lineage is
-    **localCheckpointed eagerly**: the parse runs exactly once and both
-    branches read the materialized node rows (at 100 TB a re-parse per
-    lineage branch is the single biggest avoidable cost — the r7 gated
-    plan executed 4 MapInArrow parse stages before this). Callers
-    chaining SEVERAL node-level consumers (edges + metadata + …) should
-    still parse once themselves and pass ``nodes=`` so the one
-    materialization is shared across operators too.
+    Input: ``pages`` (url, html). Output: one row per ``<a href>`` of
+    each page — ``(src bigint, dst bigint, anchor string)`` where
+    src/dst are document ids recovered from the page url / href via the
+    corpus url scheme, and ``anchor`` is the concatenated text of the
+    ``<a>`` element's own text children, in node-id order. Anchors are
+    matched by bare tag name (``<svg><a href>`` counts); template
+    contents are not walked. Anchors whose url/href don't match the id
+    patterns are dropped (off-site or non-numeric links). Dangling
+    targets are NOT filtered here — semi-join the result against the
+    corpus node set (uniform bigint key, no skew) when feeding
+    :func:`pagerank`.
 
-    Output: one row per in-page anchor — ``(src bigint, dst bigint,
-    anchor string)`` where src/dst are document ids recovered from the
-    page url / href via the corpus url scheme, and ``anchor`` is the
-    concatenated text content of the ``<a>`` element (children in node
-    order — a row-local bounded list, one anchor's own text nodes).
-    Anchors whose url/href don't match the id patterns are dropped
-    (off-site or non-numeric links). Dangling targets are NOT filtered
-    here — semi-join the result against the corpus node set (uniform
-    bigint key, no skew) when feeding :func:`pagerank`.
-
-    Plan shape: one narrow Arrow parse stage → two row-filters on the
-    node type → an equi-join on (url, parent element id) to attach text
-    children → per-anchor groupBy. All keys are (url, node_id) pairs —
-    high-cardinality, uniform; no window over a corpus-level key.
+    Plan shape: one narrow Arrow stage emits (url, href, anchor) per
+    anchor (:func:`.parse.page_rows`); only the id regexes run
+    JVM-side. No join, no shuffle; error pages give no edges.
     """
-    if nodes is None:
-        if pages is None:
-            raise ValueError("link_edges needs pages or nodes")
-        from .parse import flat_parse_nodes
-
-        # parse ONCE: truncate the lineage so the two node-consumer
-        # branches below scan materialized rows instead of re-running
-        # the Arrow parse stage per branch (plan-asserted in
-        # tests/test_graph.py::test_link_edges_parses_once)
-        nodes = flat_parse_nodes(pages).localCheckpoint(eager=True)
-
-    anchors_elems = (
-        nodes.where("type = 'element' AND name = 'a'")
-        .select(
-            "url",
-            F.col("node_id").alias("a_id"),
-            F.element_at("attrs_map", F.lit("href")).alias("href"),
-        )
-        .where("href IS NOT NULL")
-    )
-    text_children = nodes.where("type = 'text'").select(
-        "url",
-        F.col("parent_id").alias("a_id"),
-        "node_id",
-        "contents",
-    )
-    with_anchor = (
-        anchors_elems.join(text_children, ["url", "a_id"], "left")
-        .groupBy("url", "a_id", "href")
-        .agg(
-            F.expr(
-                "concat_ws('', transform(array_sort("
-                "collect_list(struct(node_id, contents))), s -> s.contents))"
-            ).alias("anchor")
-        )
-    )
+    anchors = page_rows(pages, _anchor_rows, _ANCHOR_SCHEMA)
     return (
-        with_anchor.select(
+        anchors.select(
             F.regexp_extract("url", url_pattern, 1)
             .try_cast("bigint")
             .alias("src"),

@@ -1,25 +1,29 @@
-"""Page-metadata extraction over the flat-node table: ``<title>``,
+"""Page-metadata extraction from the parsed tree: ``<title>``,
 ``<meta name=…>`` / OpenGraph ``<meta property=…>``, ``<link
 rel=canonical>``, JSON-LD ``@type`` and the root ``<html lang>``.
 
-The reference engine exposes the parsed tree / flat nodes
-(``lib/html5ever.ex:40-127``, ``arena_sink.rs:458-607``); head-metadata
-extraction is the first thing every crawl consumer does with those
-nodes (search indexing, dedup canonicalization, social-card pipelines).
-This operator is the corpus-level form: one row per page with the
-scalar metadata fields, computed entirely with built-in Spark SQL
-expressions over the node rows — no extra Python beyond the shared
-parse stage.
+The reference engine returns one result per document from its one
+TreeSink walk (``arena_sink.rs:204-362``, ``lib/html5ever.ex:117-127``);
+head-metadata extraction is the first thing every crawl consumer does
+with that tree (search indexing, dedup canonicalization, social-card
+pipelines). This operator is the corpus-level form: one row per page
+with the scalar metadata fields, emitted by one walk per document in
+the HTML document kernel (:func:`.parse.page_rows`).
 
 Semantics (documented, oracle-pinned):
 
-* **First occurrence in document order wins** for every field
-  (``min(struct(node_id, value))`` — node ids are creation order, so
-  the min is the earliest node; scalar agg state, map-side combinable).
+* **First occurrence in node-id order wins** for every field, even
+  when its value is null (``<meta name=description>`` with no
+  ``content`` makes ``description`` null). Node ids are creation order.
+* Tags match by bare name, as in the flat node table (``<svg><title>``
+  counts); template contents are not walked.
 * ``meta[name]`` matching is case-insensitive (``Description`` counts);
-  OpenGraph ``property`` and script ``type`` compare lowercased.
+  OpenGraph ``property`` and script ``type`` compare lowercased, and
+  the script ``type`` is stripped of spaces only (Spark ``trim``).
+  A ``<meta>`` whose name is ``description`` never counts as og:title.
 * ``link rel`` is a space-separated token list per the HTML spec —
-  ``rel="other canonical"`` matches via token split, not equality.
+  ``rel="other canonical"`` matches via token split, not equality (a
+  tab does not separate tokens).
 * JSON-LD: the raw text of the first
   ``<script type="application/ld+json">`` is parsed JVM-side with
   ``get_json_object`` for the top-level ``@type``.
@@ -27,120 +31,67 @@ Semantics (documented, oracle-pinned):
   arrives as ``&``), which is what makes the driver gate a parse gate
   and not a regex gate.
 
-Plan shape / scale: the element leg filters to 5 tag names (a handful
-of rows per page); the text leg joins text children on the uniform
-(url, parent element id) key — both legs then fold into ONE
-``groupBy(url)`` with conditional-min scalar state. No window, no
-corpus-level key, no member lists. The element and text legs each
-rescan their input, so raw ``pages`` input is parsed ONCE via an eager
-localCheckpoint (as in :mod:`graph`); callers chaining several
-node-level consumers should still parse once themselves and pass
-``nodes=`` to share the materialization across operators.
+Plan shape: one narrow ``mapInArrow`` stage, no shuffle. Error pages
+give no rows; null html is the empty document.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from .parse import direct_text, elements_by_id, page_rows
+
 __all__ = ["page_metadata", "jsonld_records"]
 
-_TEXT_CONCAT = (
-    "concat_ws('', transform(array_sort("
-    "collect_list(struct(node_id, contents))), s -> s.contents))"
+_META_FIELDS = (
+    "title", "description", "og_title", "canonical", "_jsonld", "html_lang"
 )
+_META_SCHEMA = pa.schema([(k, pa.string()) for k in _META_FIELDS])
+_JSONLD_SCHEMA = pa.schema([("block_idx", pa.int64()), ("raw", pa.string())])
 
 
-def _first(cond, value):
-    """Earliest-in-document-order value where ``cond`` holds: a
-    conditional ``min(struct(node_id, v))`` — one scalar per group."""
-    return F.min(F.when(cond, F.struct(F.col("node_id"), value.alias("v"))))[
-        "v"
-    ]
+def _is_jsonld(e) -> bool:
+    t = e.get_attr("type")
+    return t is not None and t.strip(" ").lower() == "application/ld+json"
 
 
-def page_metadata(
-    pages: DataFrame | None = None, nodes: DataFrame | None = None
-) -> DataFrame:
-    """pages/nodes → one row per url:
+def _meta_kind(e) -> tuple[str | None, str | None]:
+    """(field, value) an element supplies, or (None, None)."""
+    name = e.name
+    if name == "title":
+        return "title", direct_text(e)
+    if name == "script":
+        return ("_jsonld", direct_text(e)) if _is_jsonld(e) else (None, None)
+    if name == "meta":
+        if (e.get_attr("name") or "").lower() == "description":
+            return "description", e.get_attr("content")
+        if (e.get_attr("property") or "").lower() == "og:title":
+            return "og_title", e.get_attr("content")
+        return None, None
+    if name == "link":
+        rel = (e.get_attr("rel") or "").lower().split(" ")
+        return ("canonical", e.get_attr("href")) if "canonical" in rel \
+            else (None, None)
+    return "html_lang", e.get_attr("lang")  # name == "html"
+
+
+def _meta_row(doc) -> list[tuple]:
+    found: dict = {}
+    for e in elements_by_id(doc, ("title", "meta", "link", "script", "html")):
+        kind, value = _meta_kind(e)
+        if kind is not None and kind not in found:
+            found[kind] = value
+    return [tuple(found.get(k) for k in _META_FIELDS)]
+
+
+def page_metadata(pages: DataFrame) -> DataFrame:
+    """pages(url, html) → one row per page:
     ``(url, title, description, og_title, canonical, jsonld_type,
     html_lang)`` — all nullable strings; a field is null when the page
     has no matching element."""
-    if nodes is None:
-        if pages is None:
-            raise ValueError("page_metadata needs pages or nodes")
-        from .parse import flat_parse_nodes
-
-        # parse ONCE for both legs (see module docstring; plan-asserted
-        # in tests/test_metadata.py::test_parses_once)
-        nodes = flat_parse_nodes(pages).localCheckpoint(eager=True)
-
-    elems = nodes.where(
-        "type = 'element' AND name IN ('title','meta','link','script','html')"
-    )
-
-    # text leg: concatenated text content for the two text-bearing kinds
-    text_elems = elems.where(
-        "name = 'title' OR (name = 'script' AND "
-        "lower(trim(element_at(attrs_map, 'type'))) = 'application/ld+json')"
-    ).select("url", F.col("node_id").alias("e_id"), "name")
-    texts = nodes.where("type = 'text'").select(
-        "url", F.col("parent_id").alias("e_id"), "node_id", "contents"
-    )
-    text_kv = (
-        text_elems.join(texts, ["url", "e_id"], "left")
-        .groupBy("url", "e_id", "name")
-        .agg(F.expr(_TEXT_CONCAT).alias("value"))
-        .select(
-            "url",
-            F.col("e_id").alias("node_id"),
-            F.when(F.col("name") == "title", F.lit("title"))
-            .otherwise(F.lit("jsonld"))
-            .alias("kind"),
-            "value",
-        )
-    )
-
-    # attribute leg: kind decided row-locally from tag + attrs
-    attr_kv = elems.selectExpr(
-        "url",
-        "node_id",
-        """case
-             when name = 'meta'
-                  and lower(element_at(attrs_map, 'name')) = 'description'
-               then 'description'
-             when name = 'meta'
-                  and lower(element_at(attrs_map, 'property')) = 'og:title'
-               then 'og_title'
-             when name = 'link' and array_contains(
-                  split(lower(coalesce(element_at(attrs_map, 'rel'), '')),
-                        ' +'), 'canonical')
-               then 'canonical'
-             when name = 'html' then 'html_lang'
-           end AS kind""",
-        """case
-             when name = 'meta' then element_at(attrs_map, 'content')
-             when name = 'link' then element_at(attrs_map, 'href')
-             when name = 'html' then element_at(attrs_map, 'lang')
-           end AS value""",
-    ).where("kind IS NOT NULL")
-
-    kv = attr_kv.unionByName(text_kv)
-    out = kv.groupBy("url").agg(
-        _first(F.col("kind") == "title", F.col("value")).alias("title"),
-        _first(F.col("kind") == "description", F.col("value")).alias(
-            "description"
-        ),
-        _first(F.col("kind") == "og_title", F.col("value")).alias("og_title"),
-        _first(F.col("kind") == "canonical", F.col("value")).alias(
-            "canonical"
-        ),
-        _first(F.col("kind") == "jsonld", F.col("value")).alias("_jsonld"),
-        _first(F.col("kind") == "html_lang", F.col("value")).alias(
-            "html_lang"
-        ),
-    )
-    return out.select(
+    return page_rows(pages, _meta_row, _META_SCHEMA).select(
         "url",
         "title",
         "description",
@@ -153,54 +104,24 @@ def page_metadata(
     )
 
 
-def jsonld_records(
-    pages: DataFrame | None = None, nodes: DataFrame | None = None
-) -> DataFrame:
+def _jsonld_rows(doc) -> list[tuple]:
+    scripts = [e for e in elements_by_id(doc, ("script",)) if _is_jsonld(e)]
+    return [(i, direct_text(e)) for i, e in enumerate(scripts, 1)]
+
+
+def jsonld_records(pages: DataFrame) -> DataFrame:
     """ALL JSON-LD blocks per page, in document order — the structured-
     data side of crawl extraction (schema.org cards power search
     snippets, product/recipe corpora, KG construction). Where
     :func:`page_metadata` keeps only the FIRST block's ``@type``, this
-    emits one row per ``<script type="application/ld+json">`` element:
+    emits one row per ``<script type="application/ld+json">`` element
+    of each page:
 
         (url, block_idx bigint, raw string)
 
-    ``block_idx`` is the 1-based document-order position (node ids are
-    creation order; ``row_number`` over the per-url window — bounded:
-    blocks per page is a small constant, never a corpus-level key).
-    ``raw`` is the REAL parser's text content for the script element
-    (RAWTEXT concatenation of its text children) — parse it JVM-side
-    with ``get_json_object`` / ``from_json``; malformed JSON then
-    yields NULL fields row-locally, never a job failure.
-
-    Plan: same two-leg shape as :func:`page_metadata` (element filter +
-    text-child join on the uniform (url, element id) key), raw pages
-    parsed ONCE via the eager localCheckpoint."""
-    if nodes is None:
-        if pages is None:
-            raise ValueError("jsonld_records needs pages or nodes")
-        from .parse import flat_parse_nodes
-
-        nodes = flat_parse_nodes(pages).localCheckpoint(eager=True)
-
-    scripts = nodes.where(
-        "type = 'element' AND name = 'script' AND "
-        "lower(trim(element_at(attrs_map, 'type'))) = 'application/ld+json'"
-    ).select("url", F.col("node_id").alias("e_id"))
-    texts = nodes.where("type = 'text'").select(
-        "url", F.col("parent_id").alias("e_id"), "node_id", "contents"
-    )
-    blocks = (
-        scripts.join(texts, ["url", "e_id"], "left")
-        .groupBy("url", "e_id")
-        .agg(F.expr(_TEXT_CONCAT).alias("raw"))
-    )
-    from pyspark.sql import Window
-
-    return blocks.select(
-        "url",
-        F.row_number()
-        .over(Window.partitionBy("url").orderBy("e_id"))
-        .cast("bigint")
-        .alias("block_idx"),
-        "raw",
-    )
+    ``block_idx`` is the 1-based node-id position among the page's
+    blocks. ``raw`` is the REAL parser's text content for the script
+    element (RAWTEXT concatenation of its text children) — parse it
+    JVM-side with ``get_json_object`` / ``from_json``; malformed JSON
+    then yields NULL fields row-locally, never a job failure."""
+    return page_rows(pages, _jsonld_rows, _JSONLD_SCHEMA)

@@ -1,4 +1,4 @@
-"""Document heading outline over the flat-node table: one row per
+"""Document heading outline from the parsed tree: one row per
 ``<h1>``–``<h6>`` element in document order, with its level, REAL-parser
 text content, and a parent pointer to the nearest preceding heading of
 smaller level — the section tree every structure-aware consumer builds
@@ -7,12 +7,12 @@ strings for training data).
 
 The reference engine stops at the parsed tree (``lib/html5ever.ex:
 40-127``); the outline is the canonical body-structure consumer of
-those nodes, complementing :mod:`metadata` (head) and :mod:`tables` /
+that tree, complementing :mod:`metadata` (head) and :mod:`tables` /
 :mod:`markdown` (block content).
 
 Semantics (oracle-pinned):
 
-* ``heading_idx`` — 1-based document-order position among the page's
+* ``heading_idx`` — 1-based node-id position among the page's
   headings (node ids are creation order).
 * ``level`` — the numeral in the tag name (h3 → 3).
 * ``text`` — concatenated direct text children in node order, with the
@@ -22,85 +22,58 @@ Semantics (oracle-pinned):
   rule over flat heading sequences; skipped levels attach to the
   nearest shallower heading, an h2 opening the page has no parent).
 
-Plan shape / scale: heading elements filter to 6 tag names (a handful
-of rows per page) and join text children on the uniform (url, element
-id) key; the parent computation is a per-PAGE array fold (bounded by
-headings-per-page — O(n²) row-locally on a tiny n, never a corpus
-join), then one posexplode back to rows. Raw ``pages`` input is parsed
-once via the eager localCheckpoint (the :mod:`graph` rule).
+Plan shape: one narrow ``mapInArrow`` stage per operator, no shuffle —
+each page's rows come from one walk of its parsed tree in the HTML
+document kernel (:func:`.parse.page_rows`). Headings and paragraphs
+are taken in node-id order by bare tag name; template contents are not
+walked. Error pages give no rows.
 """
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import pyarrow as pa
 from pyspark.sql import DataFrame
+
+from .parse import direct_text, elements_by_id, page_rows
 
 __all__ = ["heading_outline", "section_chunks", "assemble_sections"]
 
-_TEXT_CONCAT = (
-    "concat_ws('', transform(array_sort("
-    "collect_list(struct(node_id, contents))), s -> s.contents))"
-)
-
-# per-page fold: hs = sorted array<struct<node_id, level, text>>;
-# parent of element i (0-based) = 1-based index of the last preceding
-# entry with a smaller level. slice() is 1-based; i = 0 gives an empty
-# slice (no preceding headings -> NULL parent).
-_WITH_PARENTS = """
-transform(hs, (h, i) ->
-  struct(
-    cast(i + 1 as bigint) AS heading_idx,
-    h.level AS level,
-    h.text AS text,
-    array_max(filter(
-      transform(slice(hs, 1, i),
-                (g, j) -> CASE WHEN g.level < h.level
-                               THEN cast(j + 1 as bigint) END),
-      x -> x IS NOT NULL)) AS parent_idx))
-"""
+_HEADINGS = ("h1", "h2", "h3", "h4", "h5", "h6")
+_OUTLINE_SCHEMA = pa.schema([
+    ("heading_idx", pa.int64()), ("level", pa.int64()),
+    ("text", pa.string()), ("parent_idx", pa.int64()),
+])
+_SECTION_SCHEMA = pa.schema([
+    ("section_idx", pa.int64()), ("heading_path", pa.string()),
+    ("section_text", pa.string()), ("n_paragraphs", pa.int64()),
+])
 
 
-def heading_outline(
-    pages: DataFrame | None = None, nodes: DataFrame | None = None
-) -> DataFrame:
-    """pages/nodes → one row per h1–h6:
+def _nearest_shallower(levels: list[int], level: int) -> int | None:
+    """1-based index of the last entry of ``levels`` smaller than
+    ``level``, else None — the parent rule of the outline."""
+    for j in range(len(levels) - 1, -1, -1):
+        if levels[j] < level:
+            return j + 1
+    return None
+
+
+def _outline_rows(doc) -> list[tuple]:
+    levels: list[int] = []
+    rows = []
+    for h in elements_by_id(doc, _HEADINGS):
+        level = int(h.name[1])
+        rows.append((len(levels) + 1, level, direct_text(h),
+                     _nearest_shallower(levels, level)))
+        levels.append(level)
+    return rows
+
+
+def heading_outline(pages: DataFrame) -> DataFrame:
+    """pages(url, html) → one row per h1–h6 of each page:
     ``(url, heading_idx bigint, level bigint, text string,
     parent_idx bigint)`` — pages without headings contribute no rows."""
-    if nodes is None:
-        if pages is None:
-            raise ValueError("heading_outline needs pages or nodes")
-        from .parse import flat_parse_nodes
-
-        nodes = flat_parse_nodes(pages).localCheckpoint(eager=True)
-
-    headings = nodes.where(
-        "type = 'element' AND name IN ('h1','h2','h3','h4','h5','h6')"
-    ).select(
-        "url",
-        F.col("node_id").alias("e_id"),
-        F.expr("cast(substring(name, 2, 1) as bigint)").alias("level"),
-    )
-    texts = nodes.where("type = 'text'").select(
-        "url", F.col("parent_id").alias("e_id"), "node_id", "contents"
-    )
-    per_heading = (
-        headings.join(texts, ["url", "e_id"], "left")
-        .groupBy("url", "e_id", "level")
-        .agg(F.expr(_TEXT_CONCAT).alias("text"))
-    )
-    per_page = per_heading.groupBy("url").agg(
-        F.expr(
-            "sort_array(collect_list(struct(e_id AS node_id, level, text)))"
-        ).alias("hs")
-    )
-    return (
-        per_page.select(
-            "url", F.explode(F.expr(_WITH_PARENTS)).alias("h")
-        )
-        .select(
-            "url", "h.heading_idx", "h.level", "h.text", "h.parent_idx"
-        )
-    )
+    return page_rows(pages, _outline_rows, _OUTLINE_SCHEMA)
 
 
 def assemble_sections(items: list[tuple[int, str, int, str]]) -> list[dict]:
@@ -112,7 +85,8 @@ def assemble_sections(items: list[tuple[int, str, int, str]]) -> list[dict]:
     the nearest-shallower parent chain (the :func:`heading_outline`
     rule) root-first, ' > '-joined."""
     items = sorted(items)
-    headings: list[tuple[int, str, int | None]] = []  # (level, text, parent)
+    levels: list[int] = []
+    headings: list[tuple[str, int | None]] = []  # (text, parent)
     out: list[dict] = []
     cur: dict | None = None
 
@@ -128,16 +102,12 @@ def assemble_sections(items: list[tuple[int, str, int, str]]) -> list[dict]:
     for _nid, kind, level, text in items:
         if kind == "h":
             flush()
-            parent = None
-            for j in range(len(headings) - 1, -1, -1):
-                if headings[j][0] < level:
-                    parent = j + 1
-                    break
-            headings.append((level, text, parent))
+            headings.append((text, _nearest_shallower(levels, level)))
+            levels.append(level)
             path, k = [], len(headings)
             while k is not None:
-                path.append(headings[k - 1][1])
-                k = headings[k - 1][2]
+                path.append(headings[k - 1][0])
+                k = headings[k - 1][1]
             cur = {
                 "section_idx": len(headings),
                 "heading_path": " > ".join(reversed(path)),
@@ -157,77 +127,31 @@ def assemble_sections(items: list[tuple[int, str, int, str]]) -> list[dict]:
     return out
 
 
-SECTION_SCHEMA = (
-    "url string, section_idx bigint, heading_path string, "
-    "section_text string, n_paragraphs bigint"
-)
+def _section_rows(doc) -> list[tuple]:
+    items = [
+        (e.id, "p", 0, direct_text(e)) if e.name == "p"
+        else (e.id, "h", int(e.name[1]), direct_text(e))
+        for e in elements_by_id(doc, (*_HEADINGS, "p"))
+    ]
+    return [
+        tuple(s[k] for k in _SECTION_SCHEMA.names)
+        for s in assemble_sections(items)
+    ]
 
 
-def section_chunks(
-    pages: DataFrame | None = None, nodes: DataFrame | None = None
-) -> DataFrame:
+def section_chunks(pages: DataFrame) -> DataFrame:
     """Section-scoped chunking — the RAG-grade unit: one row per
-    heading-delimited section with its ``heading_path`` context string
-    (what retrieval pipelines prepend so an isolated chunk keeps its
-    document position) and the concatenated ``<p>`` text in document
-    order. Headings with no paragraphs still emit (empty text) so the
-    section table covers the whole outline; preamble paragraphs before
-    any heading emit section_idx 0 with an empty path.
+    heading-delimited section of each page with its ``heading_path``
+    context string (what retrieval pipelines prepend so an isolated
+    chunk keeps its document position) and the concatenated ``<p>``
+    text in document order:
 
-    Plan: the heading and paragraph legs ride the SAME parsed-node
-    lineage (eager localCheckpoint when raw pages arrive) and union
-    into one typed row set; assembly is one ``applyInPandas`` over the
-    url key — per-group state bounded by one PAGE's headings +
-    paragraph text, and only the typed rows shuffle, never the html."""
-    import pandas as pd
+        (url, section_idx bigint, heading_path string,
+         section_text string, n_paragraphs bigint)
 
-    if nodes is None:
-        if pages is None:
-            raise ValueError("section_chunks needs pages or nodes")
-        from .parse import flat_parse_nodes
-
-        nodes = flat_parse_nodes(pages).localCheckpoint(eager=True)
-
-    elems = nodes.where(
-        "type = 'element' AND name IN "
-        "('h1','h2','h3','h4','h5','h6','p')"
-    ).select(
-        "url",
-        F.col("node_id").alias("e_id"),
-        F.expr(
-            "CASE WHEN name = 'p' THEN 'p' ELSE 'h' END"
-        ).alias("kind"),
-        F.expr(
-            "CASE WHEN name = 'p' THEN 0L "
-            "ELSE cast(substring(name, 2, 1) as bigint) END"
-        ).alias("level"),
-    )
-    texts = nodes.where("type = 'text'").select(
-        "url", F.col("parent_id").alias("e_id"), "node_id", "contents"
-    )
-    rows = (
-        elems.join(texts, ["url", "e_id"], "left")
-        .groupBy("url", "e_id", "kind", "level")
-        .agg(F.expr(_TEXT_CONCAT).alias("text"))
-    )
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        url = pdf["url"].iloc[0]
-        items = [
-            (int(e), k, int(lv), t or "")
-            for e, k, lv, t in zip(
-                pdf["e_id"], pdf["kind"], pdf["level"], pdf["text"]
-            )
-        ]
-        secs = assemble_sections(items)
-        return pd.DataFrame(
-            {
-                "url": [url] * len(secs),
-                "section_idx": [s["section_idx"] for s in secs],
-                "heading_path": [s["heading_path"] for s in secs],
-                "section_text": [s["section_text"] for s in secs],
-                "n_paragraphs": [s["n_paragraphs"] for s in secs],
-            }
-        )
-
-    return rows.groupBy("url").applyInPandas(assemble, SECTION_SCHEMA)
+    Headings with no paragraphs still emit (empty text) so the section
+    table covers the whole outline; preamble paragraphs before any
+    heading emit section_idx 0 with an empty path. Each page is
+    assembled by :func:`assemble_sections` inside the kernel, so
+    nothing shuffles."""
+    return page_rows(pages, _section_rows, _SECTION_SCHEMA)

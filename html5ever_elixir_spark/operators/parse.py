@@ -3,10 +3,11 @@ four entry points (``lib/html5ever.ex:40-129``).
 
 Execution model: :func:`map_documents` is the one HTML document kernel.
 Every per-document HTML operator (here, ``select``, ``tables``,
-``markdown``) is a list of emitters over its single ``mapInArrow``
-stage — one Python call per Arrow batch, zero per-row dispatch (the
-analog of the reference's one dirty-CPU NIF call per document,
-``lib.rs:24,:43``; Arrow zero-copy replaces the BEAM term-copy
+``markdown``, and via :func:`page_rows` ``graph.link_edges``,
+``metadata`` and ``outline``) is a list of emitters over its single
+``mapInArrow`` stage — one Python call per Arrow batch, zero per-row
+dispatch (the analog of the reference's one dirty-CPU NIF call per
+document, ``lib.rs:24,:43``; Arrow zero-copy replaces the BEAM term-copy
 avoidance of ``CHANGELOG.md:176-178``). Column pruning happens *before*
 the Python stage: only (url, html) cross the JVM→Python boundary, so
 the parquet scan reads exactly two columns.
@@ -27,7 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
+from ..functions.selectors import iter_elements
 from ..parser.api import UTF8_ERROR, parse_document, tree_to_json
+from ..parser.dom import TEXT
 from ..parser.extract import extract_all
 from ..parser.treebuilder import ParseBudgetExceeded, TreeBuilder
 
@@ -242,6 +245,41 @@ def rows_emitter(walk: Callable, names: tuple[str, ...]) -> Emitter:
         return len(rows)
 
     return emit
+
+
+def page_rows(pages: DataFrame, walk: Callable, schema: pa.Schema) -> DataFrame:
+    """pages(url, html) → ``walk(doc)``'s rows over ``schema``, keyed by
+    url: one :func:`map_documents` stage with one :func:`rows_emitter`.
+    Each page gets its own rows, so pages that share a url never mix.
+    Error pages give no rows; null html is the empty document."""
+    return (
+        map_documents(
+            pages, "url", "html", [rows_emitter(walk, tuple(schema.names))],
+            pa.schema([("error", pa.string()), *schema]), id_name="url",
+        )
+        .where("error IS NULL")
+        .drop("error")
+    )
+
+
+def elements_by_id(doc, names) -> list:
+    """The elements whose bare tag name is in ``names``, by node id —
+    creation order, which foster parenting and adoption-agency clones
+    make differ from tree order. Template contents are not walked."""
+    return sorted(
+        (e for e in iter_elements(doc) if e.name in names),
+        key=lambda e: e.id,
+    )
+
+
+def direct_text(el) -> str:
+    """``el``'s own text children, joined by node id (the text of its
+    child elements is not included)."""
+    return "".join(
+        c.contents
+        for c in sorted(el.children, key=lambda c: c.id)
+        if c.type == TEXT
+    )
 
 
 def parse_and_extract(

@@ -88,22 +88,6 @@ def test_plan_has_no_window(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_parses_once(spark):
-    # element + text legs must NOT each re-run the Arrow parse stage:
-    # raw pages are parsed once via the eager localCheckpoint, so the
-    # downstream plan contains zero parse stages (r7 verdict weak #1,
-    # same fix as graph.link_edges)
-    df = spark.createDataFrame(
-        [("u", "<title>t</title><meta name=description content=d>")],
-        "url string, html string",
-    )
-    out = page_metadata(df)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" not in plan and "ArrowEvalPython" not in plan
-    row = out.collect()[0]
-    assert row.title == "t" and row.description == "d"
-
-
 # ---------------------------------------------------------------------------
 # jsonld_records: ALL ld+json blocks per page, in document order
 
@@ -162,23 +146,57 @@ def test_jsonld_records_malformed_json_null_fields(spark):
     assert out[0].t is None and out[0].n is None  # … with NULL fields
 
 
-def test_jsonld_records_parses_once(spark):
-    from html5ever_elixir_spark.operators.metadata import jsonld_records
+def test_first_match_wins_even_when_null_and_bare_names(spark):
+    out = _meta(
+        spark,
+        [
+            ("null_first",
+             '<head><meta name="description">'
+             '<meta name="description" content="late"></head>'),
+            # a foreign-content <title> matches by its bare name
+            ("svg", "<body><svg><title>s</title></svg></body>"),
+            # Spark-style whitespace: a tab neither splits rel tokens nor
+            # is stripped from the script type
+            ("tabs",
+             '<head><link rel="x\tcanonical" href="https://c">'
+             '<script type="\tapplication/ld+json">{"@type":"T"}</script>'
+             "</head>"),
+        ],
+    )
+    assert out["null_first"]["description"] is None
+    assert out["svg"]["title"] == "s"
+    assert out["tabs"]["canonical"] is None
+    assert out["tabs"]["jsonld_type"] is None
 
+
+def test_pages_sharing_a_url_keep_their_own_rows(spark):
+    from html5ever_elixir_spark.operators.graph import link_edges
+    from html5ever_elixir_spark.operators.outline import (
+        heading_outline,
+        section_chunks,
+    )
+
+    url = "https://h.example/page1"
     df = spark.createDataFrame(
-        [(
-            "u1",
-            '<html><head><script type="application/ld+json">{"a":1}'
-            "</script></head><body></body></html>",
-        )],
+        [(url, '<title>dup1</title><h1>x</h1><p>a</p><a href="/p/2">d1</a>'),
+         (url, '<title>dup2</title><h1>y</h1><p>b</p><a href="/p/3">d2</a>'),
+         (None, '<title>nu</title><h1>z</h1><p>c</p><a href="/p/4">n</a>')],
         "url string, html string",
     )
-    plan = (
-        jsonld_records(pages=df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+
+    def rows(out):
+        return sorted((tuple(r) for r in out.collect()), key=repr)
+
+    assert rows(page_metadata(df).select("url", "title")) == sorted(
+        [(url, "dup1"), (url, "dup2"), (None, "nu")], key=repr
     )
-    # raw pages parse once via the eager localCheckpoint: the downstream
-    # plan scans materialized node rows, zero Arrow parse stages
-    assert "MapInArrow" not in plan and "ArrowEvalPython" not in plan
+    # the null url has no page id, so its anchor is not an edge
+    assert rows(link_edges(df)) == [(1, 2, "d1"), (1, 3, "d2")]
+    assert rows(heading_outline(df)) == sorted(
+        [(url, 1, 1, "x", None), (url, 1, 1, "y", None),
+         (None, 1, 1, "z", None)], key=repr
+    )
+    assert rows(section_chunks(df)) == sorted(
+        [(url, 1, "x", "a", 1), (url, 1, "y", "b", 1),
+         (None, 1, "z", "c", 1)], key=repr
+    )

@@ -50,20 +50,6 @@ def test_no_headings_no_rows(spark):
     assert _rows(spark, "<html><body><p>just text</p></body></html>") == []
 
 
-def test_parses_once(spark):
-    df = spark.createDataFrame(
-        [("u1", "<html><body><h1>A</h1></body></html>")],
-        "url string, html string",
-    )
-    plan = (
-        heading_outline(pages=df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInArrow" not in plan and "ArrowEvalPython" not in plan
-
-
 # ---------------------------------------------------------------------------
 # section_chunks: heading-scoped text with path context
 
@@ -117,19 +103,3 @@ def test_section_chunks_end_to_end(spark):
         ("u1", 2, "A > B", "three", 1),
         ("u2", 0, "", "only text no headings", 1),
     ]
-
-
-def test_section_chunks_parses_once(spark):
-    from html5ever_elixir_spark.operators.outline import section_chunks
-
-    df = spark.createDataFrame(
-        [("u1", "<html><body><h1>A</h1><p>x</p></body></html>")],
-        "url string, html string",
-    )
-    plan = (
-        section_chunks(pages=df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInArrow" not in plan and "ArrowEvalPython" not in plan

@@ -72,3 +72,17 @@ def test_html_operators_have_no_own_arrow_loop():
                 offenders.append(f"{path.name}:{node.lineno} row-dict path")
     assert offenders == []
     assert kernel_calls == 1
+
+
+def test_page_operators_do_not_rejoin_flat_nodes():
+    # a per-page operator emits its final rows from a map_documents
+    # walk; the flat node table is an output of its own, never an
+    # intermediate that an operator joins back together
+    offenders = [
+        f"{path.name}:{i}"
+        for path in sorted((PKG / "operators").glob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "flat_parse_nodes" in line
+        and not (path == KERNEL and line.startswith("def flat_parse_nodes("))
+    ]
+    assert offenders == []

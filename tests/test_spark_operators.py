@@ -365,3 +365,25 @@ def test_html_operators_error_contract(spark):
             assert rows == sorted(expected, key=repr), name
     finally:
         spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("op", ["link_edges", "page_metadata",
+                                "jsonld_records", "heading_outline",
+                                "section_chunks"])
+def test_page_operator_plan_is_one_narrow_stage(spark, op):
+    """Each page operator parses once and emits its final rows from the
+    kernel: exactly one Arrow stage, and no shuffle regroups the pages."""
+    from html5ever_elixir_spark.operators import graph, metadata, outline
+
+    fn = {"link_edges": graph.link_edges,
+          "page_metadata": metadata.page_metadata,
+          "jsonld_records": metadata.jsonld_records,
+          "heading_outline": outline.heading_outline,
+          "section_chunks": outline.section_chunks}[op]
+    pages = spark.createDataFrame(
+        [("https://h.example/page1", bytearray(_CONTRACT_PAGE))],
+        "url string, html binary",
+    )
+    plan = fn(pages)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Exchange" not in plan, plan
