@@ -13,12 +13,14 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from html5ever_elixir_spark.operators import (
     dedup,
     graph,
+    map_rows,
     relational,
     markdown,
     sampling,
@@ -26,7 +28,11 @@ from html5ever_elixir_spark.operators import (
     tables,
     textstats,
 )
-from html5ever_elixir_spark.operators.parse import flat_parse_nodes, parse_and_extract
+from html5ever_elixir_spark.operators.parse import (
+    flat_parse_nodes,
+    map_documents,
+    parse_and_extract,
+)
 from html5ever_elixir_spark.plans import curation
 from html5ever_elixir_spark.sources.pages import pages_from_documents, pages_select_sql
 
@@ -45,6 +51,31 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pages_from_documents(spark, sf_dir)
+
+
+def _page_column(spark, sf_dir, name: str, of_doc) -> DataFrame:
+    """(url, ``name``): ``of_doc(doc)`` of each parsed page through the
+    HTML document kernel; a page that fails to parse gives null."""
+
+    def emit(out, parsed, err) -> int:
+        out[name].append(None if parsed is None else of_doc(parsed.doc))
+        return 1
+
+    return map_documents(
+        _pages(spark, sf_dir), "url", "html", [emit],
+        pa.schema([(name, pa.string())]),
+    )
+
+
+def _one_column(name: str, fn, type_=pa.string()):
+    """A ``map_rows`` emitter that appends ``fn(*vals)`` to ``name``,
+    and its one-column schema."""
+
+    def emit(out, *vals) -> int:
+        out[name].append(fn(*vals))
+        return 1
+
+    return emit, pa.schema([(name, type_)])
 
 
 # DuckDB-side pages CTE (the driver pre-registers `documents`)
@@ -193,28 +224,11 @@ def _q_html_tree_json(spark, sf_dir):
 def _q_html_tree_json_maps(spark, sf_dir):
     # maps-mode nested tree (reference parse_with_attributes_as_maps/1,
     # lib/html5ever.ex:62-64): attrs encoded as a first-wins JSON object
-    import pyarrow as pa
+    from html5ever_elixir_spark.parser.api import tree_to_json
 
-    from html5ever_elixir_spark.parser.api import parse_document, tree_to_json
-
-    def fn(batches):
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "url": urls,
-                    "tree_json_maps": [
-                        tree_to_json(parse_document(h).doc, attrs_as_maps=True)
-                        for h in htmls
-                    ],
-                }
-            )
-
-    return (
-        _pages(spark, sf_dir)
-        .select("url", "html")
-        .mapInArrow(fn, "url string, tree_json_maps string")
+    return _page_column(
+        spark, sf_dir, "tree_json_maps",
+        lambda doc: tree_to_json(doc, attrs_as_maps=True),
     )
 
 
@@ -230,8 +244,6 @@ def _q_html_fragment_tree(spark, sf_dir):
     #                       table modes → a REAL td element.
     # The oracle reconstructs the exact ["#frag",…] JSON per case
     # (documents.text is [a-zA-Z0-9 ] — safe for literal splicing).
-    import pyarrow as pa
-
     from html5ever_elixir_spark.parser.api import (
         fragment_to_json,
         parse_fragment,
@@ -249,22 +261,12 @@ def _q_html_fragment_tree(spark, sf_dir):
         " when 1 then 'textarea' else 'template' end AS context",
     )
 
-    def fn(batches):
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            ctxs = batch.column(2).to_pylist()
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "url": urls,
-                    "frag_json": [
-                        fragment_to_json(parse_fragment(h, c))
-                        for h, c in zip(htmls, ctxs)
-                    ],
-                }
-            )
-
-    return frags.mapInArrow(fn, "url string, frag_json string")
+    return map_rows(
+        frags, ["url"], ["frag_html", "context"],
+        *_one_column(
+            "frag_json", lambda h, c: fragment_to_json(parse_fragment(h, c))
+        ),
+    )
 
 
 _FRAGMENT_TREE_ORACLE = """
@@ -324,29 +326,9 @@ def _q_html_extract_v2(spark, sf_dir):
     # text-density profile: on the template corpus only the long prose
     # block survives ("Title {d}" and "extra & {d}" stubs are < 15 chars
     # for every doc_id in these SFs)
-    import pyarrow as pa
-
-    from html5ever_elixir_spark.parser.api import parse_document
     from html5ever_elixir_spark.parser.extract import extract_text_v2
 
-    def fn(batches):
-        for batch in batches:
-            urls = batch.column(0).to_pylist()
-            htmls = batch.column(1).to_pylist()
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "url": urls,
-                    "text_v2": [
-                        extract_text_v2(parse_document(h).doc) for h in htmls
-                    ],
-                }
-            )
-
-    return (
-        _pages(spark, sf_dir)
-        .select("url", "html")
-        .mapInArrow(fn, "url string, text_v2 string")
-    )
+    return _page_column(spark, sf_dir, "text_v2", extract_text_v2)
 
 
 def _q_html_error_rows(spark, sf_dir):
@@ -872,46 +854,31 @@ def _q_media_jpeg_roundtrip(spark, sf_dir):
     # approximation, and the DC fast path; the block centers
     # reconstruct the text byte-for-byte. Oracle: the text itself plus
     # the synthesized geometry.
-    import pyarrow as pa
-
     from html5ever_elixir_spark.operators.multimodal import (
         _decode_raster,
         encode_jpeg_gray_blocks,
     )
 
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out = {"media_id": ids, "text_rt": [], "w": [], "h": []}
-            for did, t in zip(ids, texts):
-                vals = t.encode("utf-8")
-                jp = encode_jpeg_gray_blocks(
-                    vals,
-                    restart_interval=(
-                        7 if did % 3 == 0 and did % 5 != 0 else 0
-                    ),
-                    progressive=did % 5 == 0,
-                )
-                w, h, px = _decode_raster(jp)
-                out["text_rt"].append(
-                    bytes(px[3 * w + 8 * i + 3]
-                          for i in range(len(vals))).decode("utf-8")
-                )
-                out["w"].append(w)
-                out["h"].append(h)
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema([
-                    ("media_id", pa.int64()), ("text_rt", pa.string()),
-                    ("w", pa.int64()), ("h", pa.int64()),
-                ]),
-            )
+    def emit(out, did, t) -> int:
+        vals = t.encode("utf-8")
+        jp = encode_jpeg_gray_blocks(
+            vals,
+            restart_interval=7 if did % 3 == 0 and did % 5 != 0 else 0,
+            progressive=did % 5 == 0,
+        )
+        w, h, px = _decode_raster(jp)
+        rt = bytes(px[3 * w + 8 * i + 3] for i in range(len(vals)))
+        out["text_rt"].append(rt.decode("utf-8"))
+        out["w"].append(w)
+        out["h"].append(h)
+        return 1
 
-    return (
-        _docs(spark, sf_dir).where("length(text) > 0")
-        .selectExpr("doc_id AS media_id", "text")
-        .mapInArrow(fn, "media_id bigint, text_rt string, w bigint, h bigint")
+    return map_rows(
+        _docs(spark, sf_dir).where("length(text) > 0"),
+        [F.col("doc_id").cast("bigint").alias("media_id")], ["doc_id", "text"],
+        emit,
+        pa.schema([("text_rt", pa.string()), ("w", pa.int64()),
+                   ("h", pa.int64())]),
     )
 
 
@@ -929,41 +896,24 @@ def _q_media_wav_features(spark, sf_dir):
     # per-window sums of |sample| (the container walk + PCM decode is
     # what's under test; the final float normalization stays
     # pytest-covered, dodging cross-engine float rounding entirely).
-    import pyarrow as pa
-
     from html5ever_elixir_spark.operators.multimodal import (
         _wav_samples,
         docs_to_wavs,
     )
 
-    wavs = docs_to_wavs(_docs(spark, sf_dir).where("length(text) > 0"))
+    def emit(out, p) -> int:
+        ss = _wav_samples(bytes(p))
+        k = len(ss)
+        out["n_samples"].append(k)
+        for d in range(8):
+            out[f"s{d}"].append(sum(ss[d * k // 8 : (d + 1) * k // 8]))
+        return 1
 
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            payloads = batch.column(1).to_pylist()
-            out = {"media_id": ids, "n_samples": []}
-            for d in range(8):
-                out[f"s{d}"] = []
-            for p in payloads:
-                ss = _wav_samples(bytes(p))
-                k = len(ss)
-                out["n_samples"].append(k)
-                for d in range(8):
-                    lo, hi = d * k // 8, (d + 1) * k // 8
-                    out[f"s{d}"].append(sum(ss[lo:hi]))
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema(
-                    [("media_id", pa.int64()), ("n_samples", pa.int64())]
-                    + [(f"s{d}", pa.int64()) for d in range(8)]
-                ),
-            )
-
-    return wavs.mapInArrow(
-        fn,
-        "media_id bigint, n_samples bigint, "
-        + ", ".join(f"s{d} bigint" for d in range(8)),
+    return map_rows(
+        docs_to_wavs(_docs(spark, sf_dir).where("length(text) > 0")),
+        ["media_id"], ["payload"], emit,
+        pa.schema([(c, pa.int64())
+                   for c in ("n_samples", *[f"s{d}" for d in range(8)])]),
     )
 
 
@@ -1528,30 +1478,13 @@ def _q_html_extract_cp1252(spark, sf_dir):
     # encoding="sniff" must take the cp1252 fallback and decode to
     # codepoint-identical text; the oracle injects the same marker
     # after the title line (first-newline regexp_replace)
-    import pyarrow as pa
-
-    from html5ever_elixir_spark.operators.parse import parse_and_extract
-
-    def fn(batches):
-        for b in batches:
-            urls = b.column(0).to_pylist()
-            htmls = b.column(1).to_pylist()
-            enc = [
-                h.replace("</h1>", " —“é”</h1>")
-                .encode("cp1252")
-                for h in htmls
-            ]
-            yield pa.RecordBatch.from_pydict(
-                {"url": urls, "html": enc},
-                schema=pa.schema(
-                    [("url", pa.string()), ("html", pa.binary())]
-                ),
-            )
-
-    pages = (
-        _pages(spark, sf_dir)
-        .select("url", "html")
-        .mapInArrow(fn, "url string, html binary")
+    pages = map_rows(
+        _pages(spark, sf_dir), ["url"], ["html"],
+        *_one_column(
+            "html",
+            lambda h: h.replace("</h1>", " —“é”</h1>").encode("cp1252"),
+            pa.binary(),
+        ),
     )
     return parse_and_extract(pages, encoding="sniff").select("url", "text")
 
@@ -1574,34 +1507,17 @@ def _q_html_extract_charsets(spark, sf_dir):
     # / big5 bytes; encoding="sniff" must honor the declared label and
     # decode to codepoint-identical text. The oracle injects the same
     # marker after the title line keyed on doc_id % 4.
-    import pyarrow as pa
+    def encode(did, h):
+        label, codec, marker = _CHARSET_MIX[did % 4]
+        return (
+            h.replace("<head>", f"<head><meta charset={label}>")
+            .replace("</h1>", marker + "</h1>")
+            .encode(codec)
+        )
 
-    from html5ever_elixir_spark.operators.parse import parse_and_extract
-
-    def fn(batches):
-        for b in batches:
-            urls = b.column(0).to_pylist()
-            dids = b.column(1).to_pylist()
-            htmls = b.column(2).to_pylist()
-            enc = []
-            for did, h in zip(dids, htmls):
-                label, codec, marker = _CHARSET_MIX[did % 4]
-                enc.append(
-                    h.replace("<head>", f"<head><meta charset={label}>")
-                    .replace("</h1>", marker + "</h1>")
-                    .encode(codec)
-                )
-            yield pa.RecordBatch.from_pydict(
-                {"url": urls, "html": enc},
-                schema=pa.schema(
-                    [("url", pa.string()), ("html", pa.binary())]
-                ),
-            )
-
-    pages = (
-        _pages(spark, sf_dir)
-        .select("url", "doc_id", "html")
-        .mapInArrow(fn, "url string, html binary")
+    pages = map_rows(
+        _pages(spark, sf_dir), ["url"], ["doc_id", "html"],
+        *_one_column("html", encode, pa.binary()),
     )
     return parse_and_extract(pages, encoding="sniff").select("url", "text")
 

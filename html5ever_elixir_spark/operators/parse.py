@@ -20,14 +20,13 @@ input.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
-from pyspark.sql.types import StructField, StructType
 
+from . import map_rows
 from ..functions.selectors import iter_elements
 from ..parser.api import UTF8_ERROR, parse_document, tree_to_json
 from ..parser.dom import TEXT
@@ -141,59 +140,35 @@ def map_documents(
     encoding: str = "strict",
 ) -> DataFrame:
     """The HTML document kernel: every per-document HTML operator is one
-    list of emitters over this single ``mapInArrow`` stage.
+    list of emitters over this single :func:`~.map_rows` stage.
 
-    Per Arrow batch: decode (``encoding="strict"`` UTF-8 gate or
+    Per document: decode (``encoding="strict"`` UTF-8 gate or
     ``"sniff"`` crawl chain) → budgeted parse → the one error taxonomy
-    (:func:`decode_and_parse`) → every emitter, in order → one columnar
-    RecordBatch. Output columns: ``id_name`` (default ``id_col``; the id
-    keeps its input type), then ``schema``, then ``passthrough_cols``.
-    The id and passthrough columns never become Python objects: each is
-    the input column ``take``-n by every output row's document index.
-    A ``schema`` column that no emitter appended to in a batch is all
+    (:func:`decode_and_parse`) → every emitter, in order; ``map_rows``
+    assembles each Arrow batch. Output columns: ``id_name`` (default
+    ``id_col``; the id keeps its input type), then ``schema``, then
+    ``passthrough_cols``. The id and passthrough columns are
+    ``map_rows`` keys, so they never become Python objects. A
+    ``schema`` column that no emitter appended to in a batch is all
     null (e.g. ``tree_json`` when it is not requested). Only
     (id, html, passthrough) cross the JVM→Python boundary, so a parquet
     scan reads exactly those columns."""
     decode = _to_text if encoding == "strict" else _to_text_sniff
-    names = schema.names
-    n_pass = len(passthrough_cols)
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            out: dict[str, list] = {k: [] for k in names}
-            doc_idx: list[int] = []
-            for i, html in enumerate(batch.column(1).to_pylist()):
-                parsed, err = decode_and_parse(
-                    html, decode, max_nodes, max_depth
-                )
-                for emit in emitters:
-                    n = emit(out, parsed, err)
-                doc_idx.extend([i] * n)
-            if not doc_idx:
-                continue
-            take = pa.array(doc_idx, pa.int32())
-            cols = [batch.column(0).take(take)]
-            for f in schema:
-                vals = out[f.name]
-                cols.append(
-                    pa.array(vals, f.type) if vals
-                    else pa.nulls(len(doc_idx), f.type)
-                )
-            cols += [batch.column(2 + j).take(take) for j in range(n_pass)]
-            yield pa.RecordBatch.from_arrays(
-                cols, names=[id_name or id_col, *names, *passthrough_cols]
-            )
+    def emit(out: dict, html) -> int:
+        parsed, err = decode_and_parse(html, decode, max_nodes, max_depth)
+        for e in emitters:
+            n = e(out, parsed, err)
+        return n
 
-    pruned = df.select(
-        F.col(id_col), F.col(html_col), *[F.col(c) for c in passthrough_cols]
+    id_out = id_name or id_col
+    rows = map_rows(
+        df, [F.col(id_col).alias(id_out), *passthrough_cols], [html_col],
+        emit, schema,
     )
-    in_fields = pruned.schema.fields
-    out_type = StructType(
-        [StructField(id_name or id_col, in_fields[0].dataType)]
-        + from_arrow_schema(schema).fields
-        + [StructField(f.name, f.dataType) for f in in_fields[2:]]
-    )
-    return pruned.mapInArrow(fn, out_type)
+    if passthrough_cols:
+        return rows.select(id_out, *schema.names, *passthrough_cols)
+    return rows
 
 
 def emit_error(out: dict, parsed, err) -> int:

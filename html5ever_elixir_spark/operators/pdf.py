@@ -2,65 +2,63 @@
 pipeline mandate; not in the HTML-only reference).
 
 Same execution model as the HTML path (``operators/parse.py``): one
-``mapInArrow`` call per Arrow batch, binary payloads end-to-end, 2-column
-pruned input, row-level errors (out-of-scope PDFs become an ``error``
-value, never a job failure).
+:func:`~.map_rows` stage (one Python call per Arrow batch), binary
+payloads end-to-end, row-level errors (out-of-scope PDFs become an
+``error`` value, never a job failure).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..parser.pdf import PdfError, extract_pdf_text, make_simple_pdf
-
-PDF_PARSED_FIELDS = (
-    "doc_id bigint, error string, text string, n_pages bigint, n_bytes bigint"
+from . import map_rows
+from ..parser.pdf import (
+    _UCS2_CMAP_NAMES,
+    PdfError,
+    encrypt_pdf_aes,
+    encrypt_pdf_aes256,
+    encrypt_pdf_rc4,
+    extract_pdf_text,
+    make_cid_pdf,
+    make_simple_pdf,
+    make_ucs2_pdf,
 )
+
+# the columns after doc_id of pdf_extract
+PDF_PARSED_FIELDS = pa.schema([
+    ("error", pa.string()), ("text", pa.string()), ("n_pages", pa.int64()),
+    ("n_bytes", pa.int64()),
+])
 
 
 def pdf_extract(
     df: DataFrame, id_col: str = "doc_id", pdf_col: str = "pdf"
 ) -> DataFrame:
-    """pdfs(id, pdf binary) → (doc_id, error, text, n_pages, n_bytes)."""
+    """pdfs(id, pdf binary) → (doc_id, error, text, n_pages, n_bytes).
+    A ``PdfError`` (null payload included) is the row's ``error``."""
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            pdfs = batch.column(1).to_pylist()
-            out = {"doc_id": ids, "error": [], "text": [],
-                   "n_pages": [], "n_bytes": []}
-            for p in pdfs:
-                out["n_bytes"].append(len(p) if p is not None else 0)
-                try:
-                    if p is None:
-                        raise PdfError("null payload")
-                    text, n_pages = extract_pdf_text(p)
-                except PdfError as e:
-                    out["error"].append(str(e))
-                    out["text"].append(None)
-                    out["n_pages"].append(None)
-                    continue
-                out["error"].append(None)
-                out["text"].append(text)
-                out["n_pages"].append(n_pages)
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema([
-                    ("doc_id", pa.int64()), ("error", pa.string()),
-                    ("text", pa.string()), ("n_pages", pa.int64()),
-                    ("n_bytes", pa.int64()),
-                ]),
-            )
+    def emit(out, p) -> int:
+        try:
+            if p is None:
+                raise PdfError("null payload")
+            text, n_pages = extract_pdf_text(p)
+            err = None
+        except PdfError as e:
+            text, n_pages, err = None, None, str(e)
+        out["error"].append(err)
+        out["text"].append(text)
+        out["n_pages"].append(n_pages)
+        out["n_bytes"].append(len(p) if p is not None else 0)
+        return 1
 
-    pruned = df.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        F.col(pdf_col).alias("pdf"),
+    return map_rows(
+        df, [F.col(id_col).cast("bigint").alias("doc_id")], [pdf_col], emit,
+        PDF_PARSED_FIELDS,
     )
-    return pruned.mapInArrow(fn, PDF_PARSED_FIELDS)
 
 
 def docs_to_pdfs(
@@ -101,69 +99,42 @@ def docs_to_pdfs(
     cycling the four public Adobe families by (doc_id // k) % 4; the
     reader decodes the 2-byte UCS-2 codes without external data, so
     the unchanged oracle gates this path too. Checked BEFORE
-    ``cid_every`` where residues overlap (deterministic either way)."""
+    ``cid_every`` where residues overlap (deterministic either way).
+    A writer failure gives a null ``pdf``, which :func:`pdf_extract`
+    turns into a row-level error."""
+    aes256_fid = hashlib.md5(b"aes256-corpus").digest()
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import hashlib
+    def emit(out, did, t) -> int:
+        words = (t or "").split(" ")
+        lines = [
+            " ".join(words[i : i + words_per_line])
+            for i in range(0, len(words), words_per_line)
+        ]
+        try:
+            if ucs2_every and did is not None and did % ucs2_every == 2:
+                pdf = make_ucs2_pdf(
+                    lines, _UCS2_CMAP_NAMES[(did // ucs2_every) % 4]
+                )
+            elif cid_every and did is not None and did % cid_every == 1:
+                pdf = make_cid_pdf(lines)
+            else:
+                pdf = make_simple_pdf(lines)
+            if encrypt_every and did is not None and did % encrypt_every == 0:
+                fid = hashlib.md5(str(did).encode()).digest()
+                cycle = (did // encrypt_every) % 3
+                if cycle == 0:
+                    pdf = encrypt_pdf_rc4(pdf, file_id=fid)
+                elif cycle == 1:
+                    pdf = encrypt_pdf_aes(pdf, file_id=fid)
+                else:
+                    pdf = encrypt_pdf_aes256(pdf, file_id=aes256_fid)
+        except Exception:
+            pdf = None
+        out["pdf"].append(pdf)
+        return 1
 
-        from ..parser.pdf import (
-            _UCS2_CMAP_NAMES,
-            encrypt_pdf_aes,
-            encrypt_pdf_aes256,
-            encrypt_pdf_rc4,
-            make_cid_pdf,
-            make_ucs2_pdf,
-        )
-
-        aes256_fid = hashlib.md5(b"aes256-corpus").digest()
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            pdfs = []
-            for did, t in zip(ids, texts):
-                words = (t or "").split(" ")
-                lines = [
-                    " ".join(words[i : i + words_per_line])
-                    for i in range(0, len(words), words_per_line)
-                ]
-                try:
-                    if ucs2_every and did is not None \
-                            and did % ucs2_every == 2:
-                        pdf = make_ucs2_pdf(
-                            lines,
-                            _UCS2_CMAP_NAMES[(did // ucs2_every) % 4],
-                        )
-                    elif cid_every and did is not None \
-                            and did % cid_every == 1:
-                        pdf = make_cid_pdf(lines)
-                    else:
-                        pdf = make_simple_pdf(lines)
-                    if encrypt_every and did is not None \
-                            and did % encrypt_every == 0:
-                        fid = hashlib.md5(str(did).encode()).digest()
-                        cycle = (did // encrypt_every) % 3
-                        if cycle == 0:
-                            pdf = encrypt_pdf_rc4(pdf, file_id=fid)
-                        elif cycle == 1:
-                            pdf = encrypt_pdf_aes(pdf, file_id=fid)
-                        else:
-                            pdf = encrypt_pdf_aes256(
-                                pdf, file_id=aes256_fid
-                            )
-                    pdfs.append(pdf)
-                except Exception:
-                    # writer failure → null payload → pdf_extract emits
-                    # a row-level error, never a job failure
-                    pdfs.append(None)
-            yield pa.RecordBatch.from_pydict(
-                {"doc_id": ids, "pdf": pdfs},
-                schema=pa.schema(
-                    [("doc_id", pa.int64()), ("pdf", pa.binary())]
-                ),
-            )
-
-    pruned = docs.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        F.col(text_col).alias("text"),
+    did = F.col(id_col).cast("bigint")
+    return map_rows(
+        docs, [did.alias("doc_id")], [did, text_col], emit,
+        pa.schema([("pdf", pa.binary())]),
     )
-    return pruned.mapInArrow(fn, "doc_id bigint, pdf binary")

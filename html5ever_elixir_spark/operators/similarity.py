@@ -106,7 +106,10 @@ def srp_bucket_ann(
     strings are distinct, a neighbor has one bucket) — no dedup needed.
 
     Pass ``dim`` explicitly when known (schema metadata / config) —
-    the ``None`` fallback peeks at one row, a driver-side action.
+    the ``None`` fallback peeks at the first non-null vector, a
+    driver-side action, and takes ``dim = 1`` when there is none (a
+    null vector's projections are null, so every row lands in the
+    all-zeros bucket whatever ``dim`` is).
 
     Each hyperplane is an ``array<double>`` LITERAL and the dot product
     is ``aggregate(zip_with(v, plane, *), 0d, +)`` — a single constant
@@ -115,7 +118,8 @@ def srp_bucket_ann(
     terms: 12k-65k codegen terms at real embedding dims 768-4096).
     """
     if dim is None:
-        dim = len(emb.select(vec_col).first()[0])
+        first = emb.select(vec_col).where(F.col(vec_col).isNotNull()).first()
+        dim = len(first[0]) if first is not None else 1
 
     def dot_expr(col, p):
         plane = "array(" + ", ".join(

@@ -5,10 +5,13 @@ row-local, zero shuffle) with DuckDB oracle mirrors.
 
 from __future__ import annotations
 
+import unicodedata
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from . import release_checkpoint
+from . import map_rows, release_checkpoint
 
 # small deterministic stopword marker lists (heuristic language-ID)
 LANG_MARKERS = {
@@ -658,6 +661,12 @@ FROM s2
 """
 
 
+_NFC_SCHEMA = pa.schema([
+    ("text_nfc", pa.string()), ("changed", pa.bool_()),
+    ("n_chars_before", pa.int64()), ("n_chars_after", pa.int64()),
+])
+
+
 def nfc_normalize_docs(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -666,56 +675,29 @@ def nfc_normalize_docs(
     text arrives from the crawl as both 'é' and 'e'+COMBINING ACUTE;
     unnormalized, exact dedup misses them and tokenizers fragment).
 
-    Runs via ``mapInArrow`` (Spark SQL has no unicode-normalize
-    builtin): batch-wise Python ``unicodedata.normalize`` — vectorized
-    Arrow transfer, no per-row UDF; 2-column pruned input; row-local,
-    zero shuffle, embarrassingly parallel at any scale. The DuckDB
-    oracle uses utf8proc's independent ``nfc_normalize`` — a
+    Runs as one :func:`map_rows` stage (Spark SQL has no
+    unicode-normalize builtin): batch-wise Python
+    ``unicodedata.normalize`` — vectorized Arrow transfer, no per-row
+    UDF; row-local, zero shuffle, embarrassingly parallel at any scale.
+    The DuckDB oracle uses utf8proc's independent ``nfc_normalize`` — a
     differential gate, not a mirror of our own code.
-    Output (doc_id, text_nfc, changed, n_chars_before, n_chars_after).
+    Output (doc_id, text_nfc, changed, n_chars_before, n_chars_after);
+    a null text gives nulls.
     """
-    from typing import Iterator
 
-    import pyarrow as pa
+    def emit(out, t) -> int:
+        if t is None:
+            row = (None, None, None, None)
+        else:
+            norm = unicodedata.normalize("NFC", t)
+            row = (norm, norm != t, len(t), len(norm))
+        for k, v in zip(_NFC_SCHEMA.names, row):
+            out[k].append(v)
+        return 1
 
-    def fn(batches: "Iterator[pa.RecordBatch]") -> "Iterator[pa.RecordBatch]":
-        import unicodedata
-
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            out = {"doc_id": ids, "text_nfc": [], "changed": [],
-                   "n_chars_before": [], "n_chars_after": []}
-            for t in texts:
-                if t is None:
-                    out["text_nfc"].append(None)
-                    out["changed"].append(None)
-                    out["n_chars_before"].append(None)
-                    out["n_chars_after"].append(None)
-                    continue
-                norm = unicodedata.normalize("NFC", t)
-                out["text_nfc"].append(norm)
-                out["changed"].append(norm != t)
-                out["n_chars_before"].append(len(t))
-                out["n_chars_after"].append(len(norm))
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema([
-                    ("doc_id", pa.int64()), ("text_nfc", pa.string()),
-                    ("changed", pa.bool_()),
-                    ("n_chars_before", pa.int64()),
-                    ("n_chars_after", pa.int64()),
-                ]),
-            )
-
-    pruned = docs.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        F.col(text_col).alias("text"),
-    )
-    return pruned.mapInArrow(
-        fn,
-        "doc_id bigint, text_nfc string, changed boolean, "
-        "n_chars_before bigint, n_chars_after bigint",
+    return map_rows(
+        docs, [F.col(id_col).cast("bigint").alias("doc_id")], [text_col],
+        emit, _NFC_SCHEMA,
     )
 
 
@@ -1439,25 +1421,14 @@ def fix_mojibake(
     at 100 TB this rides the same scan as the other row-local text
     gates. ``n_passes`` = how many decode layers were peeled (0 =
     clean; 2 = the doubly-encoded case)."""
-    import pyarrow as pa
 
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            texts = batch.column(1).to_pylist()
-            fixed, np_ = [], []
-            for t in texts:
-                f, n = fix_mojibake_text(t or "", max_passes)
-                fixed.append(f)
-                np_.append(n)
-            yield pa.RecordBatch.from_pydict(
-                {id_col: ids, "text_fixed": fixed, "n_passes": np_},
-                schema=pa.schema([
-                    (id_col, pa.int64()), ("text_fixed", pa.string()),
-                    ("n_passes", pa.int64()),
-                ]),
-            )
+    def emit(out, t) -> int:
+        fixed, n = fix_mojibake_text(t or "", max_passes)
+        out["text_fixed"].append(fixed)
+        out["n_passes"].append(n)
+        return 1
 
-    return docs.select(id_col, text_col).mapInArrow(
-        fn, f"{id_col} bigint, text_fixed string, n_passes bigint"
+    return map_rows(
+        docs, [F.col(id_col).cast("bigint").alias(id_col)], [text_col], emit,
+        pa.schema([("text_fixed", pa.string()), ("n_passes", pa.int64())]),
     )

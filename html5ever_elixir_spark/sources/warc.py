@@ -27,6 +27,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 
+from ..operators import map_rows
+
 PAGES_FIELDS = (
     "url string, warc_ts string, html binary, warc_id bigint, "
     "http_status int, error string"
@@ -537,51 +539,40 @@ def wet_to_text(
 ) -> DataFrame:
     """(wet_id, content binary) → one row per WET conversion record
     (url, warc_ts string, text string, wet_id, error). The read-side
-    of the extraction interchange format :func:`make_wet` writes; the
-    same rolling record walk as :func:`warc_to_pages` (O(one record)
-    memory at GiB blob scale), a broken blob yields ONE error row
-    carrying its wet_id. Response records inside a mixed blob are
-    skipped (this reader wants extracted text, not raw captures)."""
+    of the extraction interchange format :func:`make_wet` writes,
+    walking each blob record by record like :func:`warc_to_pages`. A
+    broken (or null) blob yields ONE error row carrying its wet_id.
+    Response records inside a mixed blob are skipped (this reader wants
+    extracted text, not raw captures). Memory: one :func:`map_rows`
+    output batch per input Arrow batch, so a task holds every text
+    record of one input batch of blobs until that batch ends — unlike
+    :func:`warc_to_pages`, whose output flushes by size, this is not
+    O(one record) at GiB blob scale."""
     import pyarrow as pa
     from pyspark.sql import functions as F
 
-    schema = pa.schema([
-        ("url", pa.string()), ("warc_ts", pa.string()),
-        ("text", pa.string()), ("wet_id", pa.int64()),
-        ("error", pa.string()),
-    ])
+    names = ("url", "warc_ts", "text", "error")
 
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids = batch.column(0).to_pylist()
-            blobs = batch.column(1).to_pylist()
-            out = {"url": [], "warc_ts": [], "text": [], "wet_id": [],
-                   "error": []}
-            for wid, blob in zip(ids, blobs):
-                try:
-                    if blob is None:
-                        raise WarcError("null payload")
-                    for rec in parse_warc_records(blob, conversion=True):
-                        if "text" not in rec:
-                            continue  # response records: not our format
-                        out["url"].append(rec["url"])
-                        out["warc_ts"].append(rec["date"])
-                        out["text"].append(rec["text"])
-                        out["wet_id"].append(wid)
-                        out["error"].append(None)
-                except WarcError as e:
-                    out["url"].append(None)
-                    out["warc_ts"].append(None)
-                    out["text"].append(None)
-                    out["wet_id"].append(wid)
-                    out["error"].append(str(e))
-            yield pa.RecordBatch.from_pydict(out, schema=schema)
+    def emit(out, blob) -> int:
+        n = 0
+        try:
+            if blob is None:
+                raise WarcError("null payload")
+            for rec in parse_warc_records(blob, conversion=True):
+                if "text" not in rec:
+                    continue  # response records: not our format
+                row = (rec["url"], rec["date"], rec["text"], None)
+                for k, v in zip(names, row):
+                    out[k].append(v)
+                n += 1
+        except WarcError as e:
+            # the records walked before the break keep their rows
+            for k, v in zip(names, (None, None, None, str(e))):
+                out[k].append(v)
+            n += 1
+        return n
 
-    pruned = df.select(
-        F.col(id_col).cast("bigint").alias("wet_id"),
-        F.col(content_col).alias("content"),
-    )
-    return pruned.mapInArrow(
-        fn, "url string, warc_ts string, text string, wet_id bigint, "
-        "error string"
-    )
+    return map_rows(
+        df, [F.col(id_col).cast("bigint").alias("wet_id")], [content_col],
+        emit, pa.schema([(k, pa.string()) for k in names]),
+    ).select("url", "warc_ts", "text", "wet_id", "error")

@@ -80,6 +80,31 @@ def test_normalize_zero_vector_null_both_engines(spark):
     assert d[1][1] == 0.0 and d[1][2] is None
 
 
+# -- similarity.srp_bucket_ann: degenerate input, dim inferred ---------------
+
+@pytest.mark.parametrize("rows, n_out", [
+    ([], 0),
+    # the first row's vector is null: dim comes from the first non-null
+    ([(0, None), (1, [1.0, 2.0]), (2, [1.5, 2.5])], 2),
+    # no vector at all: 3 queries x 2 null-sim neighbours in one bucket
+    ([(0, None), (1, None), (2, None)], 6),
+], ids=["empty", "null_first", "all_null"])
+def test_srp_degenerate_input_matches_oracle(spark, rows, n_out):
+    from html5ever_elixir_spark.operators.similarity import (
+        oracle_srp_sql,
+        srp_bucket_ann,
+    )
+
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    got = sorted(tuple(r) for r in srp_bucket_ann(emb, k=2).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding FLOAT[])")
+    if rows:
+        con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+    ora = sorted(con.execute(oracle_srp_sql(k=2, dim=2)).fetchall())
+    assert got == ora and len(got) == n_out
+
+
 # -- similarity.srp_bucket_ann: plan stays small at real embedding dims -----
 
 def test_srp_bucket_ann_dim512_compiles_fast(spark):

@@ -157,3 +157,40 @@ def test_stage_output_schema_is_pinned(spark, sf_dir, name):
     ]
     # every field of every pinned stage is nullable
     assert got == [(n, t, True) for n, t in PINNED[name]]
+
+
+@pytest.mark.parametrize("batch", [1, 512])
+def test_map_rows_kernel(spark, batch):
+    import pyarrow as pa
+
+    from html5ever_elixir_spark.operators import map_rows
+
+    # "n" is both a key and a value; a row emits n rows (0, 1 or 3)
+    df = spark.createDataFrame(
+        [("a", 0), ("b", 1), ("c", 3)], "k string, n bigint"
+    )
+
+    def emit(out, n) -> int:
+        out["i"].extend(range(n))
+        return n
+
+    schema = pa.schema([("i", pa.int64()), ("unset", pa.string())])
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(batch))
+    try:
+        got = map_rows(df, ["k", "n"], ["n"], emit, schema)
+        rows = sorted(tuple(r) for r in got.collect())
+        empty = map_rows(df.limit(0), ["k", "n"], ["n"], emit, schema)
+        assert empty.collect() == []
+    finally:
+        spark.conf.set(key, old)
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+        ("k", "string"), ("n", "bigint"), ("i", "bigint"), ("unset", "string"),
+    ]
+    # no emit appended to "unset": it comes out all null
+    assert rows == [
+        ("b", 1, 0, None), ("c", 3, 0, None), ("c", 3, 1, None),
+        ("c", 3, 2, None),
+    ]
+    assert empty.schema == got.schema

@@ -1,20 +1,34 @@
-"""Static guard for the one-HTML-document-kernel rule: every
+"""Static guards for the kernel rules. Every row-local Python batch
+stage is one ``emit`` over ``operators.map_rows``, and every
 per-document HTML operator is an emitter list over
-``operators.parse.map_documents``. Parsing goes through the kernel's
-``decode_and_parse`` and no HTML operator runs its own ``mapInArrow``
-loop. Pure ``ast`` scan, no Spark."""
+``operators.parse.map_documents``, whose ``decode_and_parse`` is the
+only place that parses. Pure ``ast`` scan, no Spark."""
 
 import ast
+import os
 import pathlib
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "html5ever_elixir_spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "html5ever_elixir_spark"
 SCANNED = sorted(
-    p for d in ("operators", "functions") for p in (PKG / d).glob("*.py")
-)
+    p
+    for d in ("operators", "functions", "sources", "plans", "streaming")
+    for p in (PKG / d).glob("*.py")
+) + [ROOT / "__spark_entry__.py"]
 KERNEL = PKG / "operators" / "parse.py"
-# importing any of these makes a module an HTML operator module
-HTML_MODULES = {"api", "dom", "encoding", "extract", "tokenizer",
-                "treebuilder", "parse", "select", "tables", "markdown"}
+# the calls that make a Python batch stage of their own
+BATCH_CALLS = ("mapInArrow", "mapInPandas", "from_pydict", "from_pylist")
+# (file, outermost enclosing function, call): the row kernel, plus the
+# three stages that are not row-local — the WARC walk flushes its output
+# by size for GiB blobs, and the two IVF trainers aggregate a whole
+# sample in one task
+BATCH_STAGES = {
+    ("operators/__init__.py", "map_rows", "mapInArrow"),
+    ("sources/warc.py", "warc_to_pages", "mapInArrow"),
+    ("sources/warc.py", "_records_fn", "from_pydict"),
+    ("operators/similarity.py", "ivf_assign", "mapInPandas"),
+    ("operators/similarity.py", "ivf_pq_topk", "mapInPandas"),
+}
 
 
 def _scopes(tree):
@@ -37,14 +51,6 @@ def _called(node, name):
     )
 
 
-def _is_html_module(tree):
-    for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom) and node.module and node.level:
-            if node.module.split(".")[-1] in HTML_MODULES:
-                return True
-    return False
-
-
 def test_parse_document_only_in_kernel_helper():
     offenders = []
     for path in SCANNED:
@@ -56,22 +62,15 @@ def test_parse_document_only_in_kernel_helper():
     assert offenders == []
 
 
-def test_html_operators_have_no_own_arrow_loop():
-    kernel_calls = 0
-    offenders = []
+def test_batch_stages_only_on_allowlist():
+    found = set()
     for path in SCANNED:
-        tree = ast.parse(path.read_text())
-        html = _is_html_module(tree)
-        for node, fn in _scopes(tree):
-            if _called(node, "mapInArrow"):
-                if path == KERNEL and fn == "map_documents":
-                    kernel_calls += 1
-                elif html:
-                    offenders.append(f"{path.name}:{node.lineno} in {fn}")
-            if html and _called(node, "from_pylist"):
-                offenders.append(f"{path.name}:{node.lineno} row-dict path")
-    assert offenders == []
-    assert kernel_calls == 1
+        rel = os.path.relpath(path, PKG)
+        for node, fn in _scopes(ast.parse(path.read_text())):
+            found.update(
+                (rel, fn, call) for call in BATCH_CALLS if _called(node, call)
+            )
+    assert found == BATCH_STAGES
 
 
 def test_page_operators_do_not_rejoin_flat_nodes():

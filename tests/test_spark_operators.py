@@ -157,15 +157,20 @@ def test_wet_reader_skips_response_records_and_flags_bad_blobs(spark):
         [("https://a/raw", "2024-01-01T00:00:00Z", b"<html>x</html>")]
     ) + make_wet([("https://a/wet", "2024-01-01T00:00:01Z", "clean text")])
     df = spark.createDataFrame(
-        [(0, bytearray(mixed)), (1, bytearray(b"not a warc at all"))],
+        [(0, bytearray(mixed)), (1, bytearray(b"not a warc at all")),
+         (2, None)],
         "wet_id long, content binary",
     )
     out = wet_to_text(df).collect()
     ok = [r for r in out if r.wet_id == 0]
     bad = [r for r in out if r.wet_id == 1]
+    null = [r for r in out if r.wet_id == 2]
     # response record skipped silently; only the conversion row emerges
     assert [(r.url, r.text) for r in ok] == [("https://a/wet", "clean text")]
     assert len(bad) == 1 and bad[0].error is not None and bad[0].url is None
+    assert [(r.url, r.text, r.error) for r in null] == [
+        (None, None, "null payload")
+    ]
 
 
 # ---------------------------------------------------------------------------
