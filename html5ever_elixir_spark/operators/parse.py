@@ -5,7 +5,7 @@ Execution model: :func:`map_documents` is the one HTML document kernel.
 Every per-document HTML operator (here, ``select``, ``tables``,
 ``markdown``, and via :func:`page_rows` ``graph.link_edges``,
 ``metadata`` and ``outline``) is a list of emitters over its single
-``mapInArrow`` stage — one Python call per Arrow batch, zero per-row
+:func:`~.map_rows` stage — one Python call per Arrow batch, zero per-row
 dispatch (the analog of the reference's one dirty-CPU NIF call per
 document, ``lib.rs:24,:43``; Arrow zero-copy replaces the BEAM term-copy
 avoidance of ``CHANGELOG.md:176-178``). Column pruning happens *before*
@@ -162,13 +162,10 @@ def map_documents(
         return n
 
     id_out = id_name or id_col
-    rows = map_rows(
+    return map_rows(
         df, [F.col(id_col).alias(id_out), *passthrough_cols], [html_col],
         emit, schema,
-    )
-    if passthrough_cols:
-        return rows.select(id_out, *schema.names, *passthrough_cols)
-    return rows
+    ).select(id_out, *schema.names, *passthrough_cols)
 
 
 def emit_error(out: dict, parsed, err) -> int:
