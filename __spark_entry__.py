@@ -863,8 +863,11 @@ def _q_media_jpeg_roundtrip(spark, sf_dir):
         vals = t.encode("utf-8")
         jp = encode_jpeg_gray_blocks(
             vals,
-            restart_interval=7 if did % 3 == 0 and did % 5 != 0 else 0,
-            progressive=did % 5 == 0,
+            restart_interval=(
+                7 if did is not None and did % 3 == 0 and did % 5 != 0
+                else 0
+            ),
+            progressive=did is not None and did % 5 == 0,
         )
         w, h, px = _decode_raster(jp)
         rt = bytes(px[3 * w + 8 * i + 3] for i in range(len(vals)))

@@ -14,8 +14,8 @@ is kept as a literal (matching the many parsers that predate the RFC);
 extending the matcher to wildcards would move the match from
 ``startswith`` to an anchored regex on both engines.
 
-Scale shape: robots bodies parse in a vectorized Arrow batch (one row
-per host — tiny relative to the page corpus), the rule table joins
+Scale shape: robots bodies parse in one row-kernel stage (one row per
+host — tiny relative to the page corpus), the rule table joins
 pages on the uniform ``host`` key (size-gated: no broadcast hint by
 default, AQE promotes the normally-tiny rule side), and the
 longest-match argmax is an integer ``max`` per url — scalar agg state,
@@ -24,12 +24,11 @@ no window, no list.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-from pyspark.sql.functions import pandas_udf
+
+from ..operators import map_rows
 
 __all__ = ["parse_robots_body", "robots_rules", "apply_robots", "path_of"]
 
@@ -81,27 +80,21 @@ def robots_rules(
     body_col: str = "robots_txt",
     agent: str = "*",
 ) -> DataFrame:
-    """(host, robots_txt) → exploded rule table (host, allow boolean,
-    prefix string). Hosts whose file yields no applicable rule emit no
-    rows (allow-all by default at apply time)."""
+    """(host, robots_txt) → rule table (host, allow boolean, prefix
+    string), one row per rule. Hosts whose file yields no applicable
+    rule emit no rows (allow-all by default at apply time). One
+    :func:`map_rows` stage."""
 
-    @pandas_udf("array<struct<allow:boolean,prefix:string>>")
-    def _rules(bodies: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in bodies:
-            yield s.map(
-                lambda b: [
-                    {"allow": a, "prefix": p}
-                    for a, p in parse_robots_body(b, agent)
-                ]
-            )
+    def emit(out, body) -> int:
+        rules = parse_robots_body(body, agent)
+        for allow, prefix in rules:
+            out["allow"].append(allow)
+            out["prefix"].append(prefix)
+        return len(rules)
 
-    return (
-        robots.select(
-            F.col(host_col).alias("host"),
-            F.explode(_rules(F.col(body_col))).alias("r"),
-        )
-        .select("host", F.col("r.allow").alias("allow"),
-                F.col("r.prefix").alias("prefix"))
+    return map_rows(
+        robots, [F.col(host_col).alias("host")], [body_col], emit,
+        pa.schema([("allow", pa.bool_()), ("prefix", pa.string())]),
     )
 
 

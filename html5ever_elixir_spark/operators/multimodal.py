@@ -403,14 +403,15 @@ def docs_to_gifs(
     """Deterministic synthetic GIF corpus from the documents table
     (driver gate for the pure-Python GIF decoder — no external data):
     each doc's ASCII text becomes a 1×len grayscale GIF whose pixel
-    bytes are the character codes. Odd doc_ids get bare GIF87a; even
-    ones GIF89a with graphic-control + comment extension blocks, so the
+    bytes are the character codes. Odd and null doc_ids get bare GIF87a;
+    even ones GIF89a with graphic-control + comment extension blocks, so the
     driver row exercises both version paths and the extension skip.
     One :func:`map_rows` stage, binary out."""
 
     def emit(out, did, t) -> int:
         px = (t or "").encode("utf-8")
-        version, exts = (b"89a", _GIF_EXTS) if did % 2 == 0 else (b"87a", b"")
+        even = did is not None and did % 2 == 0
+        version, exts = (b"89a", _GIF_EXTS) if even else (b"87a", b"")
         out["payload"].append(encode_gif(px, len(px), 1, version, exts))
         return 1
 
@@ -435,7 +436,10 @@ def docs_to_webps(
     def emit(out, did, t) -> int:
         px = (t or "").encode("utf-8")
         out["payload"].append(
-            encode_webp_vp8l(px, len(px), 1, subtract_green=(did % 2 == 0))
+            encode_webp_vp8l(
+                px, len(px), 1,
+                subtract_green=did is not None and did % 2 == 0,
+            )
         )
         return 1
 
@@ -2587,9 +2591,9 @@ def docs_to_dhash_pnms(docs: DataFrame, grid_w: int = 8, grid_h: int = 8):
 
     def emit(out, did, t) -> int:
         vals = bytearray((t or "")[:n_px].ljust(n_px).encode())
-        if did % 11 == 0:
+        if did is not None and did % 11 == 0:
             vals[-1] += 1
-        if did % 2:
+        if did is not None and did % 2:
             # r9: 2x pixel doubling via strided slice assignment (C
             # speed) instead of a per-pixel generator — identical bytes
             up = bytearray()

@@ -15,8 +15,10 @@ compare/output so the DuckDB oracle hashes identically.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 _COS = (
     "aggregate(zip_with(a, b, (x, y) -> cast(x as double) * cast(y as double)), "
@@ -533,6 +535,82 @@ def _ivf_train_gate(k: int, train_frac: float, train_salt: str) -> str:
     return f"vec_id < {k} OR ({u}) < {float(train_frac)!r}"
 
 
+# the trained IVF model: kind 0 = coarse centroid (a = cid), kind 1 =
+# PQ codeword (a = subspace j, b = code)
+_MODEL = pa.schema([
+    ("kind", pa.int32()), ("a", pa.int64()), ("b", pa.int64()),
+    ("w", pa.list_(pa.float64())),
+])
+
+
+def _train_ivf(
+    v: DataFrame,
+    k_cells: int,
+    iters: int,
+    train_frac: float,
+    train_salt: str,
+    pq: tuple[int, int, int] | None = None,
+) -> DataFrame:
+    """The one IVF trainer: a single-task ``mapInArrow`` stage over the
+    hash-sampled rows of ``v`` (vec_id, v) that emits the model rows of
+    :data:`_MODEL` — the coarse Lloyd rounds, then, when ``pq`` =
+    ``(m, k_pq, pq_iters)`` is given, the m subspace codebooks.
+
+    This is the faiss layout: the quantizer trains on a bounded sample
+    on one node, and assignment stays distributed. The kernel
+    (:func:`_lloyd_rounds_local`) reproduces the unrolled-CTE oracle's
+    arithmetic bit-for-bit. Both gates (coarse seeds ids < k_cells, PQ
+    seeds ids < k_pq) are evaluated by Spark SQL, so the predicate is
+    the oracle's. For PQ the kernel re-derives each PQ-gated row's cell
+    under the trained centroids (the distributed 6dp argmin), takes the
+    exact residual and trains each subspace codebook on it, so the
+    whole model is one stage and one checkpoint. Without ``pq`` the PQ
+    gate is false and the stage reads only the coarse-gated rows."""
+    gate = lambda k: F.expr(_ivf_train_gate(k, train_frac, train_salt))  # noqa: E731
+    train_in = v.select(
+        "vec_id", "v",
+        gate(k_cells).alias("in_c"),
+        (gate(pq[1]) if pq else F.lit(False)).alias("in_p"),
+    ).where("in_c OR in_p")
+
+    def train(batches):
+        rows = sorted(
+            (r for b in batches
+             for r in zip(*(c.to_pylist() for c in b.columns))),
+            key=lambda r: r[0],
+        )
+        r6 = lambda x: _round_like_spark(x, 6)  # noqa: E731
+        r9 = lambda x: _round_like_spark(x, 9)  # noqa: E731
+        coarse = [(vid, vec) for vid, vec, ic, _ in rows if ic]
+        seeds = {vid: vec for vid, vec in coarse if vid < k_cells}
+        cents = _lloyd_rounds_local(coarse, seeds, iters, r6, r9)
+        clist = sorted(cents.items())
+        out = [(0, cid, 0, c) for cid, c in clist]
+        # an empty coarse sample trains no centroid: no row has a
+        # residual, as in the oracle's residual join
+        if pq and clist:
+            m, k_pq, pq_iters = pq
+            by_j = [[] for _ in range(m)]
+            for vid, vec, _, ip in rows:
+                if ip:
+                    c = cents[_nearest(vec, clist, r6)]
+                    r = [xi - ci for xi, ci in zip(vec, c)]
+                    sub = len(r) // m
+                    for j in range(m):
+                        by_j[j].append((vid, r[j * sub: (j + 1) * sub]))
+            for j, rows_j in enumerate(by_j):  # each vec_id-ordered
+                seeds_j = {vid: rv for vid, rv in rows_j if vid < k_pq}
+                cb = _lloyd_rounds_local(rows_j, seeds_j, pq_iters, r6, r9)
+                out.extend((1, j, code, cb[code]) for code in sorted(cb))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([o[i] for o in out], f.type)
+             for i, f in enumerate(_MODEL)],
+            schema=_MODEL,
+        )
+
+    return train_in.coalesce(1).mapInArrow(train, from_arrow_schema(_MODEL))
+
+
 def ivf_assign(
     emb: DataFrame,
     k: int = 8,
@@ -566,39 +644,9 @@ def ivf_assign(
     SQL-expressible: :func:`oracle_ivf_sql` unrolls the rounds with the
     identical gate predicate inside the train CTE."""
     v = _ivf_vectors(emb, id_col, vec_col)
-    train = v.where(F.expr(_ivf_train_gate(k, train_frac, train_salt)))
-
-    # r9: the Lloyd rounds run FUSED in one single-partition Python
-    # stage over the bounded hash-sample (the faiss layout exactly:
-    # the coarse quantizer trains on a sample on one node, assignment
-    # stays distributed). The former unrolled SQL build planned ~10
-    # small stages (2 exchanges + a broadcast per round) that dwarfed
-    # the actual arithmetic; the kernel (_lloyd_rounds_local)
-    # reproduces the SQL arithmetic bit-for-bit — 6dp-rounded
-    # left-fold L2 with cid tie-break, 9dp per-dim mean folded in
-    # vec_id order, Spark-identical HALF_UP rounding via
-    # Decimal(repr) — so the unrolled-CTE oracle and the driver gates
-    # (ann_ivf_cells: the full 500-row assignment) are unchanged.
-    def lloyd_fn(pdf_iter):
-        import pandas as pd
-
-        rows = []
-        for pdf in pdf_iter:
-            for vid, vec in zip(pdf["vec_id"], pdf["v"]):
-                rows.append((vid, [float(x) for x in vec]))
-        rows.sort(key=lambda r: r[0])
-        seeds = {vid: vec for vid, vec in rows if vid < k}
-        r6 = lambda x: _round_like_spark(x, 6)  # noqa: E731
-        r9 = lambda x: _round_like_spark(x, 9)  # noqa: E731
-        cents = _lloyd_rounds_local(rows, seeds, iters, r6, r9)
-        cids = sorted(cents)
-        if cids:  # an empty frame cannot carry the array<double> type
-            yield pd.DataFrame({"cid": cids, "c": [cents[c] for c in cids]})
-
-    cents = train.coalesce(1).mapInPandas(
-        lloyd_fn, "cid bigint, c array<double>"
-    )
-
+    cents = _train_ivf(v, k, iters, train_frac, train_salt).where(
+        "kind = 0"
+    ).select(F.col("a").alias("cid"), F.col("w").alias("c"))
     return (_assign_by_cents(v, cents), cents)
 
 
@@ -675,9 +723,8 @@ def ann_ivf_topk(
     )
     # cents has TWO consumers (the query-probe broadcast and the
     # full-corpus assignment lineage under `members`) — left lazy the
-    # single-task Lloyd kernel and its sample scan run once per
-    # consumer (plan showed the MapInPandas subtree twice). k rows;
-    # materialize once (the multi-consumer lineage invariant).
+    # single-task trainer and its sample scan run once per consumer.
+    # k rows; materialize once (the multi-consumer lineage invariant).
     cents = cents.localCheckpoint(eager=True)
     v = _ivf_vectors(emb, id_col, vec_col)
     assignment = _assign_by_cents(v, cents)
@@ -706,41 +753,40 @@ def ann_ivf_topk(
     )
 
 
-def oracle_ivf_sql(
-    table: str = "embeddings",
-    dim: int = 64,
-    k_cells: int = 8,
-    iters: int = 2,
-    n_queries: int | None = None,
-    k_top: int = 5,
-    nprobe: int = 2,
-    assignment_only: bool = False,
-    train_frac: float = 0.5,
-    train_salt: str = "h5ivf",
-) -> str:
-    """Unrolled-CTE DuckDB mirror of :func:`ivf_assign` /
-    :func:`ann_ivf_topk`: one (assign, recompute) CTE pair per Lloyd
-    round — run over the same hash-sampled train CTE as the Spark
-    build — identical 6dp/9dp rounding and tie-breaks, per-dim means
-    folded in vec_id order (list(... ORDER BY vec_id) + list_sum);
-    the final assignment CTE runs over the FULL corpus."""
-    if not assignment_only and n_queries is None:
-        raise ValueError(
-            "oracle_ivf_sql: n_queries is required unless "
-            "assignment_only=True (it bounds the probe CTE)"
-        )
-    l2 = (
+def _oracle_l2(dim: int) -> str:
+    """DuckDB 6dp-rounded left-fold squared L2 between ``v`` and ``c``."""
+    return (
         "round(list_sum(list_transform(range(1, {d} + 1), "
         "i -> (v[i] - c[i]) * (v[i] - c[i]))), 6)"
     ).format(d=dim)
-    gate = (
-        f"vec_id < {k_cells} OR "
+
+
+def _oracle_gate(k: int, train_frac: float, train_salt: str) -> str:
+    """DuckDB mirror of :func:`_ivf_train_gate`."""
+    return (
+        f"vec_id < {k} OR "
         f"cast(('0x' || substr(md5('{train_salt}' || vec_id::VARCHAR), 1, 8))"
         f"::BIGINT as double) / {float(1 << 32)} < {float(train_frac)!r}"
     )
+
+
+def _oracle_coarse_ctes(
+    table: str,
+    dim: int,
+    k_cells: int,
+    iters: int,
+    train_frac: float,
+    train_salt: str,
+) -> list[str]:
+    """The coarse build of both IVF oracles: ``v`` (the corpus), ``tv``
+    (the hash-sampled train rows), seeds ``c0``, one (``a{t}``,
+    ``c{t}``) assign/recompute pair per Lloyd round over ``tv``, and
+    the full-corpus assignment ``a{iters + 1}`` under ``c{iters}``."""
+    l2 = _oracle_l2(dim)
     ctes = [
         f"v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {table})",
-        f"tv AS (SELECT vec_id, v FROM v WHERE {gate})",
+        f"tv AS (SELECT vec_id, v FROM v WHERE "
+        f"{_oracle_gate(k_cells, train_frac, train_salt)})",
         f"c0 AS (SELECT vec_id AS cid, v AS c FROM v WHERE vec_id < {k_cells})",
     ]
     for t in range(1, iters + 2):
@@ -768,6 +814,36 @@ def oracle_ivf_sql(
   ) GROUP BY cid
 )"""
             )
+    return ctes
+
+
+def oracle_ivf_sql(
+    table: str = "embeddings",
+    dim: int = 64,
+    k_cells: int = 8,
+    iters: int = 2,
+    n_queries: int | None = None,
+    k_top: int = 5,
+    nprobe: int = 2,
+    assignment_only: bool = False,
+    train_frac: float = 0.5,
+    train_salt: str = "h5ivf",
+) -> str:
+    """Unrolled-CTE DuckDB mirror of :func:`ivf_assign` /
+    :func:`ann_ivf_topk`: one (assign, recompute) CTE pair per Lloyd
+    round — run over the same hash-sampled train CTE as the Spark
+    build — identical 6dp/9dp rounding and tie-breaks, per-dim means
+    folded in vec_id order (list(... ORDER BY vec_id) + list_sum);
+    the final assignment CTE runs over the FULL corpus."""
+    if not assignment_only and n_queries is None:
+        raise ValueError(
+            "oracle_ivf_sql: n_queries is required unless "
+            "assignment_only=True (it bounds the probe CTE)"
+        )
+    l2 = _oracle_l2(dim)
+    ctes = _oracle_coarse_ctes(
+        table, dim, k_cells, iters, train_frac, train_salt
+    )
     final_a = f"a{iters + 1}"
     if assignment_only:
         return ("WITH " + ",\n".join(ctes)
@@ -855,91 +931,12 @@ def ivf_pq_topk(
     sub = dim // m
     v = _ivf_vectors(emb, id_col, vec_col)
 
-    # r9 (second pass): coarse quantizer AND the m PQ codebooks train
-    # FUSED in ONE single-task Python stage over the union of the two
-    # hash-sample gates (coarse gate seeds ids < k_cells, PQ gate seeds
-    # ids < k_pq; both pure functions of vec_id, evaluated by Spark SQL
-    # so the predicate is bit-identical to the unrolled-CTE oracle's).
-    # The kernel runs the coarse Lloyd rounds, then locally re-derives
-    # the PQ-gated rows' cell assignment + residuals under the trained
-    # centroids (the same 6dp argmin / exact subtraction the
-    # distributed path uses) and trains each subspace codebook — so the
-    # former chain of separate barrier jobs (cents ckpt → assignment
-    # ckpt → rsub ckpt → cb train ckpt) collapses to ONE trained-model
-    # checkpoint + the assignment checkpoint. rsub loses its second
-    # consumer (PQ training) and is no longer materialized at all —
-    # at corpus scale that was N*m cached sub-vector rows. Values are
-    # unchanged (same arithmetic, same gates; hash-exact vs the frozen
-    # oracle at sf0.01 and sf0.1).
-    gate_c = _ivf_train_gate(k_cells, train_frac, train_salt)
-    gate_p = _ivf_train_gate(k_pq, train_frac, train_salt)
-    train_in = (
-        v.withColumn("in_c", F.expr(gate_c))
-        .withColumn("in_p", F.expr(gate_p))
-        .where("in_c OR in_p")
-    )
-
-    def fused_train_fn(pdf_iter):
-        import pandas as pd
-
-        rows = []
-        for pdf in pdf_iter:
-            for vid, vec, ic, ip in zip(
-                pdf["vec_id"], pdf["v"], pdf["in_c"], pdf["in_p"]
-            ):
-                rows.append(
-                    (int(vid), [float(x) for x in vec], bool(ic), bool(ip))
-                )
-        rows.sort(key=lambda r: r[0])
-        r6 = lambda x: _round_like_spark(x, 6)  # noqa: E731
-        r9 = lambda x: _round_like_spark(x, 9)  # noqa: E731
-        coarse = [(vid, vec) for vid, vec, ic, _ in rows if ic]
-        seeds = {vid: vec for vid, vec in coarse if vid < k_cells}
-        cents_d = _lloyd_rounds_local(coarse, seeds, iters, r6, r9)
-        clist = sorted(cents_d.items())
-        o_kind, o_a, o_b, o_w = [], [], [], []
-        for cid, c in clist:
-            o_kind.append(0)
-            o_a.append(cid)
-            o_b.append(0)
-            o_w.append(c)
-        # PQ: assign each PQ-gated row to its cell under the trained
-        # centroids (6dp-rounded left-fold L2, cid tie-break — exactly
-        # the distributed argmin), residual = exact subtraction, then
-        # per-subspace Lloyd over the vec_id-ordered members
-        by_j: dict = {}
-        for vid, vec, _, ip in rows:
-            # an empty coarse sample trains no centroid: the row has no
-            # residual, as in the oracle's residual join
-            if not ip or not clist:
-                continue
-            c = cents_d[_nearest(vec, clist, r6)]
-            r = [xi - ci for xi, ci in zip(vec, c)]
-            for j in range(m):
-                by_j.setdefault(j, []).append(
-                    (vid, r[j * sub: (j + 1) * sub])
-                )
-        for j in sorted(by_j):
-            rows_j = by_j[j]  # vec_id-ordered (rows was sorted)
-            seeds_j = {vid: rv for vid, rv in rows_j if vid < k_pq}
-            cbj = _lloyd_rounds_local(rows_j, seeds_j, pq_iters, r6, r9)
-            for code in sorted(cbj):
-                o_kind.append(1)
-                o_a.append(j)
-                o_b.append(code)
-                o_w.append(cbj[code])
-        if o_kind:  # an empty frame cannot carry the array<double> type
-            yield pd.DataFrame(
-                {"kind": o_kind, "a": o_a, "b": o_b, "w": o_w}
-            )
-
-    trained = train_in.coalesce(1).mapInPandas(
-        fused_train_fn, "kind int, a bigint, b bigint, w array<double>"
-    )
     # ONE trained-model materialization: cents (3 broadcast consumers)
     # and cb (2 broadcast consumers) are filters over this k + m*k_pq
     # row checkpoint
-    trained = trained.localCheckpoint(eager=True)
+    trained = _train_ivf(
+        v, k_cells, iters, train_frac, train_salt, pq=(m, k_pq, pq_iters)
+    ).localCheckpoint(eager=True)
     cents = trained.where("kind = 0").select(
         F.col("a").alias("cid"), F.col("w").alias("c")
     )
@@ -979,8 +976,8 @@ def ivf_pq_topk(
             )
         ).alias("s"),
     ).select("vec_id", F.col("s.j").alias("j"), F.col("s.rv").alias("rv"))
-    # rsub's only consumer is now the member encode (PQ training reads
-    # the raw sample inside the fused kernel) — no materialization
+    # rsub's only consumer is the member encode (PQ training reads the
+    # raw sample inside _train_ivf) — no materialization
 
     sub_l2 = _L2.replace("v, c", "rv, cw")
 
@@ -1074,55 +1071,17 @@ def oracle_ivf_pq_sql(
     hash-sampled train gate, the query LUT, and the j-ordered ADC
     fold."""
     sub = dim // m
-    l2 = (
-        "round(list_sum(list_transform(range(1, {d} + 1), "
-        "i -> (v[i] - c[i]) * (v[i] - c[i]))), 6)"
-    ).format(d=dim)
+    l2 = _oracle_l2(dim)
+
     def sub_l2(a: str, b: str) -> str:
         return (
             f"round(list_sum(list_transform(range(1, {sub} + 1), "
             f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i]))), 6)"
         )
 
-    def gate(k: int) -> str:
-        return (
-            f"vec_id < {k} OR "
-            f"cast(('0x' || substr(md5('{train_salt}' || vec_id::VARCHAR)"
-            f", 1, 8))::BIGINT as double) / {float(1 << 32)}"
-            f" < {float(train_frac)!r}"
-        )
-
-    ctes = [
-        f"v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM {table})",
-        f"tv AS (SELECT vec_id, v FROM v WHERE {gate(k_cells)})",
-        f"c0 AS (SELECT vec_id AS cid, v AS c FROM v "
-        f"WHERE vec_id < {k_cells})",
-    ]
-    for t in range(1, iters + 2):
-        prev = f"c{t - 1}"
-        src = "tv" if t <= iters else "v"
-        ctes.append(
-            f"""a{t} AS (
-  SELECT vec_id, v, cid FROM (
-    SELECT {src}.vec_id, {src}.v, {prev}.cid,
-           row_number() OVER (PARTITION BY {src}.vec_id
-                              ORDER BY {l2.replace('c[', prev + '.c[')}, {prev}.cid) AS rn
-    FROM {src}, {prev}
-  ) WHERE rn = 1
-)"""
-        )
-        if t <= iters:
-            ctes.append(
-                f"""c{t} AS (
-  SELECT cid, list(dimval ORDER BY d) AS c FROM (
-    SELECT cid, d,
-           round(list_sum(list(v[d] ORDER BY vec_id))
-                 / count(*), 9) AS dimval
-    FROM a{t}, range(1, {dim} + 1) t(d)
-    GROUP BY cid, d
-  ) GROUP BY cid
-)"""
-            )
+    ctes = _oracle_coarse_ctes(
+        table, dim, k_cells, iters, train_frac, train_salt
+    )
     cf, af = f"c{iters}", f"a{iters + 1}"
     ctes.append(
         f"""res AS (
@@ -1139,7 +1098,10 @@ def oracle_ivf_pq_sql(
   FROM res, range(0, {m}) t(j)
 )"""
     )
-    ctes.append(f"ptv AS (SELECT * FROM rsub WHERE {gate(k_pq)})")
+    ctes.append(
+        f"ptv AS (SELECT * FROM rsub WHERE "
+        f"{_oracle_gate(k_pq, train_frac, train_salt)})"
+    )
     ctes.append(
         f"p0 AS (SELECT j, vec_id AS code, rv AS cw FROM rsub "
         f"WHERE vec_id < {k_pq})"

@@ -327,37 +327,3 @@ def fragment_to_json(builder: TreeBuilder, attrs_as_maps: bool = False) -> str:
         ["#frag", _json_children(builder.fragment_root, attrs_as_maps)],
         separators=(",", ":"), ensure_ascii=False,
     )
-
-
-def flat_rows(doc: Node):
-    """Flat nodes as row dicts for the Spark ``nodes`` table (one row per
-    node; schema per FIXTURES.md §2). Iterative DFS in id-agnostic
-    document order; ``attrs_map`` is first-occurrence-wins."""
-    rows = []
-    stack = [doc]
-    while stack:
-        node = stack.pop()
-        t = node.type
-        attrs = None
-        attrs_map = None
-        if t == ELEMENT:
-            attrs = [{"name": n, "value": v} for n, v in node.attrs]
-            attrs_map = {}
-            for n, v in node.attrs:
-                if n not in attrs_map:
-                    attrs_map[n] = v
-        rows.append(
-            {
-                "node_id": node.id,
-                "parent_id": node.parent.id if node.parent is not None else None,
-                "children": [c.id for c in node.children],
-                "type": t,
-                "name": node.name,
-                "attrs": attrs,
-                "attrs_map": attrs_map,
-                "contents": node.contents,
-            }
-        )
-        if node.children:
-            stack.extend(reversed(node.children))
-    return rows

@@ -6,9 +6,12 @@ import duckdb
 import pytest
 
 from html5ever_elixir_spark.operators.similarity import (
+    ann_ivf_topk,
     cosine_topk,
+    ivf_assign,
     ivf_pq_topk,
     oracle_ivf_pq_sql,
+    oracle_ivf_sql,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -131,14 +134,24 @@ def test_degenerate_coarse_sample_matches_oracle(spark, first_id, n,
         for i in range(first_id, first_id + n)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    params = dict(dim=4, k_cells=2, m=2, k_pq=8, n_queries=30,
-                  train_frac=train_frac)
-    got = sorted(tuple(r) for r in ivf_pq_topk(emb, **params).collect())
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE embeddings AS SELECT * FROM (VALUES "
         + ", ".join(f"({i}, {v}::FLOAT[])" for i, v in rows)
         + ") t(vec_id, embedding)"
     )
-    ora = sorted(con.execute(oracle_ivf_pq_sql(**params)).fetchall())
-    assert got == ora == []
+
+    def check(frame, oracle):
+        got = sorted(tuple(r) for r in frame.collect())
+        assert got == sorted(con.execute(oracle).fetchall()) == []
+
+    coarse = dict(k_cells=2, train_frac=train_frac)
+    # the PQ path and the coarse-only path of the one trainer
+    params = dict(coarse, dim=4, m=2, k_pq=8, n_queries=30)
+    check(ivf_pq_topk(emb, **params), oracle_ivf_pq_sql(**params))
+    assignment, _ = ivf_assign(emb, k=2, train_frac=train_frac)
+    check(assignment, oracle_ivf_sql(dim=4, assignment_only=True, **coarse))
+    check(
+        ann_ivf_topk(emb, n_queries=30, **coarse),
+        oracle_ivf_sql(dim=4, n_queries=30, **coarse),
+    )

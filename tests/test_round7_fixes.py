@@ -25,11 +25,10 @@ def test_ivf_build_trains_on_hash_sample(spark):
     # the full corpus is still assigned (search side unchanged) …
     assert assignment.count() == n
     # … but the Lloyd recompute runs over the SAMPLED subset: the md5
-    # gate sits in the centroid lineage below the fused single-task
-    # Lloyd kernel (r9: MapInPandas replaced the unrolled collect_list
-    # SQL build; the sample-bounded-training invariant is unchanged)
+    # gate sits in the centroid lineage below the one single-task
+    # trainer (_train_ivf, a MapInArrow stage)
     plan = cents._jdf.queryExecution().optimizedPlan().toString()
-    assert "md5" in plan and "MapInPandas" in plan
+    assert "md5" in plan and "MapInArrow" in plan
     # the gate is a strict subset of the corpus (seeds always included)
     from pyspark.sql import functions as F
 

@@ -40,7 +40,15 @@ def _pages(spark):
     )
 
 
+def _robots(spark):
+    return spark.createDataFrame(
+        [("h", "User-agent: *\nDisallow: /x\nAllow: /x/y")],
+        "host string, robots_txt string",
+    )
+
+
 def _stage(name, spark, sf_dir):
+    from html5ever_elixir_spark.functions.robots import robots_rules
     from html5ever_elixir_spark.operators import multimodal, pdf, textstats
     from html5ever_elixir_spark.operators.parse import (
         flat_parse_nodes,
@@ -80,6 +88,7 @@ def _stage(name, spark, sf_dir):
             _pages(spark), passthrough_cols=("warc_ts", "n")
         ),
         "flat_parse_nodes": lambda: flat_parse_nodes(_pages(spark)),
+        "robots_rules": lambda: robots_rules(_robots(spark)),
     }[name]()
 
 
@@ -146,6 +155,7 @@ PINNED = {
         ("attrs", "array<struct<name:string,value:string>>"),
         ("attrs_map", "map<string,string>"), ("contents", _S),
     ],
+    "robots_rules": [("host", _S), ("allow", _B), ("prefix", _S)],
 }
 
 
@@ -194,3 +204,27 @@ def test_map_rows_kernel(spark, batch):
         ("c", 3, 2, None),
     ]
     assert empty.schema == got.schema
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["docs_to_gifs", "docs_to_webps", "docs_to_dhash_pnms",
+     "q:media_jpeg_roundtrip"],
+)
+def test_null_doc_id_takes_the_plain_branch(spark, tmp_path, name):
+    # the emitters pick a variant by doc_id parity; a null id picks
+    # none and its row comes out like any other, never a task failure
+    from html5ever_elixir_spark.operators import multimodal
+
+    docs = spark.createDataFrame(
+        [(None, "abc"), (2, "def")], "doc_id bigint, text string"
+    )
+    if name.startswith("q:"):
+        import __spark_entry__ as e
+
+        docs.write.parquet(str(tmp_path / "documents.parquet"))
+        out = e.queries()[name[2:]](spark, str(tmp_path))
+    else:
+        out = getattr(multimodal, name)(docs)
+    rows = out.collect()
+    assert sorted(r.media_id or 0 for r in rows) == [0, 2]

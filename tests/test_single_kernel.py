@@ -17,17 +17,26 @@ SCANNED = sorted(
 ) + [ROOT / "__spark_entry__.py"]
 KERNEL = PKG / "operators" / "parse.py"
 # the calls that make a Python batch stage of their own
-BATCH_CALLS = ("mapInArrow", "mapInPandas", "from_pydict", "from_pylist")
+BATCH_CALLS = (
+    "mapInArrow", "mapInPandas", "from_pydict", "from_pylist",
+    "pandas_udf", "applyInPandas", "applyInPandasWithState",
+)
 # (file, outermost enclosing function, call): the row kernel, plus the
-# three stages that are not row-local — the WARC walk flushes its output
-# by size for GiB blobs, and the two IVF trainers aggregate a whole
-# sample in one task
+# stages that are not row-local
 BATCH_STAGES = {
     ("operators/__init__.py", "map_rows", "mapInArrow"),
+    # the WARC walk flushes its output by size for GiB blobs
     ("sources/warc.py", "warc_to_pages", "mapInArrow"),
     ("sources/warc.py", "_records_fn", "from_pydict"),
-    ("operators/similarity.py", "ivf_assign", "mapInPandas"),
-    ("operators/similarity.py", "ivf_pq_topk", "mapInPandas"),
+    # the IVF trainer aggregates a whole sample in one task
+    ("operators/similarity.py", "_train_ivf", "mapInArrow"),
+    # SQL-registered scalar functions, called from SQL text
+    ("functions/sql_udfs.py", "register_all", "pandas_udf"),
+    # stateful: per-host sessions across micro-batches
+    ("streaming/ingest.py", "stream_host_sessions", "applyInPandasWithState"),
+    # group-level container builders: one WARC/WET file per group
+    ("../__spark_entry__.py", "_q_warc_extract", "applyInPandas"),
+    ("../__spark_entry__.py", "_q_warc_write_wet", "applyInPandas"),
 }
 
 
