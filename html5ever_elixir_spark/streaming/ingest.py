@@ -8,7 +8,9 @@ Deployment shape at scale: the file source is the landing zone of a
 crawler (one dir per warc dump); ``trigger=availableNow`` drains the
 backlog with bounded batches (maxFilesPerTrigger) and shuts down —
 the resumable-batch analog. A long-lived ``processingTime`` trigger
-serves the continuous mode; both share the same checkpoint.
+serves the continuous mode; both share the same checkpoint. Every
+stream ends in the one sink, :func:`_parquet_sink`, which makes that
+trigger choice.
 """
 
 from __future__ import annotations
@@ -22,6 +24,27 @@ from ..operators.parse import parse_and_extract
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
+
+
+def _parquet_sink(
+    df: DataFrame,
+    output_dir: str,
+    checkpoint_dir: str,
+    available_now: bool = True,
+):
+    """The one sink of every stream: append-mode parquet, exactly-once
+    via the checkpoint. ``available_now`` drains the backlog and stops;
+    otherwise a 30 s processing-time trigger runs continuously. Returns
+    the started StreamingQuery."""
+    writer = (
+        df.writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    if available_now:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime="30 seconds").start()
 
 
 def read_pages_stream(
@@ -47,17 +70,7 @@ def stream_extract(
     markdown column from the same single parse (batch-job parity)."""
     pages = read_pages_stream(spark, input_dir)
     parsed = parse_and_extract(pages, with_markdown=emit_markdown)
-    writer = (
-        parsed.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return _parquet_sink(parsed, output_dir, checkpoint_dir, available_now)
 
 
 SESSION_OUT_SCHEMA = (
@@ -153,17 +166,7 @@ def stream_host_sessions(
         "append",
         GroupStateTimeout.ProcessingTimeTimeout,
     )
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return _parquet_sink(sessions, output_dir, checkpoint_dir, available_now)
 
 
 def stream_host_window_metrics(
@@ -192,14 +195,7 @@ def stream_host_window_metrics(
             "host", "n_captures", "bytes_in",
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _parquet_sink(agg, output_dir, checkpoint_dir)
 
 
 def stream_dedup_ingest(
@@ -227,17 +223,7 @@ def stream_dedup_ingest(
         .dropDuplicatesWithinWatermark(["fp"])
         .drop("fp")
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return _parquet_sink(deduped, output_dir, checkpoint_dir, available_now)
 
 
 def stream_extract_curate(
@@ -277,17 +263,7 @@ def stream_extract_curate(
         .dropDuplicatesWithinWatermark(["fp"])
         .drop("fp", "doc_id")
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return _parquet_sink(deduped, output_dir, checkpoint_dir, available_now)
 
 
 def stream_warc_extract(
@@ -312,8 +288,6 @@ def stream_warc_extract(
     ``warc_ts`` is carried through the parse stage (``passthrough_cols``
     rides the Arrow batch, no rejoin) so downstream event-time windowing
     has the crawl timestamp. Returns the StreamingQuery."""
-    from pyspark.sql import functions as F
-
     from ..sources.warc import warc_to_pages
 
     blobs = (
@@ -338,14 +312,4 @@ def stream_warc_extract(
     parsed = parse_and_extract(
         pages, encoding=encoding, passthrough_cols=("warc_ts",)
     )
-    writer = (
-        parsed.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="30 seconds")
-    return writer.start()
+    return _parquet_sink(parsed, output_dir, checkpoint_dir, available_now)

@@ -154,27 +154,9 @@ def test_decontaminate_unhinted_aqe_broadcasts_small_manifest(spark):
         [(i, words + f" doc {i}") for i in range(40)], "doc_id bigint, text string"
     )
     bench = spark.createDataFrame([(0, words)], "doc_id bigint, text string")
-    out = decontaminate(docs, bench)  # broadcast_manifest defaults to None
+    out = decontaminate(docs, bench)  # no broadcast hint
     rows = out.collect()
     assert len(rows) == 40 and all(r.contaminated for r in rows)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan, plan
-
-
-def test_decontaminate_forced_hint_still_available(spark):
-    from html5ever_elixir_spark.operators.dedup import decontaminate
-
-    docs = spark.createDataFrame(
-        [(i, "completely unrelated fresh text " + "x " * 20 + str(i))
-         for i in range(10)],
-        "doc_id bigint, text string",
-    )
-    bench = spark.createDataFrame(
-        [(0, "the shared benchmark sentence " * 4)], "doc_id bigint, text string"
-    )
-    out = decontaminate(docs, bench, broadcast_manifest=True)
-    rows = out.collect()
-    assert len(rows) == 10 and not any(r.contaminated for r in rows)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
 
