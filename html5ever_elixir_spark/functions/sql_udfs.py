@@ -18,8 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..operators.parse import _to_text, decode_and_parse
-from ..parser.api import UTF8_ERROR, tree_to_json
+from ..operators.parse import decode_and_parse
+from ..parser.api import UTF8_ERROR, _to_text, tree_to_json
 from ..parser.extract import extract_all, extract_text_v2
 
 

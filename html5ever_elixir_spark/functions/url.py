@@ -86,7 +86,6 @@ def filter_blocked_hosts(
     url_col: str = "url",
     domain_col: str = "domain",
     max_labels: int = 5,
-    broadcast_blocklist: bool | None = None,
 ) -> DataFrame:
     """Drop pages whose host matches a blocklist domain exactly OR as a
     parent domain (sub.host7.example is blocked by host7.example) — the
@@ -96,11 +95,11 @@ def filter_blocked_hosts(
     it to an equi-join by exploding each page's ≤``max_labels`` host
     suffixes (bounded fan-out) and semi-joining the blocklist; hit urls
     are then anti-joined back (no ``distinct`` — anti join semantics
-    dedup the probe side for free). ``broadcast_blocklist=True`` hints
-    the manifest broadcast (right when it's a curated list: 10^4-10^6
-    rows); the default ``None`` lets AQE decide so a mega-blocklist
-    degrades to a shuffle join on the uniform suffix key instead of
-    OOMing — the same size-gate discipline as decontaminate.
+    dedup the probe side for free). The blocklist join carries no
+    broadcast hint, so AQE decides: a curated list (10^4-10^6 rows)
+    still broadcast-joins, and a mega-blocklist degrades to a shuffle
+    join on the uniform suffix key instead of OOMing — the same
+    size-gate discipline as decontaminate.
     Output = the surviving pages, input columns."""
     sfx = pages.select(
         F.col(url_col),
@@ -108,8 +107,6 @@ def filter_blocked_hosts(
         .alias("_sfx"),
     )
     b = blocked.select(F.lower(F.col(domain_col)).alias("_sfx"))
-    if broadcast_blocklist:
-        b = F.broadcast(b)
     hits = sfx.join(b, "_sfx", "semi").select(url_col)
     return pages.join(hits, url_col, "left_anti")
 

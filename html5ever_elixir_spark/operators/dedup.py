@@ -385,7 +385,6 @@ def remove_boilerplate_lines(
     text_col: str = "text",
     id_col: str = "doc_id",
     sep: str = "\n",
-    broadcast_manifest: bool | None = None,
 ) -> DataFrame:
     """Corpus-level line deduplication — the CCNet/RefinedWeb
     boilerplate rule: a line occurring in >= ``min_docs`` DISTINCT
@@ -401,14 +400,12 @@ def remove_boilerplate_lines(
     FREQUENT lines only; reassembly is one per-doc groupBy, sorting
     each doc's own lines by position (never a global order).
 
-    ``broadcast_manifest``: ``True`` forces the broadcast hint — only
-    when the caller knows the frequent-line set is small. Default
-    ``None`` adds no hint and lets AQE decide from runtime stats: on a
-    normal corpus the manifest is tiny and still broadcast-joins, but a
-    template-spam corpus where a large share of distinct lines clears
-    the threshold degrades to a shuffle anti-join (uniform line key, no
-    skew) instead of OOMing — the same size-gate discipline as
-    :func:`decontaminate`."""
+    The manifest join carries no broadcast hint, so AQE chooses from
+    runtime stats: on a normal corpus the manifest is tiny and still
+    broadcast-joins, but a template-spam corpus where a large share of
+    distinct lines clears the threshold degrades to a shuffle anti-join
+    (uniform line key, no skew) instead of OOMing — the same size-gate
+    discipline as :func:`decontaminate`."""
     lines = docs.where(F.col(text_col).isNotNull()).select(
         F.col(id_col),
         F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "ln"),
@@ -419,8 +416,6 @@ def remove_boilerplate_lines(
         .where(F.col("n_docs") >= min_docs)
         .select("ln")
     )
-    if broadcast_manifest:
-        freq = F.broadcast(freq)
     kept = lines.join(freq, "ln", "anti")
     rebuilt = kept.groupBy(id_col).agg(
         F.expr(
@@ -1103,15 +1098,20 @@ FROM {table} t LEFT JOIN labels ON t.doc_id = labels.doc_id
 # ---------------------------------------------------------------------------
 # SimHash (32-bit, word-level)
 
-_SIMHASH_BITS = 32
-
-
 def _word_hashes(text_col: str, start_hex: int) -> str:
     """SQL expr: distinct-word 32-bit hashes from md5 hex chars
     [start_hex, start_hex+8) (1-based)."""
     return (
         f"transform(array_distinct(split({text_col}, ' ')), "
         f"w -> cast(conv(substring(md5(w), {start_hex}, 8), 16, 10) as bigint))"
+    )
+
+
+def _duck_word_hashes(start_hex: int) -> str:
+    """DuckDB mirror of :func:`_word_hashes` over ``text``."""
+    return (
+        "list_transform(list_distinct(str_split(text, ' ')), "
+        f"w -> ('0x' || substr(md5(w), {start_hex}, 8))::BIGINT)"
     )
 
 
@@ -1131,18 +1131,9 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"):
 
 
 def oracle_simhash_sql(table: str = "documents") -> str:
-    wh = (
-        "list_transform(list_distinct(str_split(text, ' ')), "
-        "w -> ('0x' || substr(md5(w), 1, 8))::BIGINT)"
-    )
-    bits = " + ".join(
-        f"(case when 2 * len(list_filter(_wh, h -> ((h >> {i}) & 1) = 1)) "
-        f"> len(_wh) then {1 << i}::BIGINT else 0 end)"
-        for i in range(_SIMHASH_BITS)
-    )
     return (
-        f"SELECT doc_id, ({bits}) AS simhash FROM "
-        f"(SELECT doc_id, {wh} AS _wh FROM {table})"
+        f"SELECT doc_id, ({_duck_majority_bits('_wh')}) AS simhash FROM "
+        f"(SELECT doc_id, {_duck_word_hashes(1)} AS _wh FROM {table})"
     )
 
 
@@ -1219,6 +1210,15 @@ def _majority_bits(arr: str) -> str:
     )
 
 
+def _duck_majority_bits(arr: str) -> str:
+    """DuckDB mirror of :func:`_majority_bits`."""
+    return " + ".join(
+        f"(case when 2 * len(list_filter({arr}, h -> ((h >> {i}) & 1) = 1)) "
+        f"> len({arr}) then {1 << i}::BIGINT else 0 end)"
+        for i in range(32)
+    )
+
+
 def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"):
     """(id, simhash_hi, simhash_lo) — a 64-bit SimHash as two 32-bit
     halves (hi = md5 hex [1,8], lo = [9,16] of each distinct word).
@@ -1237,19 +1237,7 @@ def simhash64(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"):
 
 
 def oracle_simhash64_sql(table: str = "documents") -> str:
-    def wh(start):
-        return (
-            "list_transform(list_distinct(str_split(text, ' ')), "
-            f"w -> ('0x' || substr(md5(w), {start}, 8))::BIGINT)"
-        )
-
-    def bits(arr):
-        return " + ".join(
-            f"(case when 2 * len(list_filter({arr}, h -> ((h >> {i}) & 1) = 1)) "
-            f"> len({arr}) then {1 << i}::BIGINT else 0 end)"
-            for i in range(32)
-        )
-
+    bits, wh = _duck_majority_bits, _duck_word_hashes
     return (
         f"SELECT doc_id, ({bits('_wh')}) AS simhash_hi, "
         f"({bits('_wl')}) AS simhash_lo FROM "

@@ -41,8 +41,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from ..parser.dom import ELEMENT, HTML_NS, TEXT
-from .parse import DEFAULT_MAX_DEPTH, DEFAULT_MAX_NODES, emit_error, \
-    map_documents
+from .parse import emit_error, map_documents
 
 __all__ = [
     "to_markdown",
@@ -238,13 +237,10 @@ def to_markdown(
     df: DataFrame,
     id_col: str = "url",
     html_col: str = "html",
-    max_nodes: int = DEFAULT_MAX_NODES,
-    max_depth: int = DEFAULT_MAX_DEPTH,
 ) -> DataFrame:
     """pages → ``(<id_col>, error, markdown)``, one row per page."""
     return map_documents(
-        df, id_col, html_col, [emit_error, emit_markdown], _MD_SCHEMA,
-        max_nodes=max_nodes, max_depth=max_depth,
+        df, id_col, html_col, [emit_error, emit_markdown], _MD_SCHEMA
     )
 
 

@@ -28,14 +28,17 @@ from pyspark.sql import functions as F
 
 from . import map_rows
 from ..functions.selectors import iter_elements
-from ..parser.api import UTF8_ERROR, parse_document, tree_to_json
-from ..parser.dom import TEXT
+from ..parser.api import UTF8_ERROR, _to_text, parse_document, preorder, \
+    tree_to_json
+from ..parser.dom import TEXT, attrs_map
 from ..parser.extract import extract_all
 from ..parser.treebuilder import ParseBudgetExceeded, TreeBuilder
 
-# per-document DOM node cap: ~3 orders of magnitude above the web
-# average (~600 nodes/page, reference lib.rs:32-35) — bounds executor
-# memory against adversarial/pathological documents at corpus scale
+# The parse budget of every document through the kernel; no operator
+# forwards or overrides it. Per-document DOM node cap: ~3 orders of
+# magnitude above the web average (~600 nodes/page, reference
+# lib.rs:32-35) — bounds executor memory against adversarial documents
+# at corpus scale.
 DEFAULT_MAX_NODES = 1_000_000
 # open-element-stack cap (browser parity: Blink caps at 512); bounds the
 # O(depth²) scope scans on never-closed-tag bombs
@@ -79,13 +82,6 @@ NODES_SCHEMA = pa.schema(
 )
 
 
-def _to_text(v) -> str:
-    """UTF-8 gate for binary html (reference lib.rs:27-30)."""
-    if isinstance(v, (bytes, bytearray, memoryview)):
-        return bytes(v).decode("utf-8", errors="strict")
-    return v
-
-
 def _to_text_sniff(v) -> str:
     """Lenient crawl decode: BOM → meta prescan → UTF-8 → windows-1252
     (parser/encoding.py). Never raises; str input passes through."""
@@ -97,20 +93,20 @@ def _to_text_sniff(v) -> str:
 
 
 def decode_and_parse(
-    html,
-    decode: Callable = _to_text,
-    max_nodes: int = DEFAULT_MAX_NODES,
-    max_depth: int = DEFAULT_MAX_DEPTH,
+    html, decode: Callable = _to_text
 ) -> tuple[TreeBuilder | None, str | None]:
     """One document through the reference's per-call contract
-    (``lib.rs:10-35``): decode gate, then budgeted parse. Returns
+    (``lib.rs:10-35``): decode gate, then a parse under the kernel's
+    budget (``DEFAULT_MAX_NODES``, ``DEFAULT_MAX_DEPTH``). Returns
     ``(builder, None)``, or ``(None, error)`` with the one error
     taxonomy — ``UTF8_ERROR`` or ``"parse budget exceeded: …"``. Null
     html parses as the empty document."""
     try:
         text = decode(html) if html is not None else ""
         return (
-            parse_document(text, max_nodes=max_nodes, max_depth=max_depth),
+            parse_document(
+                text, max_nodes=DEFAULT_MAX_NODES, max_depth=DEFAULT_MAX_DEPTH
+            ),
             None,
         )
     except UnicodeDecodeError:
@@ -134,8 +130,6 @@ def map_documents(
     emitters: list[Emitter],
     schema: pa.Schema,
     id_name: str | None = None,
-    max_nodes: int = DEFAULT_MAX_NODES,
-    max_depth: int = DEFAULT_MAX_DEPTH,
     passthrough_cols: tuple[str, ...] = (),
     encoding: str = "strict",
 ) -> DataFrame:
@@ -156,7 +150,7 @@ def map_documents(
     decode = _to_text if encoding == "strict" else _to_text_sniff
 
     def emit(out: dict, html) -> int:
-        parsed, err = decode_and_parse(html, decode, max_nodes, max_depth)
+        parsed, err = decode_and_parse(html, decode)
         for e in emitters:
             n = e(out, parsed, err)
         return n
@@ -260,8 +254,6 @@ def parse_and_extract(
     html_col: str = "html",
     with_tree_json: bool = False,
     with_markdown: bool = False,
-    max_nodes: int = DEFAULT_MAX_NODES,
-    max_depth: int = DEFAULT_MAX_DEPTH,
     passthrough_cols: tuple[str, ...] = (),
     encoding: str = "strict",
 ) -> DataFrame:
@@ -293,17 +285,12 @@ def parse_and_extract(
         emitters.append(emit_markdown)
     return map_documents(
         df, url_col, html_col, emitters, PARSED_SCHEMA, id_name="url",
-        max_nodes=max_nodes, max_depth=max_depth,
         passthrough_cols=passthrough_cols, encoding=encoding,
     )
 
 
 def flat_parse_nodes(
-    df: DataFrame,
-    url_col: str = "url",
-    html_col: str = "html",
-    max_nodes: int = DEFAULT_MAX_NODES,
-    max_depth: int = DEFAULT_MAX_DEPTH,
+    df: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
     """pages → exploded per-node table (the reference's flat_parse map
     ``%{root, nodes}`` as rows keyed (url, node_id); arena_sink.rs:458-607).
@@ -327,34 +314,22 @@ def flat_parse_nodes(
             c_nm(None); c_at(None); c_am(None); c_ct(err)
             return 1
         n_rows = 0
-        stack = [parsed.doc]
-        while stack:
-            node = stack.pop()
-            t = node.type
-            if t == "element":
-                attrs = [(n, v) for n, v in node.attrs]
-                am: dict = {}
-                for nk, v in node.attrs:
-                    if nk not in am:
-                        am[nk] = v
-                aml = list(am.items())
+        for node in preorder(parsed.doc):
+            if node.type == "element":
+                c_at([(n, v) for n, v in node.attrs])
+                c_am(list(attrs_map(node.attrs).items()))
             else:
-                attrs = None
-                aml = None
+                c_at(None)
+                c_am(None)
             c_id(node.id)
             c_pid(node.parent.id if node.parent is not None else None)
             c_ch([c.id for c in node.children])
-            c_ty(t)
+            c_ty(node.type)
             c_nm(node.name)
-            c_at(attrs)
-            c_am(aml)
             c_ct(node.contents)
             n_rows += 1
-            if node.children:
-                stack.extend(reversed(node.children))
         return n_rows
 
     return map_documents(
-        df, url_col, html_col, [emit], NODES_SCHEMA, id_name="url",
-        max_nodes=max_nodes, max_depth=max_depth,
+        df, url_col, html_col, [emit], NODES_SCHEMA, id_name="url"
     )

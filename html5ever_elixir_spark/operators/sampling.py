@@ -196,7 +196,6 @@ def temperature_mix(
     group_col: str = "source",
     id_col: str = "doc_id",
     salt: str = "h5mix",
-    broadcast_rates: bool | None = None,
 ) -> DataFrame:
     """Temperature-based source mixing — the standard multi-source
     trainer recipe: sample sources proportionally to p_s^(1/T), so
@@ -207,11 +206,11 @@ def temperature_mix(
     :func:`stratified_sample` (layout-independent, resumable,
     oracle-mirrorable). The rate table is one tiny aggregate
     (#groups rows, single-partition window) joined back onto the
-    corpus. ``broadcast_rates=True`` forces the hint — right when the
-    group is a bounded vocabulary (sources, registries, languages);
-    the default ``None`` lets AQE decide, so grouping by an UNBOUNDED
-    key (per-host mixing at web scale: 10^8 hosts) degrades to a
-    shuffle join instead of OOMing. The rate
+    corpus. The join carries no broadcast hint, so AQE decides: a
+    bounded vocabulary (sources, registries, languages) still
+    broadcast-joins, and grouping by an UNBOUNDED key (per-host mixing
+    at web scale: 10^8 hosts) degrades to a shuffle join instead of
+    OOMing. The rate
     FORMULA is written with identical operation order on both engines,
     then **rounded to 9 decimal places before the compare** (ADVICE r4):
     Spark's Math.pow / window-sum order and DuckDB's libm are not
@@ -235,8 +234,6 @@ def temperature_mix(
             f"(pow(n_s, {inv_t}) / sumq) / n_s), 9) AS _rate",
         )
     )
-    if broadcast_rates:
-        rates = F.broadcast(rates)
     u = _uniform_expr(id_col, salt)
     return (
         docs.join(rates, group_col)

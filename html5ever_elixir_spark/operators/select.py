@@ -31,12 +31,7 @@ from pyspark.sql import DataFrame
 from ..functions.selectors import compile_selector, iter_elements, \
     _matches_complex
 from ..parser.dom import TEXT
-from .parse import (
-    DEFAULT_MAX_DEPTH,
-    DEFAULT_MAX_NODES,
-    map_documents,
-    rows_emitter,
-)
+from .parse import map_documents, rows_emitter
 
 __all__ = ["select_nodes", "select_counts"]
 
@@ -69,8 +64,6 @@ def select_nodes(
     selector: str,
     url_col: str = "url",
     html_col: str = "html",
-    max_nodes: int = DEFAULT_MAX_NODES,
-    max_depth: int = DEFAULT_MAX_DEPTH,
 ) -> DataFrame:
     """pages → ``(url, error, node_id, name, text)``; one row per
     matched element, document order; error pages yield one null-match
@@ -88,7 +81,6 @@ def select_nodes(
         df, url_col, html_col,
         [rows_emitter(walk, ("node_id", "name", "text"))],
         _MATCH_SCHEMA, id_name="url",
-        max_nodes=max_nodes, max_depth=max_depth,
     )
 
 
@@ -97,8 +89,6 @@ def select_counts(
     selectors: dict[str, str],
     url_col: str = "url",
     html_col: str = "html",
-    max_nodes: int = DEFAULT_MAX_NODES,
-    max_depth: int = DEFAULT_MAX_DEPTH,
 ) -> DataFrame:
     """pages → one row per page: ``(url, error, <alias> bigint …)`` —
     match counts for every selector from ONE parse of each document."""
@@ -118,5 +108,5 @@ def select_counts(
     )
     return map_documents(
         df, url_col, html_col, [rows_emitter(walk, aliases)], schema,
-        id_name="url", max_nodes=max_nodes, max_depth=max_depth,
+        id_name="url",
     )

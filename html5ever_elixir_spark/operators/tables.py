@@ -37,12 +37,7 @@ from pyspark.sql import DataFrame
 
 from ..functions.selectors import iter_elements
 from ..parser.dom import ELEMENT
-from .parse import (
-    DEFAULT_MAX_DEPTH,
-    DEFAULT_MAX_NODES,
-    map_documents,
-    rows_emitter,
-)
+from .parse import map_documents, rows_emitter
 from .select import _node_text
 
 __all__ = [
@@ -117,8 +112,6 @@ def extract_table_cells(
     df: DataFrame,
     id_col: str = "url",
     html_col: str = "html",
-    max_nodes: int = DEFAULT_MAX_NODES,
-    max_depth: int = DEFAULT_MAX_DEPTH,
 ) -> DataFrame:
     """pages → one row per table cell:
     ``(<id_col>, error, table_idx, row_idx, col_idx, is_header,
@@ -126,7 +119,7 @@ def extract_table_cells(
     url or bigint doc_id)."""
     return map_documents(
         df, id_col, html_col, [rows_emitter(_doc_cells, _CELLS_COLS)],
-        _CELLS_SCHEMA, max_nodes=max_nodes, max_depth=max_depth,
+        _CELLS_SCHEMA,
     )
 
 
@@ -199,8 +192,6 @@ def extract_table_grid(
     df: DataFrame,
     id_col: str = "url",
     html_col: str = "html",
-    max_nodes: int = DEFAULT_MAX_NODES,
-    max_depth: int = DEFAULT_MAX_DEPTH,
 ) -> DataFrame:
     """pages → one row per table cell with GRID semantics:
     ``(<id_col>, error, table_idx, grid_row, col_idx, grid_col,
@@ -211,7 +202,7 @@ def extract_table_grid(
     mapInArrow over a 2-column pruned scan, zero shuffle."""
     return map_documents(
         df, id_col, html_col, [rows_emitter(_doc_grid_cells, _GRID_COLS)],
-        _GRID_SCHEMA, max_nodes=max_nodes, max_depth=max_depth,
+        _GRID_SCHEMA,
     )
 
 

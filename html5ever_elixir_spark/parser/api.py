@@ -5,14 +5,17 @@ Spark operators.
 All tree traversals are **iterative** (explicit stacks): the reference's
 flat encoder already is (``arena_sink.rs:476-479``), its nested encoder
 is recursive (``arena_sink.rs:364-423``) — a deep-document hazard we do
-not copy.
+not copy. Each tree shape has one walker: :func:`_nested` builds the
+parity tuples and the JSON columns from a tag table, and
+:func:`preorder` feeds the flat map and ``flat_parse_nodes`` rows.
 """
 
 from __future__ import annotations
 
 import json
 
-from .dom import COMMENT, DOCTYPE, DOCUMENT, ELEMENT, PI, TEXT, Node
+from .dom import COMMENT, DOCTYPE, DOCUMENT, ELEMENT, PI, TEXT, Node, \
+    attrs_map
 from .tokenizer import Tokenizer
 from .treebuilder import TreeBuilder
 
@@ -97,97 +100,87 @@ def parse_fragment(
     return builder
 
 
-def _decode(data) -> str:
-    """UTF-8 gate (reference lib.rs:27-30): bytes must be valid UTF-8;
-    str input is accepted as-is (already decoded)."""
-    if isinstance(data, str):
-        return data
-    return data.decode("utf-8", errors="strict")
+def _to_text(v) -> str:
+    """The UTF-8 gate (reference lib.rs:27-30): binary html must be
+    valid UTF-8 (``UnicodeDecodeError`` otherwise); str input is
+    already decoded and passes through."""
+    if isinstance(v, (bytes, bytearray, memoryview)):
+        return bytes(v).decode("utf-8", errors="strict")
+    return v
 
 
 # ---------------------------------------------------------------------------
-# nested tuple tree (reference nodes_to_term, arena_sink.rs:364-423)
+# the two walks: nested (reference nodes_to_term, arena_sink.rs:364-423)
+# and flat (nodes_to_flat_term, arena_sink.rs:458-607)
+
+# :func:`_nested` tag tables — (element prefix, comment, doctype, pi):
+# the parity tuples, and the JSON tagged arrays (``json.dumps`` writes a
+# tuple as an array)
+_TUPLE_TAGS = ((), "comment", "doctype", "pi")
+_JSON_TAGS = (("e",), "c", "d", "p")
 
 
-def _encode_tuple_tree(doc: Node, attrs_as_maps: bool):
-    """document → list of encoded children; element → (name, attrs, children);
-    text → str; comment → ("comment", s); doctype → ("doctype", n, p, s);
-    pi → ("pi", target, contents). Iterative post-order assembly."""
+def _attrs_list(attrs) -> list:
+    return [(n, v) for n, v in attrs]
 
-    def attrs_of(node):
-        if attrs_as_maps:
-            out = {}
-            for n, v in node.attrs:
-                if n not in out:  # first occurrence wins (lib/html5ever.ex:46-47)
-                    out[n] = v
-            return out
-        return [(n, v) for n, v in node.attrs]
 
-    # iterative: build child lists bottom-up via an explicit stack
-    result_children: dict[int, list] = {doc.id: []}
-    stack = [(doc, iter(doc.children))]
+def _nested(root: Node, attrs_as_maps: bool, tags: tuple) -> list:
+    """The encoded child list of ``root``: element → (*prefix, name,
+    attrs, children); text → str; comment → (comment, s); doctype →
+    (doctype, name, public, system); pi → (pi, target, contents), the
+    tags taken from ``tags``. Iterative post-order assembly: the
+    reference's encoder recurses, 100k-deep <div> chains must not."""
+    el, comment, doctype, pi = tags
+    enc_attrs = attrs_map if attrs_as_maps else _attrs_list
+    children: dict[int, list] = {root.id: []}
+    stack = [(root, iter(root.children))]
     while stack:
         parent, it = stack[-1]
         child = next(it, None)
         if child is None:
             stack.pop()
-            if parent is not doc:
+            if stack:
                 # finalize parent into its grandparent's list
-                gp_list = result_children[stack[-1][0].id]
-                gp_list.append(
-                    (parent.name, attrs_of(parent), result_children.pop(parent.id))
+                children[stack[-1][0].id].append(
+                    (*el, parent.name, enc_attrs(parent.attrs),
+                     children.pop(parent.id))
                 )
             continue
         t = child.type
         if t == ELEMENT:
-            result_children[child.id] = []
+            children[child.id] = []
             stack.append((child, iter(child.children)))
         elif t == TEXT:
-            result_children[parent.id].append(child.contents)
+            children[parent.id].append(child.contents)
         elif t == COMMENT:
-            result_children[parent.id].append(("comment", child.contents))
+            children[parent.id].append((comment, child.contents))
         elif t == DOCTYPE:
-            result_children[parent.id].append(
-                ("doctype", child.name, child.public_id, child.system_id)
+            children[parent.id].append(
+                (doctype, child.name, child.public_id, child.system_id)
             )
         elif t == PI:
-            result_children[parent.id].append(("pi", child.name, child.contents))
-    return result_children[doc.id]
+            children[parent.id].append((pi, child.name, child.contents))
+    return children[root.id]
 
 
-def parse(html):
-    """HTML → ``("ok", nested_tree)`` | ``("error", reason)``.
-    Parity: ``Html5ever.parse/1`` (lib/html5ever.ex:40-42)."""
-    try:
-        text = _decode(html)
-    except UnicodeDecodeError:
-        return ("error", UTF8_ERROR)
-    builder = parse_document(text)
-    return ("ok", _encode_tuple_tree(builder.doc, False))
-
-
-def parse_attrs_maps(html):
-    """Parity: ``Html5ever.parse_with_attributes_as_maps/1``."""
-    try:
-        text = _decode(html)
-    except UnicodeDecodeError:
-        return ("error", UTF8_ERROR)
-    builder = parse_document(text)
-    return ("ok", _encode_tuple_tree(builder.doc, True))
-
-
-# ---------------------------------------------------------------------------
-# flat node map (reference nodes_to_flat_term, arena_sink.rs:458-607)
+def preorder(root: Node):
+    """``root`` and its descendants in document order (template contents
+    are not walked): an explicit work stack, as arena_sink.rs:476-479."""
+    stack = [root]
+    while stack:
+        node = stack.pop()
+        yield node
+        if node.children:
+            stack.extend(reversed(node.children))
 
 
 def _encode_flat(doc: Node, attrs_as_maps: bool):
-    """%{root: 0, nodes: %{id => node_map}} — iterative DFS with an
-    explicit work stack, mirroring arena_sink.rs:476-479. Per-kind fields
-    per arena_sink.rs:482-598 (flat doctype drops public/system ids)."""
+    """%{root: 0, nodes: %{id => node_map}} over :func:`preorder`.
+    Per-kind fields per arena_sink.rs:482-598 (flat doctype drops
+    public/system ids)."""
+    enc_attrs = attrs_map if attrs_as_maps else _attrs_list
     nodes: dict[int, dict] = {}
-    stack = [doc]
-    while stack:
-        node = stack.pop()
+    for node in preorder(doc):
         t = node.type
         entry: dict = {
             "id": node.id,
@@ -210,95 +203,65 @@ def _encode_flat(doc: Node, attrs_as_maps: bool):
             entry["type"] = "element"
             entry["name"] = node.name
             entry["children"] = [c.id for c in node.children]
-            if attrs_as_maps:
-                attrs = {}
-                for n, v in node.attrs:
-                    if n not in attrs:
-                        attrs[n] = v
-            else:
-                attrs = [(n, v) for n, v in node.attrs]
-            entry["attrs"] = attrs
+            entry["attrs"] = enc_attrs(node.attrs)
         else:  # PI
             entry["type"] = "pi"
             entry["name"] = node.name
             entry["contents"] = node.contents
         nodes[node.id] = entry
-        if node.children:
-            stack.extend(reversed(node.children))
     return {"root": 0, "nodes": nodes}
+
+
+# ---------------------------------------------------------------------------
+# the reference's four entry points (lib/html5ever.ex:40-129)
+
+
+def _parity(html, flat: bool, attrs_as_maps: bool):
+    """The UTF-8 gate, an unbudgeted parse, then the nested or the flat
+    encoding: ``("ok", encoded)`` | ``("error", UTF8_ERROR)``."""
+    try:
+        text = _to_text(html)
+    except UnicodeDecodeError:
+        return ("error", UTF8_ERROR)
+    doc = parse_document(text).doc
+    if flat:
+        return ("ok", _encode_flat(doc, attrs_as_maps))
+    return ("ok", _nested(doc, attrs_as_maps, _TUPLE_TAGS))
+
+
+def parse(html):
+    """HTML → ``("ok", nested_tree)`` | ``("error", reason)``: document →
+    list of encoded children; element → (name, attrs, children); text →
+    str; comment → ("comment", s); doctype → ("doctype", n, p, s); pi →
+    ("pi", target, contents). Parity: ``Html5ever.parse/1``
+    (lib/html5ever.ex:40-42)."""
+    return _parity(html, flat=False, attrs_as_maps=False)
+
+
+def parse_attrs_maps(html):
+    """Parity: ``Html5ever.parse_with_attributes_as_maps/1``."""
+    return _parity(html, flat=False, attrs_as_maps=True)
 
 
 def flat_parse(html):
     """Parity: ``Html5ever.flat_parse/1`` (lib/html5ever.ex:117-119)."""
-    try:
-        text = _decode(html)
-    except UnicodeDecodeError:
-        return ("error", UTF8_ERROR)
-    builder = parse_document(text)
-    return ("ok", _encode_flat(builder.doc, False))
+    return _parity(html, flat=True, attrs_as_maps=False)
 
 
 def flat_parse_attrs_maps(html):
     """Parity: ``Html5ever.flat_parse_with_attributes_as_maps/1``."""
-    try:
-        text = _decode(html)
-    except UnicodeDecodeError:
-        return ("error", UTF8_ERROR)
-    builder = parse_document(text)
-    return ("ok", _encode_flat(builder.doc, True))
+    return _parity(html, flat=True, attrs_as_maps=True)
 
 
 # ---------------------------------------------------------------------------
 # canonical JSON encodings for Spark columns
 
 
-def _json_children(node: Node, attrs_as_maps: bool) -> list:
-    """Encoded child list of ``node`` (shared by :func:`tree_to_json`
-    and :func:`fragment_to_json`)."""
-
-    def enc_attrs(attrs):
-        if not attrs_as_maps:
-            return [[n, v] for n, v in attrs]
-        out = {}
-        for n, v in attrs:
-            if n not in out:  # first wins (lib/html5ever.ex:46-47)
-                out[n] = v
-        return out
-
-    def conv(node: Node):
-        # children lists are shallow; recursion depth = DOM depth. Convert
-        # iteratively to dodge pathological depth (100k-deep <div> chains).
-        out_children: dict[int, list] = {node.id: []}
-        stack = [(node, iter(node.children))]
-        while stack:
-            parent, it = stack[-1]
-            child = next(it, None)
-            if child is None:
-                stack.pop()
-                if stack:
-                    gp = out_children[stack[-1][0].id]
-                    gp.append(
-                        ["e", parent.name, enc_attrs(parent.attrs),
-                         out_children.pop(parent.id)]
-                    )
-                continue
-            t = child.type
-            if t == ELEMENT:
-                out_children[child.id] = []
-                stack.append((child, iter(child.children)))
-            elif t == TEXT:
-                out_children[parent.id].append(child.contents)
-            elif t == COMMENT:
-                out_children[parent.id].append(["c", child.contents])
-            elif t == DOCTYPE:
-                out_children[parent.id].append(
-                    ["d", child.name, child.public_id, child.system_id]
-                )
-            elif t == PI:
-                out_children[parent.id].append(["p", child.name, child.contents])
-        return out_children[node.id]
-
-    return conv(node)
+def _dumps(tag: str, root: Node, attrs_as_maps: bool) -> str:
+    return json.dumps(
+        [tag, _nested(root, attrs_as_maps, _JSON_TAGS)],
+        separators=(",", ":"), ensure_ascii=False,
+    )
 
 
 def tree_to_json(doc: Node, attrs_as_maps: bool = False) -> str:
@@ -312,18 +275,12 @@ def tree_to_json(doc: Node, attrs_as_maps: bool = False) -> str:
     ``attrs_as_maps=True`` encodes attrs as a JSON object (insertion =
     first-occurrence order) — the maps-mode surface of the reference's
     ``parse_with_attributes_as_maps/1`` (lib/html5ever.ex:62-64)."""
-    return json.dumps(
-        ["#doc", _json_children(doc, attrs_as_maps)],
-        separators=(",", ":"), ensure_ascii=False,
-    )
+    return _dumps("#doc", doc, attrs_as_maps)
 
 
-def fragment_to_json(builder: TreeBuilder, attrs_as_maps: bool = False) -> str:
+def fragment_to_json(builder: TreeBuilder) -> str:
     """Byte-stable encoding of a :func:`parse_fragment` result: the
     fragment's node list (children of the fragment root, per §13.4 —
     the innerHTML return value) as ``["#frag", [children]]``, same
     child encoding as :func:`tree_to_json`."""
-    return json.dumps(
-        ["#frag", _json_children(builder.fragment_root, attrs_as_maps)],
-        separators=(",", ":"), ensure_ascii=False,
-    )
+    return _dumps("#frag", builder.fragment_root, False)

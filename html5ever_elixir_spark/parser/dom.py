@@ -29,6 +29,16 @@ SVG_NS = "svg"
 MATHML_NS = "mathml"
 
 
+def attrs_map(attrs) -> dict:
+    """An element's ``[[name, value], …]`` as a dict in which the first
+    occurrence of a name wins (lib/html5ever.ex:46-47)."""
+    out = {}
+    for n, v in attrs:
+        if n not in out:
+            out[n] = v
+    return out
+
+
 class Node:
     __slots__ = (
         "id",

@@ -1788,12 +1788,6 @@ def _page_content_entries(
     return entries
 
 
-def _page_content_ids(objs: dict[int, bytes]) -> list[int]:
-    """Content-stream object ids in document page order (see
-    :func:`_page_content_entries`)."""
-    return [cid for cid, _, _ in _page_content_entries(objs)]
-
-
 # ---------------------------------------------------------------------------
 # Simple-font decoding: /Encoding (+ /Differences) and /ToUnicode CMaps
 # (ISO 32000-1 §9.6.6, §9.10.3, Appendix D). Composite/CID fonts remain

@@ -80,11 +80,15 @@ def test_flat_nodes_error_sentinel_rows(spark):
 def test_flat_nodes_respects_parse_budget(spark):
     from html5ever_elixir_spark.operators.parse import flat_parse_nodes
 
+    # 5000 nested divs exceed the kernel's depth cap of 512
     bomb = "<div>" * 5000
     pages = spark.createDataFrame([("u", bomb)], "url string, html string")
-    nodes = flat_parse_nodes(pages, max_nodes=100).cache()
+    nodes = flat_parse_nodes(pages).cache()
     err = nodes.where("type = 'error'").collect()
-    assert len(err) == 1 and "budget" in err[0]["contents"]
+    assert len(err) == 1
+    assert err[0]["contents"] == (
+        "parse budget exceeded: document exceeds max tree depth 512"
+    )
     assert nodes.where("type <> 'error'").count() == 0
 
 

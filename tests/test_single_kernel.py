@@ -2,7 +2,9 @@
 stage is one ``emit`` over ``operators.map_rows``, and every
 per-document HTML operator is an emitter list over
 ``operators.parse.map_documents``, whose ``decode_and_parse`` is the
-only place that parses. Pure ``ast`` scan, no Spark."""
+only place that parses and owns the parse budget and the UTF-8 gate;
+each tree encoding has one walker in ``parser/api.py``. Pure ``ast``
+scan, no Spark."""
 
 import ast
 import os
@@ -16,6 +18,7 @@ SCANNED = sorted(
     for p in (PKG / d).glob("*.py")
 ) + [ROOT / "__spark_entry__.py"]
 KERNEL = PKG / "operators" / "parse.py"
+API = PKG / "parser" / "api.py"
 # the calls that make a Python batch stage of their own
 BATCH_CALLS = (
     "mapInArrow", "mapInPandas", "from_pydict", "from_pylist",
@@ -94,3 +97,45 @@ def test_page_operators_do_not_rejoin_flat_nodes():
         and not (path == KERNEL and line.startswith("def flat_parse_nodes("))
     ]
     assert offenders == []
+
+
+def test_no_operator_takes_a_parse_budget():
+    # the budget is decode_and_parse's constant; no operator forwards it
+    offenders = [
+        f"{path.name}:{node.lineno} {node.name}({arg.arg}=)"
+        for d in ("operators", "functions", "plans", "streaming")
+        for path in sorted((PKG / d).glob("*.py"))
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for arg in (*node.args.posonlyargs, *node.args.args,
+                    *node.args.kwonlyargs)
+        if arg.arg in ("max_nodes", "max_depth")
+    ]
+    assert offenders == []
+
+
+def test_one_strict_utf8_gate():
+    decodes = [
+        f"{path.name}:{node.lineno}"
+        for path in (API, KERNEL)
+        for node in ast.walk(ast.parse(path.read_text()))
+        if _called(node, "decode")
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+        and str(node.args[0].value).lower().replace("-", "") == "utf8"
+    ]
+    assert len(decodes) == 1, decodes
+
+
+def test_one_walker_per_tree_encoding():
+    # the nested walk (parity tuples + JSON columns) and the flat walk
+    # (flat map + flat_parse_nodes rows) are the only tree loops of the
+    # parse surface
+    walkers = {
+        path.name: sorted(
+            {fn for node, fn in _scopes(ast.parse(path.read_text()))
+             if isinstance(node, ast.While)}
+        )
+        for path in (API, KERNEL)
+    }
+    assert walkers == {"api.py": ["_nested", "preorder"], "parse.py": []}
