@@ -39,6 +39,7 @@ import re
 
 __all__ = ["SelectorError", "compile_selector", "select", "iter_elements"]
 
+from ..parser.api import preorder
 from ..parser.dom import ELEMENT, TEXT
 
 
@@ -235,15 +236,10 @@ def compile_selector(selector: str):
 
 
 def iter_elements(doc):
-    """Document-order elements, iteratively (documents can be 10k+
-    deep — the repo's no-recursion traversal rule). Does NOT descend
-    into <template> hidden contents (querySelectorAll semantics)."""
-    stack = [doc]
-    while stack:
-        node = stack.pop()
-        if node.type == ELEMENT:
-            yield node
-        stack.extend(reversed(node.children))
+    """Document-order elements over :func:`parser.api.preorder`, which
+    does NOT descend into <template> hidden contents (querySelectorAll
+    semantics)."""
+    return (node for node in preorder(doc) if node.type == ELEMENT)
 
 
 def _elem_children(parent):

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..operators.parse import decode_and_parse
-from ..parser.api import UTF8_ERROR, _to_text, tree_to_json
+from ..parser.api import _to_text, tree_to_json
 from ..parser.extract import extract_all, extract_text_v2
 
 
@@ -63,16 +63,9 @@ def _udf_n_nodes(html):
 
 
 def _udf_parse_error(html):
-    def err(h):
-        if h is None:
-            return None
-        try:
-            _to_text(h)
-            return None
-        except UnicodeDecodeError:
-            return UTF8_ERROR
-
-    return html.map(err)
+    # the row-level error of the kernel's contract: UTF8_ERROR or the
+    # parse-budget error; None for a parsed or null document
+    return html.map(lambda h: decode_and_parse(h)[1])
 
 
 def _udf_pdf_text(payload):

@@ -748,20 +748,24 @@ def minhash_jaccard_estimate(
     )
 
 
+def _oracle_small_cte(cols: str, src: str, keys: str, max_bucket: int) -> str:
+    """The oracles' bucket cap, the DuckDB twin of :func:`_bucket_pairs`'s
+    ``count(*) OVER`` cap: a ``small`` CTE holding ``cols`` of the rows
+    of ``src`` whose bucket (``keys``) has at most ``max_bucket`` rows."""
+    return (
+        f", small AS (SELECT {cols} FROM ("
+        f"SELECT *, count(*) OVER (PARTITION BY {keys}) AS _bsz "
+        f"FROM {src}) WHERE _bsz <= {max_bucket})"
+    )
+
+
 def oracle_minhash_jaccard_sql(
     table: str = "documents", k: int = 16, bands: int = 4, shingle: int = 5,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> str:
-    cte = _oracle_banded_cte(table, k, bands, shingle)
-    if max_bucket is not None:
-        cte += (
-            ", small AS (SELECT doc_id, band, bh FROM ("
-            "SELECT *, count(*) OVER (PARTITION BY band, bh) AS _bsz "
-            f"FROM banded) WHERE _bsz <= {max_bucket})"
-        )
-        src = "small"
-    else:
-        src = "banded"
+    cte = _oracle_banded_cte(table, k, bands, shingle) + _oracle_small_cte(
+        "doc_id, band, bh", "banded", "band, bh", max_bucket
+    )
     terms = " + ".join(
         f"(case when sa.sig[{j + 1}] IS NOT DISTINCT FROM sb.sig[{j + 1}] "
         "then 1 else 0 end)"
@@ -771,7 +775,7 @@ def oracle_minhash_jaccard_sql(
 WITH {cte},
 pairs AS (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM {src} a JOIN {src} b
+  FROM small a JOIN small b
   ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id
 )
 SELECT p.id_a, p.id_b,
@@ -1014,22 +1018,15 @@ def _oracle_banded_cte(
 
 def oracle_lsh_pairs_sql(
     table: str = "documents", k: int = 16, bands: int = 4, shingle: int = 5,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> str:
-    cte = _oracle_banded_cte(table, k, bands, shingle)
-    if max_bucket is not None:
-        cte += (
-            ", small AS (SELECT doc_id, band, bh FROM ("
-            "SELECT *, count(*) OVER (PARTITION BY band, bh) AS _bsz "
-            f"FROM banded) WHERE _bsz <= {max_bucket})"
-        )
-        src = "small"
-    else:
-        src = "banded"
+    cte = _oracle_banded_cte(table, k, bands, shingle) + _oracle_small_cte(
+        "doc_id, band, bh", "banded", "band, bh", max_bucket
+    )
     return (
         f"WITH {cte} "
         "SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b "
-        f"FROM {src} a JOIN {src} b "
+        "FROM small a JOIN small b "
         "ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id"
     )
 
@@ -1265,7 +1262,7 @@ def simhash_pairs(
 def oracle_simhash_pairs_sql(
     table: str = "documents",
     max_hamming: int = 3,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> str:
     inner = oracle_simhash64_sql(table)
     duck_chunks = (
@@ -1279,21 +1276,16 @@ def oracle_simhash_pairs_sql(
         "FROM sh"
         for i, e in enumerate(duck_chunks)
     )
-    src = "chunked"
-    cap = ""
-    if max_bucket is not None:
-        cap = (
-            ", small AS (SELECT doc_id, simhash_hi, simhash_lo, chunk, cv "
-            "FROM (SELECT *, count(*) OVER (PARTITION BY chunk, cv) AS _bsz "
-            f"FROM chunked) WHERE _bsz <= {max_bucket})"
-        )
-        src = "small"
+    cap = _oracle_small_cte(
+        "doc_id, simhash_hi, simhash_lo, chunk, cv", "chunked", "chunk, cv",
+        max_bucket,
+    )
     return f"""
 WITH sh AS ({inner}), chunked AS ({chunk_rows}){cap}
 SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
   (bit_count(xor(a.simhash_hi, b.simhash_hi))
    + bit_count(xor(a.simhash_lo, b.simhash_lo)))::BIGINT AS hamming
-FROM {src} a JOIN {src} b
+FROM small a JOIN small b
   ON a.chunk = b.chunk AND a.cv = b.cv AND a.doc_id < b.doc_id
 WHERE (bit_count(xor(a.simhash_hi, b.simhash_hi))
    + bit_count(xor(a.simhash_lo, b.simhash_lo))) <= {max_hamming}
@@ -1361,7 +1353,7 @@ def oracle_hamming_pairs_64_sql(
     hi_col: str = "hash_hi",
     lo_col: str = "hash_lo",
     max_hamming: int = 3,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    max_bucket: int = DEFAULT_MAX_BUCKET,
 ) -> str:
     """DuckDB mirror of :func:`hamming_pairs_64`; ``inner`` is a SELECT
     producing (id_col, hi_col, lo_col)."""
@@ -1376,21 +1368,16 @@ def oracle_hamming_pairs_64_sql(
         "FROM hsh"
         for i, e in enumerate(duck_chunks)
     )
-    src = "chunked"
-    cap = ""
-    if max_bucket is not None:
-        cap = (
-            f", small AS (SELECT {id_col}, {hi_col}, {lo_col}, chunk, cv "
-            "FROM (SELECT *, count(*) OVER (PARTITION BY chunk, cv) AS _bsz "
-            f"FROM chunked) WHERE _bsz <= {max_bucket})"
-        )
-        src = "small"
+    cap = _oracle_small_cte(
+        f"{id_col}, {hi_col}, {lo_col}, chunk, cv", "chunked", "chunk, cv",
+        max_bucket,
+    )
     return f"""
 WITH hsh AS ({inner}), chunked AS ({chunk_rows}){cap}
 SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b,
   (bit_count(xor(a.{hi_col}, b.{hi_col}))
    + bit_count(xor(a.{lo_col}, b.{lo_col})))::BIGINT AS hamming
-FROM {src} a JOIN {src} b
+FROM small a JOIN small b
   ON a.chunk = b.chunk AND a.cv = b.cv AND a.{id_col} < b.{id_col}
 WHERE (bit_count(xor(a.{hi_col}, b.{hi_col}))
    + bit_count(xor(a.{lo_col}, b.{lo_col}))) <= {max_hamming}

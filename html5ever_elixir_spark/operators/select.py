@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 
 from ..functions.selectors import compile_selector, iter_elements, \
     _matches_complex
+from ..parser.api import preorder
 from ..parser.dom import TEXT
 from .parse import map_documents, rows_emitter
 
@@ -37,16 +38,11 @@ __all__ = ["select_nodes", "select_counts"]
 
 
 def _node_text(node) -> str:
-    """Concatenated descendant text in document order, iteratively
-    (textContent; skips <template> hidden contents like the matcher)."""
-    out = []
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        if n.type == TEXT:
-            out.append(n.contents or "")
-        stack.extend(reversed(n.children))
-    return "".join(out)
+    """Concatenated descendant text in document order (textContent;
+    skips <template> hidden contents like the matcher)."""
+    return "".join(
+        n.contents or "" for n in preorder(node) if n.type == TEXT
+    )
 
 
 _MATCH_SCHEMA = pa.schema(

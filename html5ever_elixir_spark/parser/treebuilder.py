@@ -415,6 +415,23 @@ class TreeBuilder:
             else:
                 return
 
+    def _close_element(self, name: str, exclude: str | None = None,
+                       thorough=False) -> None:
+        """Generate implied end tags, count a parse error unless the
+        current node is the HTML element ``name``, then pop until that
+        element has been popped."""
+        self._generate_implied(exclude, thorough)
+        if not (
+            self.open[-1].namespace == HTML_NS and self.open[-1].name == name
+        ):
+            self.parse_errors += 1
+        self._pop_until_popped(name)
+
+    def _template_on_stack(self) -> bool:
+        return any(
+            n.namespace == HTML_NS and n.name == "template" for n in self.open
+        )
+
     def _close_p(self) -> None:
         self._generate_implied(exclude="p")
         if not (self.open and self.open[-1].namespace == HTML_NS
@@ -955,19 +972,10 @@ class TreeBuilder:
                 self.mode = M_AFTER_HEAD
                 return None
             if name == "template":
-                if not any(
-                    n.namespace == HTML_NS and n.name == "template"
-                    for n in self.open
-                ):
+                if not self._template_on_stack():
                     self.parse_errors += 1
                     return None
-                self._generate_implied(thorough=True)
-                if not (
-                    self.open[-1].namespace == HTML_NS
-                    and self.open[-1].name == "template"
-                ):
-                    self.parse_errors += 1
-                self._pop_until_popped("template")
+                self._close_element("template", thorough=True)
                 self._clear_afe_to_marker()
                 if self.template_modes:
                     self.template_modes.pop()
@@ -1012,7 +1020,7 @@ class TreeBuilder:
                 self._insert_element(tok)
                 self.mode = M_IN_FRAMESET
                 return None
-            if name in _IN_HEAD_START or name == "title":
+            if name in _IN_HEAD_START:
                 self.parse_errors += 1
                 self.open.append(self.head)
                 r = self._h_in_head(tok)
@@ -1066,9 +1074,8 @@ class TreeBuilder:
             return self._in_body_start(tok)
         return self._in_body_end(tok)
 
-    # -- hot-tag fast handlers (dispatched via _HOT_START/_HOT_END; the
-    # tag sets are disjoint so pulling them ahead of the elif chain is
-    # semantics-preserving — it only skips dead membership tests) -------
+    # -- hot-tag handlers (dispatched via _HOT_START/_HOT_END ahead of the
+    # elif chains, which hold no branch for these tags) -------------------
 
     def _sb_block(self, tok):
         if self._has_in_scope("p", _SCOPE_BUTTON):
@@ -1110,17 +1117,13 @@ class TreeBuilder:
         self.frameset_ok = False
         return None
 
-    def _sb_li(self, tok):
+    def _sb_list_item(self, tok):
+        # li closes an open li; dd and dt close an open dd or dt
+        names = ("li",) if tok[1] == "li" else ("dd", "dt")
         self.frameset_ok = False
         for node in reversed(self.open):
-            if node.namespace == HTML_NS and node.name == "li":
-                self._generate_implied(exclude="li")
-                if not (
-                    self.open[-1].namespace == HTML_NS
-                    and self.open[-1].name == "li"
-                ):
-                    self.parse_errors += 1
-                self._pop_until_popped("li")
+            if node.namespace == HTML_NS and node.name in names:
+                self._close_element(node.name, exclude=node.name)
                 break
             if self._is_special(node) and not (
                 node.namespace == HTML_NS
@@ -1137,12 +1140,7 @@ class TreeBuilder:
         if not self._has_in_scope(name):
             self.parse_errors += 1
             return None
-        self._generate_implied()
-        if not (
-            self.open[-1].namespace == HTML_NS and self.open[-1].name == name
-        ):
-            self.parse_errors += 1
-        self._pop_until_popped(name)
+        self._close_element(name)
         return None
 
     def _eb_p(self, tok):
@@ -1163,24 +1161,19 @@ class TreeBuilder:
             return h(self, tok)
         if name == "html":
             self.parse_errors += 1
-            if any(
-                n.namespace == HTML_NS and n.name == "template" for n in self.open
-            ):
+            if self._template_on_stack():
                 return None
             # first-wins attr merge on the root (arena_sink.rs:332-348)
             self.open[0].add_attrs_if_missing(tok[2])
             return None
-        if name in _IN_HEAD_START or name == "title":
+        if name in _IN_HEAD_START:
             return self._h_in_head(tok)
         if name == "body":
             self.parse_errors += 1
             if (
                 len(self.open) < 2
                 or self.open[1].name != "body"
-                or any(
-                    n.namespace == HTML_NS and n.name == "template"
-                    for n in self.open
-                )
+                or self._template_on_stack()
             ):
                 return None
             self.frameset_ok = False
@@ -1197,11 +1190,6 @@ class TreeBuilder:
             del self.open[1:]
             self._insert_element(tok)
             self.mode = M_IN_FRAMESET
-            return None
-        if name in BLOCK_CLOSERS:
-            if self._has_in_scope("p", _SCOPE_BUTTON):
-                self._close_p()
-            self._insert_element(tok)
             return None
         if name in HEADINGS:
             if self._has_in_scope("p", _SCOPE_BUTTON):
@@ -1220,60 +1208,14 @@ class TreeBuilder:
             self.frameset_ok = False
             return None
         if name == "form":
-            if self.form is not None and not any(
-                n.namespace == HTML_NS and n.name == "template" for n in self.open
-            ):
+            if self.form is not None and not self._template_on_stack():
                 self.parse_errors += 1
                 return None
             if self._has_in_scope("p", _SCOPE_BUTTON):
                 self._close_p()
             el = self._insert_element(tok)
-            if not any(
-                n.namespace == HTML_NS and n.name == "template" for n in self.open
-            ):
+            if not self._template_on_stack():
                 self.form = el
-            return None
-        if name == "li":
-            self.frameset_ok = False
-            for node in reversed(self.open):
-                if node.namespace == HTML_NS and node.name == "li":
-                    self._generate_implied(exclude="li")
-                    if not (
-                        self.open[-1].namespace == HTML_NS
-                        and self.open[-1].name == "li"
-                    ):
-                        self.parse_errors += 1
-                    self._pop_until_popped("li")
-                    break
-                if self._is_special(node) and not (
-                    node.namespace == HTML_NS
-                    and node.name in ("address", "div", "p")
-                ):
-                    break
-            if self._has_in_scope("p", _SCOPE_BUTTON):
-                self._close_p()
-            self._insert_element(tok)
-            return None
-        if name in ("dd", "dt"):
-            self.frameset_ok = False
-            for node in reversed(self.open):
-                if node.namespace == HTML_NS and node.name in ("dd", "dt"):
-                    self._generate_implied(exclude=node.name)
-                    if not (
-                        self.open[-1].namespace == HTML_NS
-                        and self.open[-1].name == node.name
-                    ):
-                        self.parse_errors += 1
-                    self._pop_until_popped(node.name)
-                    break
-                if self._is_special(node) and not (
-                    node.namespace == HTML_NS
-                    and node.name in ("address", "div", "p")
-                ):
-                    break
-            if self._has_in_scope("p", _SCOPE_BUTTON):
-                self._close_p()
-            self._insert_element(tok)
             return None
         if name == "plaintext":
             if self._has_in_scope("p", _SCOPE_BUTTON):
@@ -1290,37 +1232,12 @@ class TreeBuilder:
             self._insert_element(tok)
             self.frameset_ok = False
             return None
-        if name == "a":
-            for i in range(len(self.afe) - 1, -1, -1):
-                e = self.afe[i]
-                if e is MARKER:
-                    break
-                if e[0].name == "a":
-                    self.parse_errors += 1
-                    self._adoption_agency(("end", "a"))
-                    j = self._afe_index_of(e[0])
-                    if j is not None:
-                        del self.afe[j]
-                    for k in range(len(self.open) - 1, -1, -1):
-                        if self.open[k] is e[0]:
-                            del self.open[k]
-                            break
-                    break
-            self._reconstruct_afe()
-            el = self._insert_element(tok)
-            self._push_afe(el, tok)
-            return None
         if name == "nobr":
             self._reconstruct_afe()
             if self._has_in_scope("nobr"):
                 self.parse_errors += 1
                 self._adoption_agency(("end", "nobr"))
                 self._reconstruct_afe()
-            el = self._insert_element(tok)
-            self._push_afe(el, tok)
-            return None
-        if name in FORMATTING:  # b big code em font i s small strike strong tt u
-            self._reconstruct_afe()
             el = self._insert_element(tok)
             self._push_afe(el, tok)
             return None
@@ -1336,12 +1253,6 @@ class TreeBuilder:
             self._insert_element(tok)
             self.frameset_ok = False
             self.mode = M_IN_TABLE
-            return None
-        if name in ("area", "br", "embed", "img", "keygen", "wbr"):
-            self._reconstruct_afe()
-            self._insert_element(tok)
-            self.open.pop()
-            self.frameset_ok = False
             return None
         if name == "input":
             self._reconstruct_afe()
@@ -1475,21 +1386,8 @@ class TreeBuilder:
             return tok
         if name == "template":
             return self._h_in_head(tok)
-        if name in BLOCK_CLOSERS and name != "p":
-            if not self._has_in_scope(name):
-                self.parse_errors += 1
-                return None
-            self._generate_implied()
-            if not (
-                self.open[-1].namespace == HTML_NS and self.open[-1].name == name
-            ):
-                self.parse_errors += 1
-            self._pop_until_popped(name)
-            return None
         if name == "form":
-            if not any(
-                n.namespace == HTML_NS and n.name == "template" for n in self.open
-            ):
+            if not self._template_on_stack():
                 node = self.form
                 self.form = None
                 if node is None or not self._has_in_scope(node):
@@ -1506,40 +1404,19 @@ class TreeBuilder:
             if not self._has_in_scope("form"):
                 self.parse_errors += 1
                 return None
-            self._generate_implied()
-            if not (
-                self.open[-1].namespace == HTML_NS and self.open[-1].name == "form"
-            ):
-                self.parse_errors += 1
-            self._pop_until_popped("form")
-            return None
-        if name == "p":
-            if not self._has_in_scope("p", _SCOPE_BUTTON):
-                self.parse_errors += 1
-                self._insert_phantom("p")
-            self._close_p()
+            self._close_element("form")
             return None
         if name == "li":
             if not self._has_in_scope("li", _SCOPE_LIST_ITEM):
                 self.parse_errors += 1
                 return None
-            self._generate_implied(exclude="li")
-            if not (
-                self.open[-1].namespace == HTML_NS and self.open[-1].name == "li"
-            ):
-                self.parse_errors += 1
-            self._pop_until_popped("li")
+            self._close_element("li", exclude="li")
             return None
         if name in ("dd", "dt"):
             if not self._has_in_scope(name):
                 self.parse_errors += 1
                 return None
-            self._generate_implied(exclude=name)
-            if not (
-                self.open[-1].namespace == HTML_NS and self.open[-1].name == name
-            ):
-                self.parse_errors += 1
-            self._pop_until_popped(name)
+            self._close_element(name, exclude=name)
             return None
         if name in HEADINGS:
             if not any(self._has_in_scope(h) for h in HEADINGS):
@@ -1552,23 +1429,13 @@ class TreeBuilder:
                 self.parse_errors += 1
             self._pop_until_popped(HEADINGS)
             return None
-        if name in FORMATTING or name == "nobr" or name == "a":
-            return self._adoption_agency(tok)
         if name in ("applet", "marquee", "object"):
             if not self._has_in_scope(name):
                 self.parse_errors += 1
                 return None
-            self._generate_implied()
-            if not (
-                self.open[-1].namespace == HTML_NS and self.open[-1].name == name
-            ):
-                self.parse_errors += 1
-            self._pop_until_popped(name)
+            self._close_element(name)
             self._clear_afe_to_marker()
             return None
-        if name == "br":
-            self.parse_errors += 1
-            return ("start", "br", [], False)
         return self._any_other_end_tag(tok)
 
     # -- text (RAWTEXT/RCDATA/script payload) --------------------------------
@@ -1657,10 +1524,7 @@ class TreeBuilder:
                 return None
             if name == "form":
                 self.parse_errors += 1
-                if self.form is not None or any(
-                    n.namespace == HTML_NS and n.name == "template"
-                    for n in self.open
-                ):
+                if self.form is not None or self._template_on_stack():
                     return None
                 self.form = self._insert_element(tok)
                 self.open.pop()
@@ -1931,13 +1795,7 @@ class TreeBuilder:
                 if not self._has_in_table_scope(name):
                     self.parse_errors += 1
                     return None
-                self._generate_implied()
-                if not (
-                    self.open[-1].namespace == HTML_NS
-                    and self.open[-1].name == name
-                ):
-                    self.parse_errors += 1
-                self._pop_until_popped(name)
+                self._close_element(name)
                 self._clear_afe_to_marker()
                 self.mode = M_IN_ROW
                 return None
@@ -2088,7 +1946,7 @@ class TreeBuilder:
             return self._h_in_body(tok)
         if t == "start":
             name = tok[1]
-            if name in _IN_HEAD_START or name == "title":
+            if name in _IN_HEAD_START:
                 return self._h_in_head(tok)
             if name in ("caption", "colgroup", "tbody", "tfoot", "thead"):
                 self.template_modes.pop()
@@ -2120,9 +1978,7 @@ class TreeBuilder:
             self.parse_errors += 1
             return None
         # eof
-        if not any(
-            n.namespace == HTML_NS and n.name == "template" for n in self.open
-        ):
+        if not self._template_on_stack():
             self.done = True
             return None
         self.parse_errors += 1
@@ -2477,39 +2333,36 @@ def _sniff_quirks(name, public, system, force_quirks) -> str:
 
 
 # hot-tag dispatch tables (built after the class so methods exist).
-# Values are plain functions taking (self, tok); sets are disjoint from
-# each other and semantics-identical to the elif chain they bypass.
+# Values are plain functions taking (self, tok). A hot table entry is
+# the only in-body handler for its tag: the elif chains of
+# _in_body_start/_in_body_end hold no branch for it.
 _HOT_START = {
     "a": TreeBuilder._sb_a,
-    "li": TreeBuilder._sb_li,
+    "li": TreeBuilder._sb_list_item,
+    "dd": TreeBuilder._sb_list_item,
+    "dt": TreeBuilder._sb_list_item,
 }
-for _t in ("div", "p", "center", "blockquote", "section", "article",
-           "aside", "nav", "footer", "header", "main", "ul", "ol", "dl",
-           "details", "figure", "figcaption", "menu", "summary",
-           "fieldset", "dir", "hgroup", "dialog"):
-    _HOT_START[_t] = TreeBuilder._sb_block
-for _t in ("b", "big", "code", "em", "font", "i", "s", "small", "strike",
-           "strong", "tt", "u"):
-    _HOT_START[_t] = TreeBuilder._sb_formatting
-for _t in ("br", "img", "area", "embed", "keygen", "wbr"):
-    _HOT_START[_t] = TreeBuilder._sb_void
+_HOT_START.update(dict.fromkeys(BLOCK_CLOSERS, TreeBuilder._sb_block))
+_HOT_START.update(
+    dict.fromkeys(FORMATTING - {"a", "nobr"}, TreeBuilder._sb_formatting)
+)
+_HOT_START.update(
+    dict.fromkeys(("area", "br", "embed", "img", "keygen", "wbr"),
+                  TreeBuilder._sb_void)
+)
 
 _HOT_END = {
     "p": TreeBuilder._eb_p,
     "br": TreeBuilder._eb_br,
 }
-for _t in ("a", "b", "big", "code", "em", "font", "i", "nobr", "s",
-           "small", "strike", "strong", "tt", "u"):
-    _HOT_END[_t] = TreeBuilder._adoption_agency
-for _t in ("div", "center", "blockquote", "section", "article", "aside",
-           "nav", "footer", "header", "main", "ul", "ol", "dl", "details",
-           "figure", "figcaption", "menu", "summary", "fieldset", "dir",
-           "hgroup", "dialog", "address",
-           # the spec's in-body END-tag block set additionally includes
-           # pre/listing/button (WHATWG §13.2.6.4.7 "An end tag whose tag
-           # name is one of …"); the START-tag sets deliberately differ
-           "pre", "listing", "button"):
-    _HOT_END[_t] = TreeBuilder._eb_block
+_HOT_END.update(dict.fromkeys(FORMATTING, TreeBuilder._adoption_agency))
+# the spec's in-body END-tag block set additionally includes
+# pre/listing/button (WHATWG §13.2.6.4.7 "An end tag whose tag name is
+# one of …"); the START-tag sets deliberately differ
+_HOT_END.update(
+    dict.fromkeys(BLOCK_CLOSERS - {"p"} | {"pre", "listing", "button"},
+                  TreeBuilder._eb_block)
+)
 
 # end tags whose in-body steps are one pop when the current node is the
 # HTML element being closed (see _in_body_end)

@@ -139,3 +139,77 @@ def test_one_walker_per_tree_encoding():
         for path in (API, KERNEL)
     }
     assert walkers == {"api.py": ["_nested", "preorder"], "parse.py": []}
+
+
+def _reversed_children(node):
+    # reversed(<x>.children): a hand-rolled preorder stack push
+    return (
+        _called(node, "reversed")
+        and len(node.args) == 1
+        and isinstance(node.args[0], ast.Attribute)
+        and node.args[0].attr == "children"
+    )
+
+
+def test_preorder_walks_use_api_preorder():
+    # a document-order walk is api.preorder; only the walks that prune
+    # (nested tables) or need enter/exit events (markdown) keep a stack
+    found = sorted(
+        f"{path.parent.name}/{path.name}::{fn}"
+        for d in ("functions", "operators")
+        for path in sorted((PKG / d).glob("*.py"))
+        for node, fn in _scopes(ast.parse(path.read_text()))
+        if _reversed_children(node)
+    )
+    assert sorted(set(found)) == [
+        "operators/markdown.py::_doc_markdown",
+        "operators/tables.py::_table_trs",
+    ], found
+
+
+def _chain_tag_names(fn, module):
+    """Tag names the in-body elif chain ``fn`` compares ``name`` with
+    (``==`` or ``in``) after its hot-table lookup; a set name such as
+    ``BLOCK_CLOSERS`` is resolved through ``module``."""
+    lookup = next(
+        i for i, st in enumerate(fn.body)
+        for n in ast.walk(st)
+        if _called(n, "get")
+        and isinstance(n.func.value, ast.Name)
+        and n.func.value.id in ("_HOT_START", "_HOT_END")
+    )
+    names = set()
+    for st in fn.body[lookup + 1:]:
+        for node in ast.walk(st):
+            if not (isinstance(node, ast.Compare)
+                    and isinstance(node.left, ast.Name)
+                    and node.left.id == "name"):
+                continue
+            for op, comp in zip(node.ops, node.comparators):
+                if not isinstance(op, (ast.Eq, ast.In)):
+                    continue
+                if isinstance(comp, ast.Name):
+                    names |= set(getattr(module, comp.id))
+                elif isinstance(comp, ast.Constant):
+                    names.add(comp.value)
+                else:
+                    names |= set(ast.literal_eval(comp))
+    return names
+
+
+def test_hot_table_entry_is_the_only_in_body_handler():
+    # _in_body_start/_in_body_end look a tag up in _HOT_START/_HOT_END
+    # first, so a chain branch for a hot tag could never run
+    from html5ever_elixir_spark.parser import treebuilder
+
+    path = PKG / "parser" / "treebuilder.py"
+    methods = {
+        node.name: node for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.FunctionDef)
+    }
+    shadowed = {
+        fn: sorted(_chain_tag_names(methods[fn], treebuilder) & set(table))
+        for fn, table in (("_in_body_start", treebuilder._HOT_START),
+                          ("_in_body_end", treebuilder._HOT_END))
+    }
+    assert shadowed == {"_in_body_start": [], "_in_body_end": []}

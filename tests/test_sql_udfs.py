@@ -25,6 +25,30 @@ def test_sql_scalar_functions(spark):
     assert nul.t is None and nul.x is None and nul.n is None
 
 
+def test_h5_parse_error_is_the_kernel_error(spark):
+    # h5_parse_error answers with decode_and_parse's row-level error, so
+    # a parse-budget document reports it as every operator's error
+    # column does; a null document parses as the empty one
+    from html5ever_elixir_spark.functions.sql_udfs import register_all
+    from html5ever_elixir_spark.operators.parse import decode_and_parse
+    from html5ever_elixir_spark.parser.api import UTF8_ERROR
+
+    register_all(spark)
+    deep = b"<div>" * 600
+    budget = decode_and_parse(deep)[1]
+    assert budget.startswith("parse budget exceeded: ")
+    spark.createDataFrame(
+        [(0, bytearray(deep)), (1, bytearray(b"\xff")), (2, None)],
+        "i bigint, html binary",
+    ).createOrReplaceTempView("bad_pages")
+    rows = spark.sql(
+        "SELECT h5_parse_error(html) AS e, h5_title(html) AS t "
+        "FROM bad_pages ORDER BY i"
+    ).collect()
+    assert [r.e for r in rows] == [budget, UTF8_ERROR, None]
+    assert [r.t for r in rows] == [None, None, None]
+
+
 def test_h5_pdf_text_sql_udf(spark):
     from html5ever_elixir_spark.functions.sql_udfs import register_all
     from html5ever_elixir_spark.parser.pdf import make_simple_pdf
