@@ -20,6 +20,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..parser.pdf import _png_unfilter
 from . import map_rows
 from .dedup import DEFAULT_MAX_BUCKET
 
@@ -82,7 +83,7 @@ _PNG_MAX_SAMPLES = 1 << 27
 def _decode_png(payload: bytes) -> tuple[int, int, list[int]]:
     """Pure-Python PNG decode (stdlib only): chunk walk with CRC
     verification, concatenated-IDAT zlib inflate, per-scanline unfilter
-    (types 0-4 — the same predictor math parser/pdf.py applies for PNG
+    (types 0-4 — the row kernel parser/pdf.py applies for PNG
     predictors), 8-bit gray / gray+alpha / RGB / RGBA / paletted
     (PLTE). Adam7-interlaced images are deinterlaced (per-pass
     unfiltering — each pass is its own filtered sub-image); 16-bit
@@ -198,37 +199,16 @@ def _adam7_dims(w: int, h: int, p: int) -> tuple[int, int]:
 
 def _png_unfilter_rows(raw, off: int, w: int, h: int, bypp: int):
     """Yield unfiltered scanlines of a (sub-)image whose filtered bytes
-    start at ``off`` (shared by the sequential and Adam7 paths);
-    ``bypp`` = bytes per pixel (filters reference the PREVIOUS PIXEL's
-    corresponding byte, so 16-bit depths just widen the stride)."""
-    nchan = bypp
+    start at ``off`` (shared by the sequential and Adam7 paths) through
+    the one row kernel ``parser.pdf._png_unfilter``; ``bypp`` = bytes per
+    pixel (16-bit depths just widen the stride)."""
     rowlen = w * bypp
     prev = bytearray(rowlen)
     for r in range(h):
         base = off + r * (rowlen + 1)
         ft = raw[base]
         row = bytearray(raw[base + 1 : base + 1 + rowlen])
-        if ft == 1:  # Sub
-            for j in range(nchan, rowlen):
-                row[j] = (row[j] + row[j - nchan]) & 0xFF
-        elif ft == 2:  # Up
-            for j in range(rowlen):
-                row[j] = (row[j] + prev[j]) & 0xFF
-        elif ft == 3:  # Average
-            for j in range(rowlen):
-                left = row[j - nchan] if j >= nchan else 0
-                row[j] = (row[j] + ((left + prev[j]) >> 1)) & 0xFF
-        elif ft == 4:  # Paeth
-            for j in range(rowlen):
-                a = row[j - nchan] if j >= nchan else 0
-                b = prev[j]
-                c = prev[j - nchan] if j >= nchan else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                row[j] = (
-                    row[j] + (a if pa <= pb and pa <= pc else b if pb <= pc else c)
-                ) & 0xFF
-        elif ft != 0:
+        if not _png_unfilter(ft, row, prev, bypp):
             raise CorruptRasterError(f"PNG filter type {ft}")
         prev = row
         yield row

@@ -74,7 +74,11 @@ def docs_to_pdfs(
     (tests/benchmarks only — no external data): text wrapped every
     ``words_per_line`` words, one Tj per line, Flate-compressed streams.
     The wrap rule is reproducible in SQL, so a DuckDB oracle can predict
-    the extraction roundtrip exactly.
+    the extraction roundtrip exactly. Every layout below comes out of
+    the one page-tree builder and object/xref serializer of
+    ``parser/pdf.py``, and every encryption out of its one
+    stream-rewrite loop, so the layouts differ only in their line
+    encoder, font objects and per-object cipher.
 
     ``encrypt_every=k`` encrypts every k-th doc (doc_id % k == 0) with
     the standard security handler, empty user password — cycling RC4

@@ -42,16 +42,31 @@ embedded glyph programs — a corpus job routes those rows to DISTINCT
 error values / U+FFFD rather than failing (same row-level error
 contract as the HTML parser's invalid-UTF-8 path).
 
-The companion :func:`make_simple_pdf` produces deterministic
-single-font PDFs used by the oracle roundtrip gate and tests; its
-output always exercises FlateDecode so the extractor's inflate path is
-load-bearing, not decorative.
+The companion writers produce deterministic PDFs for the oracle
+roundtrip gate and tests; their content is always Flate-compressed, so
+the extractor's inflate path is load-bearing, not decorative. Each is
+one piece of a shared core: :func:`_write_pdf` is the one object/xref
+serializer, :func:`_paged_text_pdf` the one page-tree text builder
+(:func:`make_simple_pdf`, :func:`make_cid_pdf` and
+:func:`make_ucs2_pdf` supply only a line encoder and their font
+objects), and the ``encrypt_pdf_*`` writers supply only a per-object
+cipher and their /Encrypt entries to :func:`_encrypt_streams`.
+
+Reader and writers walk a file the same way: :func:`_scan_objects` is
+the one linear object scan, :func:`_stream_span` the one rule for
+where a stream payload lies, and :func:`_rewrite_stream` the one
+payload rewrite (decryption and encryption alike). The PNG row
+unfilter :func:`_png_unfilter` serves the PDF predictors here and the
+PNG decoder in ``operators/multimodal.py``.
 """
 
 from __future__ import annotations
 
+import functools
 import re
+import struct
 import zlib
+from hashlib import md5, sha256, sha384, sha512
 
 # ---------------------------------------------------------------------------
 # writer (deterministic synthetic PDFs for tests/benchmarks — no
@@ -73,61 +88,92 @@ def _pdf_show_string(line: str) -> str:
     return f"({_escape_pdf_string(line)})"
 
 
-def make_simple_pdf(lines: list[str], lines_per_page: int = 40) -> bytes:
-    """One-font (Helvetica) PDF: each text line is one Tj show, pages
-    break every ``lines_per_page`` lines. Content streams are
-    Flate-compressed. Latin-1 lines use literal strings; anything else
-    is written as a BOM-prefixed UTF-16BE hex string."""
-    pages = [
-        lines[i : i + lines_per_page]
-        for i in range(0, max(len(lines), 1), lines_per_page)
-    ]
-    objs: dict[int, bytes] = {}
-    font_id = 3 + 2 * len(pages)
-    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(len(pages)))
-    objs[1] = b"<< /Type /Catalog /Pages 2 0 R >>"
-    objs[2] = (
-        f"<< /Type /Pages /Kids [{kids}] /Count {len(pages)} >>".encode()
-    )
-    for i, page_lines in enumerate(pages):
-        page_id = 3 + 2 * i
-        content_id = page_id + 1
-        ops = ["BT", "/F1 12 Tf", "72 720 Td"]
-        for j, line in enumerate(page_lines):
-            if j:
-                ops.append("0 -14 Td")
-            ops.append(f"{_pdf_show_string(line)} Tj")
-        ops.append("ET")
-        raw = "\n".join(ops).encode("latin-1")
-        flate = zlib.compress(raw)
-        objs[page_id] = (
-            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            f"/Contents {content_id} 0 R "
-            f"/Resources << /Font << /F1 {font_id} 0 R >> >> >>".encode()
-        )
-        objs[content_id] = (
-            f"<< /Length {len(flate)} /Filter /FlateDecode >>\nstream\n".encode()
-            + flate
-            + b"\nendstream"
-        )
-    objs[font_id] = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+def _text_ops(lines: list[str], show) -> bytes:
+    """One page's content: each line one ``Tj`` of ``show(line)``, 14 pt
+    apart, in font /F1."""
+    ops = ["BT", "/F1 12 Tf", "72 720 Td"]
+    for j, line in enumerate(lines):
+        if j:
+            ops.append("0 -14 Td")
+        ops.append(f"{show(line)} Tj")
+    ops.append("ET")
+    return "\n".join(ops).encode("latin-1")
 
-    out = bytearray(b"%PDF-1.4\n")
+
+def _flate_stream(raw: bytes, pre: str = "", post: str = "") -> bytes:
+    """Object body of a Flate stream: ``pre`` and ``post`` are the dict
+    entries written before /Length and after /Filter."""
+    flate = zlib.compress(raw)
+    return (
+        f"<< {pre}/Length {len(flate)} /Filter /FlateDecode{post} >>\n"
+        f"stream\n".encode() + flate + b"\nendstream"
+    )
+
+
+def _write_pdf(objs: dict[int, bytes], xref_stream=None) -> bytes:
+    """The file: every object of ``objs`` (id → body) in id order, then
+    the cross-reference section and ``startxref``. By default that is a
+    classic table and trailer (ids must run 1..max). With
+    ``xref_stream(offsets, at)`` it is a PDF 1.5 cross-reference stream
+    object, numbered ``max(objs) + 1``, whose body the callable builds
+    from the object offsets and its own offset."""
+    out = bytearray(b"%PDF-1.5\n" if xref_stream is not None
+                    else b"%PDF-1.4\n")
     offsets = {}
     for oid in sorted(objs):
         offsets[oid] = len(out)
         out += f"{oid} 0 obj\n".encode() + objs[oid] + b"\nendobj\n"
     xref_at = len(out)
     n = max(objs) + 1
-    out += f"xref\n0 {n}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for oid in range(1, n):
-        out += f"{offsets[oid]:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {n} /Root 1 0 R >>\nstartxref\n{xref_at}\n%%EOF"
-    ).encode()
+    if xref_stream is not None:
+        out += (f"{n} 0 obj\n".encode() + xref_stream(offsets, xref_at)
+                + b"\nendobj\n")
+    else:
+        out += f"xref\n0 {n}\n0000000000 65535 f \n".encode()
+        for oid in range(1, n):
+            out += f"{offsets[oid]:010d} 00000 n \n".encode()
+        out += f"trailer\n<< /Size {n} /Root 1 0 R >>\n".encode()
+    out += f"startxref\n{xref_at}\n%%EOF".encode()
     return bytes(out)
 
+
+def _paged_text_pdf(lines: list[str], lines_per_page: int, show,
+                    fonts) -> bytes:
+    """The page-tree layout every text writer shares: catalog (1), page
+    tree (2), then a page and its Flate content stream per
+    ``lines_per_page`` lines (3, 4, 5, ...), each page showing its lines
+    through ``show`` in font /F1. ``fonts(font_id)`` returns the font
+    object bodies, numbered from ``font_id`` (the first is /F1)."""
+    pages = [
+        lines[i : i + lines_per_page]
+        for i in range(0, max(len(lines), 1), lines_per_page)
+    ]
+    font_id = 3 + 2 * len(pages)
+    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(len(pages)))
+    objs = {
+        1: b"<< /Type /Catalog /Pages 2 0 R >>",
+        2: f"<< /Type /Pages /Kids [{kids}] /Count {len(pages)} >>".encode(),
+    }
+    for i, page_lines in enumerate(pages):
+        page_id = 3 + 2 * i
+        objs[page_id] = (
+            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+            f"/Contents {page_id + 1} 0 R "
+            f"/Resources << /Font << /F1 {font_id} 0 R >> >> >>".encode()
+        )
+        objs[page_id + 1] = _flate_stream(_text_ops(page_lines, show))
+    for k, body in enumerate(fonts(font_id)):
+        objs[font_id + k] = body
+    return _write_pdf(objs)
+
+
+def make_simple_pdf(lines: list[str], lines_per_page: int = 40) -> bytes:
+    """One-font (Helvetica) PDF: each text line is one Tj show, pages
+    break every ``lines_per_page`` lines. Content streams are
+    Flate-compressed. Latin-1 lines use literal strings; anything else
+    is written as a BOM-prefixed UTF-16BE hex string."""
+    return _paged_text_pdf(lines, lines_per_page, _pdf_show_string, lambda _: [
+        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"])
 
 
 def make_cid_pdf(lines: list[str], lines_per_page: int = 40) -> bytes:
@@ -147,13 +193,8 @@ def make_cid_pdf(lines: list[str], lines_per_page: int = 40) -> bytes:
     hi_code = 0x0100 + max(len(charset) - 1, 0)
 
     def encode_line(ln: str) -> str:
-        hexs = []
-        for c in ln:
-            if c == " ":
-                hexs.append("20")
-            else:
-                hexs.append(f"{code_of[c]:04X}")
-        return "<" + "".join(hexs) + ">"
+        return "<" + "".join(
+            "20" if c == " " else f"{code_of[c]:04X}" for c in ln) + ">"
 
     # CMap: first min(4, n) chars via cidchar, the rest one cidrange
     n_char = min(4, len(charset))
@@ -182,7 +223,6 @@ def make_cid_pdf(lines: list[str], lines_per_page: int = 40) -> bytes:
             "endcidrange",
         ]
     cid_lines += ["endcmap", "end", "end"]
-    cmap_raw = "\n".join(cid_lines).encode("ascii")
 
     # ToUnicode: 1-byte space bfchar + one bfchar per 2-byte code
     tou_lines = [
@@ -201,73 +241,21 @@ def make_cid_pdf(lines: list[str], lines_per_page: int = 40) -> bytes:
         tou_lines += block
         tou_lines.append("endbfchar")
     tou_lines += ["endcmap", "end"]
-    tou_raw = "\n".join(tou_lines).encode("ascii")
 
-    pages = [
-        lines[i : i + lines_per_page]
-        for i in range(0, max(len(lines), 1), lines_per_page)
-    ]
-    objs: dict[int, bytes] = {}
-    font_id = 3 + 2 * len(pages)
-    desc_id, cmap_id, tou_id = font_id + 1, font_id + 2, font_id + 3
-    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(len(pages)))
-    objs[1] = b"<< /Type /Catalog /Pages 2 0 R >>"
-    objs[2] = (
-        f"<< /Type /Pages /Kids [{kids}] /Count {len(pages)} >>".encode()
-    )
-    for i, page_lines in enumerate(pages):
-        page_id = 3 + 2 * i
-        content_id = page_id + 1
-        ops = ["BT", "/F1 12 Tf", "72 720 Td"]
-        for j, line in enumerate(page_lines):
-            if j:
-                ops.append("0 -14 Td")
-            ops.append(f"{encode_line(line)} Tj")
-        ops.append("ET")
-        flate = zlib.compress("\n".join(ops).encode("ascii"))
-        objs[page_id] = (
-            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            f"/Contents {content_id} 0 R "
-            f"/Resources << /Font << /F1 {font_id} 0 R >> >> >>".encode()
-        )
-        objs[content_id] = (
-            f"<< /Length {len(flate)} /Filter /FlateDecode >>\nstream\n"
-            .encode() + flate + b"\nendstream"
-        )
-    objs[font_id] = (
-        f"<< /Type /Font /Subtype /Type0 /BaseFont /TestCID "
-        f"/Encoding {cmap_id} 0 R /DescendantFonts [{desc_id} 0 R] "
-        f"/ToUnicode {tou_id} 0 R >>".encode()
-    )
-    objs[desc_id] = (
-        b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /TestCID "
-        b"/CIDSystemInfo << /Registry (Test) /Ordering (Roundtrip) "
-        b"/Supplement 0 >> >>"
-    )
-    for oid, raw in ((cmap_id, cmap_raw), (tou_id, tou_raw)):
-        flate = zlib.compress(raw)
-        head = f"<< /Length {len(flate)} /Filter /FlateDecode"
-        if oid == cmap_id:
-            head += " /Type /CMap /CMapName /Test-Roundtrip-H"
-        objs[oid] = (
-            (head + " >>\nstream\n").encode() + flate + b"\nendstream"
-        )
+    def fonts(font_id: int) -> list[bytes]:
+        return [
+            f"<< /Type /Font /Subtype /Type0 /BaseFont /TestCID "
+            f"/Encoding {font_id + 2} 0 R /DescendantFonts [{font_id + 1} 0 R] "
+            f"/ToUnicode {font_id + 3} 0 R >>".encode(),
+            b"<< /Type /Font /Subtype /CIDFontType2 /BaseFont /TestCID "
+            b"/CIDSystemInfo << /Registry (Test) /Ordering (Roundtrip) "
+            b"/Supplement 0 >> >>",
+            _flate_stream("\n".join(cid_lines).encode("ascii"),
+                          post=" /Type /CMap /CMapName /Test-Roundtrip-H"),
+            _flate_stream("\n".join(tou_lines).encode("ascii")),
+        ]
 
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = {}
-    for oid in sorted(objs):
-        offsets[oid] = len(out)
-        out += f"{oid} 0 obj\n".encode() + objs[oid] + b"\nendobj\n"
-    xref_at = len(out)
-    n = max(objs) + 1
-    out += f"xref\n0 {n}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for oid in range(1, n):
-        out += f"{offsets[oid]:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {n} /Root 1 0 R >>\nstartxref\n{xref_at}\n%%EOF"
-    ).encode()
-    return bytes(out)
+    return _paged_text_pdf(lines, lines_per_page, encode_line, fonts)
 
 
 #: the public Adobe predefined CMap families this generator/reader
@@ -312,63 +300,13 @@ def make_ucs2_pdf(
             codes.append(f"{cp:04X}")
         return "<" + "".join(codes) + ">"
 
-    pages = [
-        lines[i : i + lines_per_page]
-        for i in range(0, max(len(lines), 1), lines_per_page)
-    ]
-    objs: dict[int, bytes] = {}
-    font_id = 3 + 2 * len(pages)
-    desc_id = font_id + 1
-    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(len(pages)))
-    objs[1] = b"<< /Type /Catalog /Pages 2 0 R >>"
-    objs[2] = (
-        f"<< /Type /Pages /Kids [{kids}] /Count {len(pages)} >>".encode()
-    )
-    for i, page_lines in enumerate(pages):
-        page_id = 3 + 2 * i
-        content_id = page_id + 1
-        ops = ["BT", "/F1 12 Tf", "72 720 Td"]
-        for j, line in enumerate(page_lines):
-            if j:
-                ops.append("0 -14 Td")
-            ops.append(f"{encode_line(line)} Tj")
-        ops.append("ET")
-        flate = zlib.compress("\n".join(ops).encode("ascii"))
-        objs[page_id] = (
-            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            f"/Contents {content_id} 0 R "
-            f"/Resources << /Font << /F1 {font_id} 0 R >> >> >>".encode()
-        )
-        objs[content_id] = (
-            f"<< /Length {len(flate)} /Filter /FlateDecode >>\nstream\n"
-            .encode() + flate + b"\nendstream"
-        )
-    objs[font_id] = (
+    return _paged_text_pdf(lines, lines_per_page, encode_line, lambda f: [
         f"<< /Type /Font /Subtype /Type0 /BaseFont /TestUCS2 "
-        f"/Encoding /{cmap_name} /DescendantFonts [{desc_id} 0 R] >>"
-        .encode()
-    )
-    objs[desc_id] = (
+        f"/Encoding /{cmap_name} /DescendantFonts [{f + 1} 0 R] >>".encode(),
         f"<< /Type /Font /Subtype /CIDFontType0 /BaseFont /TestUCS2 "
         f"/CIDSystemInfo << /Registry (Adobe) /Ordering ({ordering}) "
-        f"/Supplement {supplement} >> >>".encode()
-    )
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = {}
-    for oid in sorted(objs):
-        offsets[oid] = len(out)
-        out += f"{oid} 0 obj\n".encode() + objs[oid] + b"\nendobj\n"
-    xref_at = len(out)
-    n = max(objs) + 1
-    out += f"xref\n0 {n}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for oid in range(1, n):
-        out += f"{offsets[oid]:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {n} /Root 1 0 R >>\nstartxref\n{xref_at}\n%%EOF"
-    ).encode()
-    return bytes(out)
+        f"/Supplement {supplement} >> >>".encode(),
+    ])
 
 
 def make_objstm_pdf(lines: list[str], predictor: int = 12) -> bytes:
@@ -378,14 +316,6 @@ def make_objstm_pdf(lines: list[str], predictor: int = 12) -> bytes:
     (W [1 4 1], PNG-up predictor by default) — the modern layout
     crawled PDFs overwhelmingly use. Single page, same text model as
     :func:`make_simple_pdf`."""
-    ops = ["BT", "/F1 12 Tf", "72 720 Td"]
-    for j, line in enumerate(lines):
-        if j:
-            ops.append("0 -14 Td")
-        ops.append(f"{_pdf_show_string(line)} Tj")
-    ops.append("ET")
-    content = zlib.compress("\n".join(ops).encode("latin-1"))
-
     dicts = [
         (1, b"<< /Type /Catalog /Pages 2 0 R >>"),
         (2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>"),
@@ -397,49 +327,34 @@ def make_objstm_pdf(lines: list[str], predictor: int = 12) -> bytes:
         cat += body + b"\n"
     header = " ".join(f"{oid} {o}" for (oid, _), o in zip(dicts, offs))
     header = (header + "\n").encode()
-    stm_payload = zlib.compress(header + cat)
 
-    out = bytearray(b"%PDF-1.5\n")
-    positions: dict[int, int] = {}
+    def xref_stream(offsets: dict[int, int], xref_at: int) -> bytes:
+        rows = [
+            (0, 0, 255),  # free head (field 3 capped to the 1-byte W width)
+            (2, 5, 0), (2, 5, 1), (2, 5, 2),      # objects 1-3 in ObjStm 5
+            (1, offsets[4], 0), (1, offsets[5], 0), (1, xref_at, 0),
+        ]
+        raw = b"".join(
+            bytes([t]) + f1.to_bytes(4, "big") + bytes([f2])
+            for t, f1, f2 in rows
+        )
+        parms = ""
+        if predictor >= 10:  # forward-apply PNG up so the reader undoes it
+            up = bytes(6) + raw  # the row above each 6-byte row
+            raw = b"".join(
+                b"\x02" + bytes((x - y) & 0xFF for x, y in
+                                 zip(raw[r : r + 6], up[r : r + 6]))
+                for r in range(0, len(raw), 6)
+            )
+            parms = " /DecodeParms << /Predictor 12 /Columns 6 >>"
+        return _flate_stream(
+            raw, pre="/Type /XRef /Size 7 /W [1 4 1] /Root 1 0 R ", post=parms)
 
-    def emit(oid: int, body: bytes) -> None:
-        positions[oid] = len(out)
-        out.extend(f"{oid} 0 obj\n".encode() + body + b"\nendobj\n")
-
-    emit(4, b"<< /Length " + str(len(content)).encode()
-         + b" /Filter /FlateDecode >>\nstream\n" + content + b"\nendstream")
-    emit(5, b"<< /Type /ObjStm /N 3 /First " + str(len(header)).encode()
-         + b" /Length " + str(len(stm_payload)).encode()
-         + b" /Filter /FlateDecode >>\nstream\n" + stm_payload
-         + b"\nendstream")
-
-    xref_at = len(out)
-    rows = [
-        (0, 0, 255),  # free head (field 3 capped to the 1-byte W width)
-        (2, 5, 0), (2, 5, 1), (2, 5, 2),      # objects 1-3 in ObjStm 5
-        (1, positions[4], 0), (1, positions[5], 0), (1, xref_at, 0),
-    ]
-    raw = b"".join(
-        bytes([t]) + f1.to_bytes(4, "big") + bytes([f2]) for t, f1, f2 in rows
-    )
-    parms = b""
-    if predictor >= 10:  # forward-apply PNG up so the reader undoes it
-        rowlen = 6
-        filtered = bytearray()
-        prev = bytes(rowlen)
-        for r in range(0, len(raw), rowlen):
-            row = raw[r : r + rowlen]
-            filtered.append(2)
-            filtered.extend((row[j] - prev[j]) & 0xFF for j in range(rowlen))
-            prev = row
-        raw = bytes(filtered)
-        parms = (b" /DecodeParms << /Predictor 12 /Columns 6 >>")
-    xref_payload = zlib.compress(raw)
-    emit(6, b"<< /Type /XRef /Size 7 /W [1 4 1] /Root 1 0 R /Length "
-         + str(len(xref_payload)).encode() + b" /Filter /FlateDecode"
-         + parms + b" >>\nstream\n" + xref_payload + b"\nendstream")
-    out.extend(b"startxref\n" + str(xref_at).encode() + b"\n%%EOF")
-    return bytes(out)
+    return _write_pdf({
+        4: _flate_stream(_text_ops(lines, _pdf_show_string)),
+        5: _flate_stream(header + cat,
+                         pre=f"/Type /ObjStm /N 3 /First {len(header)} "),
+    }, xref_stream)
 
 
 # ---------------------------------------------------------------------------
@@ -449,6 +364,7 @@ _OBJ_RE = re.compile(rb"(\d+)\s+\d+\s+obj\b", re.S)
 _REF_RE = re.compile(rb"/(\w+)\s+(\d+)\s+\d+\s+R")
 _KIDS_RE = re.compile(rb"/Kids\s*\[((?:\s*\d+\s+\d+\s+R)+)\s*\]")
 _STREAM_RE = re.compile(rb"stream\r?\n")
+_ID_RE = re.compile(rb"/ID\s*\[\s*<([0-9A-Fa-f\s]*)>")
 
 
 class PdfError(ValueError):
@@ -476,6 +392,67 @@ def _object_body_end(data: bytes, hdr_end: int) -> int:
         if lm is not None and data.find(b"endobj", hdr_end, sm.start()) == -1:
             search_from = sm.end() + int(lm.group(1))
     return data.find(b"endobj", search_from)
+
+
+def _scan_objects(data: bytes):
+    """The linear object scan: ``(oid, lo, hi)`` for every
+    ``N G obj … endobj`` in file order, the body being ``data[lo:hi]``.
+    A header without its ``endobj`` is skipped."""
+    pos = 0
+    while True:
+        m = _OBJ_RE.search(data, pos)
+        if m is None:
+            return
+        end = _object_body_end(data, m.end())
+        if end == -1:
+            pos = m.end()
+            continue
+        yield int(m.group(1)), m.end(), end
+        pos = end + 6
+
+
+def _stream_span(body: bytes):
+    """Where the stream payload of object ``body`` lies, as
+    ``(stream dict, direct /Length match or None, lo, hi)`` with the
+    payload ``body[lo:hi]``; None when the body has no stream. Without a
+    direct /Length the payload ends before the last ``endstream``, less
+    exactly ONE optional EOL — compressed data may legitimately END in
+    0x0a/0x0d bytes, so rstrip would corrupt the zlib payload. With
+    neither, ``hi`` counts from the end of the body (it is negative):
+    the reader still inflates what is there. ``hi < lo`` (that case, or
+    an ``endstream`` before the stream keyword) means no payload was
+    found, and the encrypt writers and the decryptor leave it alone."""
+    sm = _STREAM_RE.search(body)
+    if sm is None:
+        return None
+    head, lo = body[: sm.start()], sm.end()
+    lm = _LENGTH_RE.search(head)
+    if lm is not None:
+        return head, lm, lo, lo + int(lm.group(1))
+    hi = body.rfind(b"endstream")
+    seg = body[lo:hi]
+    if seg.endswith(b"\r\n"):
+        hi -= 2
+    elif seg.endswith((b"\n", b"\r")):
+        hi -= 1
+    return head, None, lo, hi
+
+
+def _rewrite_stream(body: bytes, code) -> bytes:
+    """``body`` with its stream payload replaced by ``code(payload)``,
+    the direct /Length patched when the payload length changes. A body
+    without a stream or without a payload span (``hi < lo``, e.g.
+    neither a direct /Length nor an ``endstream``) comes back
+    unchanged."""
+    span = _stream_span(body)
+    if span is None or span[3] < span[2]:
+        return body
+    _, lm, lo, hi = span
+    new = code(body[lo:hi])
+    pre = body[:lo]
+    if lm is not None and len(new) != hi - lo:
+        pre = pre[: lm.start(1)] + str(len(new)).encode() + pre[lm.end(1):]
+    return pre + new + body[hi:]
 
 
 _STARTXREF_RE = re.compile(rb"startxref\s+(\d+)")
@@ -714,19 +691,8 @@ def _objects(data: bytes) -> dict[int, bytes]:
     if objs:
         return objs
     objs = {}
-    pos = 0
-    n = len(data)
-    while pos < n:
-        m = _OBJ_RE.search(data, pos)
-        if m is None:
-            break
-        end = _object_body_end(data, m.end())
-        if end == -1:
-            pos = m.end()
-            continue
-        oid = int(m.group(1))
-        objs[oid] = data[m.end():end]  # last wins (incremental updates)
-        pos = end + 6
+    for oid, lo, hi in _scan_objects(data):
+        objs[oid] = data[lo:hi]  # last wins (incremental updates)
     if not objs:
         raise PdfError("no PDF objects found")
     return objs
@@ -866,8 +832,6 @@ def _aes_expand_key(key: bytes) -> tuple[list[int], list[int]]:
     """(encryption words, decryption words) — 4 big-endian 32-bit words
     per round. Decryption uses the equivalent inverse cipher: middle
     round keys passed through InvMixColumns (via the Td/Te identity)."""
-    import struct
-
     sbox, _ = _aes_tables()
     te, td = _aes_ttables()
     nk = len(key) // 4
@@ -901,8 +865,6 @@ def _aes_expand_key(key: bytes) -> tuple[list[int], list[int]]:
 
 
 def _aes_encrypt_block(rk, block: bytes) -> bytes:
-    import struct
-
     te, _ = _aes_ttables()
     te0, te1, te2, te3 = te
     sbox, _ = _aes_tables()
@@ -934,8 +896,6 @@ def _aes_encrypt_block(rk, block: bytes) -> bytes:
 
 
 def _aes_decrypt_block(rk, block: bytes) -> bytes:
-    import struct
-
     _, td = _aes_ttables()
     td0, td1, td2, td3 = td
     _, isbox = _aes_tables()
@@ -987,9 +947,6 @@ def _aes_cbc_raw(key: bytes, iv: bytes, data: bytes, encrypt: bool) -> bytes:
     return bytes(out)
 
 
-import functools
-
-
 @functools.lru_cache(maxsize=64)
 def _hash_2b(password: bytes, salt: bytes, udata: bytes) -> bytes:
     """ISO 32000-2 Algorithm 2.B hardened KDF (R6): iterated
@@ -999,8 +956,6 @@ def _hash_2b(password: bytes, salt: bytes, udata: bytes) -> bytes:
     brute-force), ~0.3 s in pure Python — a corpus whose files share
     salts (the synthetic driver gate does this deliberately) pays it
     once per worker process; mixed-salt real corpora simply miss."""
-    from hashlib import sha256, sha384, sha512
-
     k = sha256(password + salt + udata).digest()
     i = 0
     while True:
@@ -1044,6 +999,53 @@ def _aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     return bytes(out)
 
 
+def _last_id0(data: bytes) -> bytes | None:
+    """First ELEMENT of the /ID array, from the LAST /ID occurrence —
+    incremental updates append trailers, so the operative trailer is the
+    last one (r5 ADVICE: first-match picked a stale pre-update ID and the
+    /U check spuriously failed); None when the file has no /ID."""
+    idm = None
+    for idm in _ID_RE.finditer(data):
+        pass
+    if idm is None:
+        return None
+    idh = re.sub(rb"\s", b"", idm.group(1))
+    if len(idh) % 2:  # PDF hex strings pad a missing final digit
+        idh += b"0"
+    return bytes.fromhex(idh.decode("ascii"))
+
+
+def _file_key_and_u(upad: bytes, o: bytes, permissions: int, id0: bytes,
+                    r: int, n: int, no_meta: bool = False
+                    ) -> tuple[bytes, bytes]:
+    """R2-R4 (file key, /U) for the padded user password ``upad``:
+    Algorithm 2 (md5 of password, /O, /P, first /ID element; 50 rehashes
+    from R3) and Algorithm 4 (R2, 32 bytes) or 5 (R3/R4, 16 bytes + 16
+    zero bytes; R4 uses it even under the AES crypt filter)."""
+    seed = upad + o[:32] + struct.pack("<i", permissions) + id0
+    if r == 4 and no_meta:  # /EncryptMetadata false salts the derivation
+        seed += b"\xff\xff\xff\xff"
+    key = md5(seed).digest()[:n]
+    if r >= 3:
+        for _ in range(50):
+            key = md5(key).digest()[:n]
+    if r == 2:
+        return key, _rc4(key, _PW_PAD)
+    x = _rc4(key, md5(_PW_PAD + id0).digest())
+    for i in range(1, 20):
+        x = _rc4(bytes(b ^ i for b in key), x)
+    return key, x + b"\x00" * 16
+
+
+def _object_key(key: bytes, oid: int, salt: bytes = b"") -> bytes:
+    """Algorithm 1 per-object key: md5(file_key + objnum[3 LE] +
+    gen[2 LE] (+ b"sAlT" for AES))[:min(n+5, 16)]; generation is taken
+    as 0 (the crawled-PDF norm — the object map keys by number only)."""
+    return md5(
+        key + oid.to_bytes(3, "little") + b"\x00\x00" + salt
+    ).digest()[: min(len(key) + 5, 16)]
+
+
 def _std_security_key(data: bytes, objs: dict[int, bytes]) -> bytes | None:
     """File encryption key for the standard handler with the EMPTY user
     password as ``(key, method)`` with method "rc4" (V1/V2 R2/R3, and
@@ -1051,9 +1053,6 @@ def _std_security_key(data: bytes, objs: dict[int, bytes]) -> bytes | None:
     not encrypted. Raises typed PdfError for password-protected files,
     AES-256 (V≥5), and non-Standard handlers — each a distinct
     row-error value a corpus job can count."""
-    import struct
-    from hashlib import md5
-
     # last /Encrypt reference wins (incremental updates append trailers)
     enc_ref = None
     for enc_ref in re.finditer(rb"/Encrypt\s+(\d+)\s+\d+\s+R", data):
@@ -1109,42 +1108,15 @@ def _std_security_key(data: bytes, objs: dict[int, bytes]) -> bytes | None:
     n = 5 if r == 2 else (_int_key(enc, b"Length") or 40) // 8
     if not 5 <= n <= 16:
         raise PdfError("encrypted PDF: bad key length")
-    # /EncryptMetadata false (R4) salts the key derivation
     no_meta = re.search(rb"/EncryptMetadata\s+false", enc) is not None
-    # first ELEMENT of the /ID array, but from the LAST /ID occurrence —
-    # incremental updates append trailers, so the operative trailer is
-    # the last one, same last-match-wins rule as /Encrypt above (r5
-    # ADVICE: first-match picked a stale pre-update ID and the /U check
-    # spuriously failed). Missing ID → empty string, matching viewers'
-    # leniency for ID-less encrypted files.
-    idm = None
-    for idm in re.finditer(rb"/ID\s*\[\s*<([0-9A-Fa-f\s]*)>", data):
-        pass
-    if idm:
-        idh = re.sub(rb"\s", b"", idm.group(1))
-        if len(idh) % 2:  # PDF hex strings pad a missing final digit
-            idh += b"0"
-        id0 = bytes.fromhex(idh.decode("ascii"))
-    else:
-        id0 = b""
-    p_bytes = struct.pack("<i", int(pm.group(1)))
-    seed = _PW_PAD + o[:32] + p_bytes + id0
-    if r == 4 and no_meta:
-        seed += b"\xff\xff\xff\xff"
-    key = md5(seed).digest()[:n]
-    if r >= 3:
-        for _ in range(50):
-            key = md5(key).digest()[:n]
-    # verify the EMPTY user password against /U (Algorithm 4/5; R4 uses
-    # the same RC4-based /U computation even under the AES crypt filter)
-    if r == 2:
-        ok = _rc4(key, _PW_PAD) == u[:32]
-    else:
-        x = _rc4(key, md5(_PW_PAD + id0).digest())
-        for i in range(1, 20):
-            x = _rc4(bytes(b ^ i for b in key), x)
-        ok = x == u[:16]
-    if not ok:
+    # a missing /ID is the empty string, matching viewers' leniency for
+    # ID-less encrypted files
+    id0 = _last_id0(data)
+    key, want = _file_key_and_u(_PW_PAD, o, int(pm.group(1)),
+                                b"" if id0 is None else id0, r, n, no_meta)
+    # verify the EMPTY user password against /U
+    k = 32 if r == 2 else 16
+    if want[:k] != u[:k]:
         raise PdfError("encrypted PDF: password required")
     return key, method
 
@@ -1152,54 +1124,86 @@ def _std_security_key(data: bytes, objs: dict[int, bytes]) -> bytes | None:
 def _decrypt_streams(
     objs: dict[int, bytes], key: bytes, method: str = "rc4"
 ) -> dict[int, bytes]:
-    """Decrypt every stream payload. RC4 is length-preserving (so
-    /Length values and body offsets stay valid); AESV2 shrinks the
-    payload (IV prefix + PKCS#7 padding removed), so the /Length token
-    in the stream dict is patched to the plaintext length. Per-object
-    key = md5(file_key + objnum[3 LE] + gen[2 LE] (+ b"sAlT" for
-    AES))[:min(n+5, 16)]; generation is taken as 0 (the crawled-PDF
-    norm — the object map keys by number only). Dict strings are left
-    encrypted: extraction only reads strings out of (decrypted) content
-    streams, never from dicts."""
-    from hashlib import md5
-
-    out: dict[int, bytes] = {}
-    klen = min(len(key) + 5, 16)
+    """Decrypt every stream payload through :func:`_rewrite_stream`.
+    RC4 is length-preserving (so /Length values and body offsets stay
+    valid); AESV2 shrinks the payload (IV prefix + PKCS#7 padding
+    removed), so the /Length token is patched to the plaintext length.
+    Per-object keys come from :func:`_object_key`; AES-256 (R6) uses the
+    file key directly. Dict strings are left encrypted: extraction only
+    reads strings out of (decrypted) content streams, never from
+    dicts."""
     salt = b"sAlT" if method == "aes" else b""
-    for oid, body in objs.items():
-        sm = _STREAM_RE.search(body)
-        if sm is None:
-            out[oid] = body
-            continue
-        lm = _LENGTH_RE.search(body[: sm.start()])
-        if lm is not None:
-            lo, hi = sm.end(), sm.end() + int(lm.group(1))
-        else:
-            lo, hi = sm.end(), body.rfind(b"endstream")
-            if hi == -1:
-                out[oid] = body
-                continue
-            seg = body[lo:hi]
-            if seg.endswith(b"\r\n"):
-                hi -= 2
-            elif seg.endswith((b"\n", b"\r")):
-                hi -= 1
+
+    def plain(oid: int, payload: bytes) -> bytes:
         if method == "aes256":
-            okey = key  # R6: the file key is used directly per stream
-        else:
-            okey = md5(
-                key + oid.to_bytes(3, "little") + b"\x00\x00" + salt
-            ).digest()[:klen]
-        if method in ("aes", "aes256"):
-            plain = _aes_cbc_decrypt(okey, body[lo:hi])
-            head = body[:lo]
-            if lm is not None:
-                head = (head[: lm.start(1)] + str(len(plain)).encode()
-                        + head[lm.end(1) :])
-            out[oid] = head + plain + body[hi:]
-        else:
-            out[oid] = body[:lo] + _rc4(okey, body[lo:hi]) + body[hi:]
-    return out
+            return _aes_cbc_decrypt(key, payload)
+        okey = _object_key(key, oid, salt)
+        if method == "aes":
+            return _aes_cbc_decrypt(okey, payload)
+        return _rc4(okey, payload)
+
+    return {oid: _rewrite_stream(body, functools.partial(plain, oid))
+            for oid, body in objs.items()}
+
+
+def _encrypt_streams(data: bytes, cipher, encrypt: str, id0: bytes) -> bytes:
+    """The writers' one stream-rewrite loop: every stream payload of
+    ``data`` becomes ``cipher(oid, payload)`` (:func:`_rewrite_stream`),
+    then the /Encrypt dictionary (``encrypt`` holds its entries after
+    /Filter /Standard) and a trailer carrying its reference and
+    ``/ID [id0 id0]`` are appended."""
+    out = bytearray()
+    cursor = max_oid = 0
+    for oid, lo, hi in _scan_objects(data):
+        max_oid = max(max_oid, oid)
+        out += data[cursor:lo]
+        out += _rewrite_stream(data[lo:hi], functools.partial(cipher, oid))
+        cursor = hi
+    out += data[cursor:]
+    eid = max_oid + 1
+    out += (
+        f"{eid} 0 obj\n<< /Filter /Standard {encrypt} >>\nendobj\n"
+        f"trailer\n<< /Encrypt {eid} 0 R"
+        f" /ID [<{id0.hex()}> <{id0.hex()}>] >>\n%%EOF\n"
+    ).encode("ascii")
+    return bytes(out)
+
+
+def _writer_id_and_keys(data, owner_pw, user_pw, permissions, file_id,
+                        r, n):
+    """(first /ID element, /O, file key, /U) of an R2-R4 writer.
+    ``file_id`` defaults to the input's own (last trailer's) first /ID
+    element — the spec keeps it permanent across incremental updates, so
+    readers keying off either occurrence agree — else md5 of the input.
+    /O is Algorithm 3."""
+    id0 = _last_id0(data) if file_id is None else file_id
+    if id0 is None:
+        id0 = md5(data).digest()
+    h = md5(((owner_pw or user_pw) + _PW_PAD)[:32]).digest()
+    if r >= 3:
+        for _ in range(50):
+            h = md5(h).digest()
+    okey = h[:n]
+    upad = (user_pw + _PW_PAD)[:32]
+    o = _rc4(okey, upad)
+    if r >= 3:
+        for i in range(1, 20):
+            o = _rc4(bytes(b ^ i for b in okey), o)
+    return (id0, o, *_file_key_and_u(upad, o, permissions, id0, r, n))
+
+
+def _aes_cipher(key_of, id0: bytes):
+    """AES-CBC stream cipher of the writers: the per-stream IV derives
+    from (first /ID element, object number)."""
+    def cipher(oid: int, payload: bytes) -> bytes:
+        iv = md5(b"iv" + id0 + oid.to_bytes(3, "little")).digest()[:16]
+        return _aes_cbc_encrypt(key_of(oid), iv, payload)
+    return cipher
+
+
+def _crypt_filter(cfm: str, n: int) -> str:
+    return (f" /CF << /StdCF << /CFM /{cfm} /AuthEvent /DocOpen"
+            f" /Length {n} >> >> /StmF /StdCF /StrF /StdCF")
 
 
 def encrypt_pdf_rc4(
@@ -1219,96 +1223,20 @@ def encrypt_pdf_rc4(
     common crawled shape (owner-restricted, user-readable); a non-empty
     one makes a file :func:`extract_pdf_text` refuses with the typed
     "password required" error. Deterministic given ``file_id`` (defaults
-    to md5 of the input) — used by the driver-gated synthetic corpus."""
-    import struct
-    from hashlib import md5
-
+    to the input's first /ID element, else md5 of the input) — used by
+    the driver-gated synthetic corpus."""
     if r == 2:
         n, v, length = 5, 1, 40
     elif r == 3:
         n, v = length // 8, 2
     else:
         raise ValueError(f"unsupported revision {r}")
-    if file_id is not None:
-        id0 = file_id
-    else:
-        # spec: the FIRST /ID element is permanent across incremental
-        # updates — reuse the input's (last trailer's) first element if
-        # it has one, so readers keying off either occurrence agree
-        prev = None
-        for prev in re.finditer(rb"/ID\s*\[\s*<([0-9A-Fa-f\s]*)>", data):
-            pass
-        if prev is not None:
-            idh = re.sub(rb"\s", b"", prev.group(1))
-            if len(idh) % 2:
-                idh += b"0"
-            id0 = bytes.fromhex(idh.decode("ascii"))
-        else:
-            id0 = md5(data).digest()
-    opad = ((owner_pw or user_pw) + _PW_PAD)[:32]
-    h = md5(opad).digest()
-    if r >= 3:
-        for _ in range(50):
-            h = md5(h).digest()
-    okey = h[:n]
-    upad = (user_pw + _PW_PAD)[:32]
-    o = _rc4(okey, upad)
-    if r >= 3:
-        for i in range(1, 20):
-            o = _rc4(bytes(b ^ i for b in okey), o)
-    key = md5(upad + o + struct.pack("<i", permissions) + id0).digest()[:n]
-    if r >= 3:
-        for _ in range(50):
-            key = md5(key).digest()[:n]
-    if r == 2:
-        u = _rc4(key, _PW_PAD)
-    else:
-        x = _rc4(key, md5(_PW_PAD + id0).digest())
-        for i in range(1, 20):
-            x = _rc4(bytes(b ^ i for b in key), x)
-        u = x + b"\x00" * 16
-    res = bytearray(data)
-    klen = min(n + 5, 16)
-    max_oid = 0
-    pos = 0
-    while True:
-        m = _OBJ_RE.search(data, pos)
-        if m is None:
-            break
-        end = _object_body_end(data, m.end())
-        if end == -1:
-            pos = m.end()
-            continue
-        oid = int(m.group(1))
-        max_oid = max(max_oid, oid)
-        body = data[m.end() : end]
-        sm = _STREAM_RE.search(body)
-        if sm is not None:
-            lm = _LENGTH_RE.search(body[: sm.start()])
-            if lm is not None:
-                lo, hi = sm.end(), sm.end() + int(lm.group(1))
-            else:
-                hi = body.rfind(b"endstream")
-                lo = sm.end()
-                seg = body[lo:hi]
-                if seg.endswith(b"\r\n"):
-                    hi -= 2
-                elif seg.endswith((b"\n", b"\r")):
-                    hi -= 1
-            okey_ = md5(
-                key + oid.to_bytes(3, "little") + b"\x00\x00"
-            ).digest()[:klen]
-            a, b = m.end() + lo, m.end() + hi
-            res[a:b] = _rc4(okey_, bytes(res[a:b]))
-        pos = end + 6
-    eid = max_oid + 1
-    res += (
-        f"{eid} 0 obj\n<< /Filter /Standard /V {v} /R {r} /Length {length}"
-        f" /O <{o.hex()}> /U <{u.hex()}> /P {permissions} >>\nendobj\n"
-        f"trailer\n<< /Encrypt {eid} 0 R"
-        f" /ID [<{id0.hex()}> <{id0.hex()}>] >>\n%%EOF\n"
-    ).encode("ascii")
-    return bytes(res)
+    id0, o, key, u = _writer_id_and_keys(
+        data, owner_pw, user_pw, permissions, file_id, r, n)
+    return _encrypt_streams(
+        data, lambda oid, p: _rc4(_object_key(key, oid), p),
+        f"/V {v} /R {r} /Length {length} /O <{o.hex()}> /U <{u.hex()}>"
+        f" /P {permissions}", id0)
 
 
 def encrypt_pdf_aes(
@@ -1326,92 +1254,12 @@ def encrypt_pdf_aes(
     same R≥3 algorithms as RC4 (the /U check is RC4-based even under
     AES). Deterministic: ``file_id`` defaults like the RC4 writer; the
     per-stream IV derives from (file_id, object number)."""
-    import struct
-    from hashlib import md5
-
-    n, v, r = 16, 4, 4
-    if file_id is not None:
-        id0 = file_id
-    else:
-        prev = None
-        for prev in re.finditer(rb"/ID\s*\[\s*<([0-9A-Fa-f\s]*)>", data):
-            pass
-        if prev is not None:
-            idh = re.sub(rb"\s", b"", prev.group(1))
-            if len(idh) % 2:
-                idh += b"0"
-            id0 = bytes.fromhex(idh.decode("ascii"))
-        else:
-            id0 = md5(data).digest()
-    opad = ((owner_pw or user_pw) + _PW_PAD)[:32]
-    h = md5(opad).digest()
-    for _ in range(50):
-        h = md5(h).digest()
-    okey = h[:n]
-    upad = (user_pw + _PW_PAD)[:32]
-    o = _rc4(okey, upad)
-    for i in range(1, 20):
-        o = _rc4(bytes(b ^ i for b in okey), o)
-    key = md5(upad + o + struct.pack("<i", permissions) + id0).digest()[:n]
-    for _ in range(50):
-        key = md5(key).digest()[:n]
-    x = _rc4(key, md5(_PW_PAD + id0).digest())
-    for i in range(1, 20):
-        x = _rc4(bytes(b ^ i for b in key), x)
-    u = x + b"\x00" * 16
-    out = bytearray()
-    cursor = 0
-    max_oid = 0
-    pos = 0
-    while True:
-        m = _OBJ_RE.search(data, pos)
-        if m is None:
-            break
-        end = _object_body_end(data, m.end())
-        if end == -1:
-            pos = m.end()
-            continue
-        oid = int(m.group(1))
-        max_oid = max(max_oid, oid)
-        body = data[m.end() : end]
-        sm = _STREAM_RE.search(body)
-        pos = end + 6
-        if sm is None:
-            continue
-        lm = _LENGTH_RE.search(body[: sm.start()])
-        if lm is not None:
-            lo, hi = sm.end(), sm.end() + int(lm.group(1))
-        else:
-            hi = body.rfind(b"endstream")
-            lo = sm.end()
-            seg = body[lo:hi]
-            if seg.endswith(b"\r\n"):
-                hi -= 2
-            elif seg.endswith((b"\n", b"\r")):
-                hi -= 1
-        okey_ = md5(
-            key + oid.to_bytes(3, "little") + b"\x00\x00" + b"sAlT"
-        ).digest()[: min(n + 5, 16)]
-        iv = md5(b"iv" + id0 + oid.to_bytes(3, "little")).digest()[:16]
-        cipher = _aes_cbc_encrypt(okey_, iv, bytes(body[lo:hi]))
-        head = body[:lo]
-        if lm is not None:
-            head = (head[: lm.start(1)] + str(len(cipher)).encode()
-                    + head[lm.end(1) :])
-        out += data[cursor : m.end()]
-        out += head + cipher + body[hi:]
-        cursor = end
-    out += data[cursor:]
-    eid = max_oid + 1
-    out += (
-        f"{eid} 0 obj\n<< /Filter /Standard /V {v} /R {r} /Length 128"
-        f" /CF << /StdCF << /CFM /AESV2 /AuthEvent /DocOpen"
-        f" /Length 16 >> >> /StmF /StdCF /StrF /StdCF"
-        f" /O <{o.hex()}> /U <{u.hex()}> /P {permissions} >>\nendobj\n"
-        f"trailer\n<< /Encrypt {eid} 0 R"
-        f" /ID [<{id0.hex()}> <{id0.hex()}>] >>\n%%EOF\n"
-    ).encode("ascii")
-    return bytes(out)
+    id0, o, key, u = _writer_id_and_keys(
+        data, owner_pw, user_pw, permissions, file_id, 4, 16)
+    return _encrypt_streams(
+        data, _aes_cipher(lambda oid: _object_key(key, oid, b"sAlT"), id0),
+        "/V 4 /R 4 /Length 128" + _crypt_filter("AESV2", 16)
+        + f" /O <{o.hex()}> /U <{u.hex()}> /P {permissions}", id0)
 
 
 def encrypt_pdf_aes256(
@@ -1427,18 +1275,15 @@ def encrypt_pdf_aes256(
     /O = 2.B(owner_pw, ovsalt, U48) ∥ salts; /Perms = AES-ECB of the
     permissions block. Streams become IV ∥ AES-256-CBC ∥ PKCS#7 with
     the file key used directly (no per-object derivation), /Length
-    patched. Deterministic: salts/key/IVs derive from ``file_id``.
+    patched. Deterministic: salts/key/IVs derive from ``file_id``
+    (default md5 of the input).
     NOTE: the reader shares :func:`_hash_2b` with this writer (same
     situation as the RC4 /O·/U algorithms) — the driver gate proves
     the end-to-end roundtrip, not KDF interop with external files."""
-    import struct
-    from hashlib import md5, sha256
-
     if file_id is None:
         file_id = md5(data).digest()
-    d = sha256(b"aes256" + file_id).digest
     filekey = sha256(b"key" + file_id).digest()
-    vsalt = d()[:8]
+    vsalt = sha256(b"aes256" + file_id).digest()[:8]
     ksalt = sha256(b"ksalt" + file_id).digest()[:8]
     u = _hash_2b(user_pw, vsalt, b"") + vsalt + ksalt
     ue = _aes_cbc_raw(_hash_2b(user_pw, ksalt, b""), b"\x00" * 16,
@@ -1451,83 +1296,26 @@ def encrypt_pdf_aes256(
     perms_blk = (struct.pack("<i", permissions) + b"\xff\xff\xff\xff"
                  + b"Tadb" + sha256(b"perms" + file_id).digest()[:4])
     perms = _aes_encrypt_block(_aes_expand_key(filekey), perms_blk)
-    out = bytearray()
-    cursor = 0
-    max_oid = 0
-    pos = 0
-    while True:
-        m = _OBJ_RE.search(data, pos)
-        if m is None:
-            break
-        end = _object_body_end(data, m.end())
-        if end == -1:
-            pos = m.end()
-            continue
-        oid = int(m.group(1))
-        max_oid = max(max_oid, oid)
-        body = data[m.end() : end]
-        sm = _STREAM_RE.search(body)
-        pos = end + 6
-        if sm is None:
-            continue
-        lm = _LENGTH_RE.search(body[: sm.start()])
-        if lm is not None:
-            lo, hi = sm.end(), sm.end() + int(lm.group(1))
-        else:
-            hi = body.rfind(b"endstream")
-            lo = sm.end()
-            seg = body[lo:hi]
-            if seg.endswith(b"\r\n"):
-                hi -= 2
-            elif seg.endswith((b"\n", b"\r")):
-                hi -= 1
-        iv = md5(b"iv" + file_id + oid.to_bytes(3, "little")).digest()[:16]
-        cipher = _aes_cbc_encrypt(filekey, iv, bytes(body[lo:hi]))
-        head = body[:lo]
-        if lm is not None:
-            head = (head[: lm.start(1)] + str(len(cipher)).encode()
-                    + head[lm.end(1) :])
-        out += data[cursor : m.end()]
-        out += head + cipher + body[hi:]
-        cursor = end
-    out += data[cursor:]
-    eid = max_oid + 1
-    out += (
-        f"{eid} 0 obj\n<< /Filter /Standard /V 5 /R 6 /Length 256"
-        f" /CF << /StdCF << /CFM /AESV3 /AuthEvent /DocOpen"
-        f" /Length 32 >> >> /StmF /StdCF /StrF /StdCF"
-        f" /O <{o.hex()}> /U <{u.hex()}>"
-        f" /OE <{oe.hex()}> /UE <{ue.hex()}>"
-        f" /Perms <{perms.hex()}> /P {permissions} >>\nendobj\n"
-        f"trailer\n<< /Encrypt {eid} 0 R"
-        f" /ID [<{file_id.hex()}> <{file_id.hex()}>] >>\n%%EOF\n"
-    ).encode("ascii")
-    return bytes(out)
+    return _encrypt_streams(
+        data, _aes_cipher(lambda oid: filekey, file_id),
+        "/V 5 /R 6 /Length 256" + _crypt_filter("AESV3", 32)
+        + f" /O <{o.hex()}> /U <{u.hex()}> /OE <{oe.hex()}>"
+        f" /UE <{ue.hex()}> /Perms <{perms.hex()}> /P {permissions}",
+        file_id)
 
 
 def _content_stream(body: bytes) -> bytes:
-    sm = _STREAM_RE.search(body)
-    if sm is None:
+    span = _stream_span(body)
+    if span is None:
         return b""
-    lm = _LENGTH_RE.search(body[: sm.start()])
-    if lm is not None:
-        raw = body[sm.end() : sm.end() + int(lm.group(1))]
-    else:
-        # no direct /Length: strip exactly ONE optional EOL before
-        # endstream — compressed data may legitimately END in 0x0a/0x0d
-        # bytes, so rstrip would corrupt the zlib payload
-        end = body.rfind(b"endstream")
-        raw = body[sm.end():end]
-        if raw.endswith(b"\r\n"):
-            raw = raw[:-2]
-        elif raw.endswith((b"\n", b"\r")):
-            raw = raw[:-1]
-    if b"/FlateDecode" in body[: sm.start()]:
+    head, _, lo, hi = span
+    raw = body[lo:hi]
+    if b"/FlateDecode" in head:
         try:
             raw = zlib.decompress(raw)
         except zlib.error as e:
             raise PdfError(f"FlateDecode failed: {e}") from None
-        raw = _apply_predictor(raw, body[: sm.start()])
+        raw = _apply_predictor(raw, head)
     return raw
 
 
@@ -1594,8 +1382,8 @@ def _dict_int(d: bytes, key: bytes, default: int) -> int:
 
 def _apply_predictor(raw: bytes, stream_dict: bytes) -> bytes:
     """Undo the /DecodeParms predictor after inflate: PNG filters 10-15
-    (None/Sub/Up/Average/Paeth per row, ISO 32000-1 §7.4.4.4 via PNG
-    spec §9) and TIFF horizontal differencing (predictor 2, 8-bit
+    (None/Sub/Up/Average/Paeth per row through :func:`_png_unfilter`,
+    ISO 32000-1 §7.4.4.4 via PNG spec §9) and TIFF horizontal differencing (predictor 2, 8-bit
     components only). Truncated rows / unknown filter bytes raise
     PdfError (row-level error, never a silent wrong answer)."""
     parms = _extract_parms(stream_dict)
@@ -1631,30 +1419,46 @@ def _apply_predictor(raw: bytes, stream_dict: bytes) -> bytes:
             raise PdfError("truncated predictor row")
         row = bytearray(raw[i : i + rowlen])
         i += rowlen
-        if ft == 1:  # Sub
-            for j in range(bpp, rowlen):
-                row[j] = (row[j] + row[j - bpp]) & 0xFF
-        elif ft == 2:  # Up
-            for j in range(rowlen):
-                row[j] = (row[j] + prev[j]) & 0xFF
-        elif ft == 3:  # Average
-            for j in range(rowlen):
-                left = row[j - bpp] if j >= bpp else 0
-                row[j] = (row[j] + (left + prev[j]) // 2) & 0xFF
-        elif ft == 4:  # Paeth
-            for j in range(rowlen):
-                a = row[j - bpp] if j >= bpp else 0
-                b = prev[j]
-                c = prev[j - bpp] if j >= bpp else 0
-                pp = a + b - c
-                pa, pb, pc = abs(pp - a), abs(pp - b), abs(pp - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                row[j] = (row[j] + pred) & 0xFF
-        elif ft != 0:
+        if not _png_unfilter(ft, row, prev, bpp):
             raise PdfError(f"unknown PNG filter byte {ft}")
         out += row
         prev = row
     return bytes(out)
+
+
+def _png_unfilter(ft: int, row: bytearray, prev, bpp: int) -> bool:
+    """The one PNG row unfilter (PNG spec §9), shared by the PDF
+    predictors above and ``multimodal._decode_png``: undo filter type
+    ``ft`` (0 None, 1 Sub, 2 Up, 3 Average, 4 Paeth) on ``row`` in
+    place. ``prev`` is the unfiltered row above (zeros for the first
+    row) and ``bpp`` the bytes per complete pixel (at least 1; filters
+    reference the previous pixel's corresponding byte). Returns False,
+    the row untouched, for any other type: each caller raises its own
+    error."""
+    rowlen = len(row)
+    if ft == 1:  # Sub
+        for j in range(bpp, rowlen):
+            row[j] = (row[j] + row[j - bpp]) & 0xFF
+    elif ft == 2:  # Up
+        for j in range(rowlen):
+            row[j] = (row[j] + prev[j]) & 0xFF
+    elif ft == 3:  # Average
+        for j in range(rowlen):
+            left = row[j - bpp] if j >= bpp else 0
+            row[j] = (row[j] + ((left + prev[j]) >> 1)) & 0xFF
+    elif ft == 4:  # Paeth
+        for j in range(rowlen):
+            a = row[j - bpp] if j >= bpp else 0
+            b = prev[j]
+            c = prev[j - bpp] if j >= bpp else 0
+            p = a + b - c
+            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+            row[j] = (
+                row[j] + (a if pa <= pb and pa <= pc else b if pb <= pc else c)
+            ) & 0xFF
+    elif ft != 0:
+        return False
+    return True
 
 
 _TYPE_RE = re.compile(rb"/Type\s*/(Pages|Page)\b")

@@ -1583,30 +1583,21 @@ class TreeBuilder:
 
     def _h_in_caption(self, tok):
         t = tok[0]
-        if t == "end" and tok[1] == "caption":
-            if not self._has_in_table_scope("caption"):
-                self.parse_errors += 1
-                return None
-            self._generate_implied()
-            self._pop_until_popped("caption")
-            self._clear_afe_to_marker()
-            self.mode = M_IN_TABLE
-            return None
-        if (
+        if (t == "end" and tok[1] in ("caption", "table")) or (
             t == "start"
             and tok[1] in (
                 "caption", "col", "colgroup", "tbody", "td", "tfoot",
                 "th", "thead", "tr",
             )
-        ) or (t == "end" and tok[1] == "table"):
+        ):
             if not self._has_in_table_scope("caption"):
                 self.parse_errors += 1
                 return None
-            self._generate_implied()
-            self._pop_until_popped("caption")
+            self._close_element("caption")
             self._clear_afe_to_marker()
             self.mode = M_IN_TABLE
-            return tok
+            # </caption> is consumed; the others reprocess in table
+            return None if t == "end" and tok[1] == "caption" else tok
         if t == "end" and tok[1] in (
             "body", "col", "colgroup", "html", "tbody", "td", "tfoot",
             "th", "thead", "tr",

@@ -324,6 +324,20 @@ def test_caption_closed_by_cell():
     ]
 
 
+def test_caption_close_counts_open_child_as_parse_error():
+    # closing the caption while <b> is still the current node is a
+    # parse error, on the </caption> path and the </table> path alike;
+    # the missing doctype is the other one
+    from html5ever_elixir_spark.parser.api import parse_document
+
+    for html in ("<table><caption><b>x</caption></table>",
+                 "<table><caption><b>x</table>"):
+        b = parse_document(html)
+        assert b.parse_errors + b.tokenizer.parse_errors == 2, html
+    b = parse_document("<table><caption>x</caption></table>")
+    assert b.parse_errors + b.tokenizer.parse_errors == 1
+
+
 def test_heading_closes_heading():
     ok, tree = parse("<h1>a<h2>b")
     assert body(tree)[2] == [("h1", [], ["a"]), ("h2", [], ["b"])]

@@ -55,7 +55,7 @@ FROZEN = {
     "template_pages": (
         400, "5cd75c28409e07e9855931017f295c48ab3d4931c6fb5ab4c3906c1d20314cc1"),
     "tree_construction": (
-        522, "c0668d81a77cd708b63c7332dd8a55c6698d4686aa1f02363d21a9e4e4135362"),
+        522, "b9502165b1fc5a205dae961eb071186cda3bf1ab177669e6ed308019ecfc385f"),
     "tree_construction_fragments": (
         25, "7fa917011eaae199030b1a8f24fd74b565f2b9aa583ae3fb1a7989545dcf727a"),
 }

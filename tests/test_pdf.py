@@ -434,3 +434,25 @@ def test_fuzz_corruption_never_escapes_error_contract():
                 extract_pdf_text(bytes(buf))
             except PdfError:
                 pass
+
+
+@pytest.mark.parametrize("writer", ["rc4", "aes", "aes256"])
+@pytest.mark.parametrize("stream", [
+    b"stream\nBT (kept as is) Tj ET\n",  # no /Length, no endstream
+    b"stream BT (x) Tj ET endstream\n",  # keyword only inside endstream
+], ids=["no_length_no_endstream", "keyword_in_endstream"])
+def test_encrypt_leaves_payloadless_stream_as_the_reader_does(
+        writer, stream):
+    # the decryptor finds no payload span in these streams and leaves
+    # them alone, so every writer must too
+    from html5ever_elixir_spark.parser import pdf
+
+    plain = (
+        b"%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
+        b"2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
+        b"3 0 obj\n<< /Type /Page /Contents 4 0 R >>\nendobj\n"
+        b"4 0 obj\n<< >>\n" + stream + b"endobj\n"
+    )
+    enc = getattr(pdf, f"encrypt_pdf_{writer}")(plain)
+    assert enc[: len(plain)] == plain
+    assert extract_pdf_text(enc) == extract_pdf_text(plain)

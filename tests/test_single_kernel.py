@@ -3,8 +3,10 @@ stage is one ``emit`` over ``operators.map_rows``, and every
 per-document HTML operator is an emitter list over
 ``operators.parse.map_documents``, whose ``decode_and_parse`` is the
 only place that parses and owns the parse budget and the UTF-8 gate;
-each tree encoding has one walker in ``parser/api.py``. Pure ``ast``
-scan, no Spark."""
+each tree encoding has one walker in ``parser/api.py``. The PDF module
+has one file serializer, one linear object scan and one stream-payload
+span, and the package one PNG row unfilter. Pure ``ast`` scan, no
+Spark."""
 
 import ast
 import os
@@ -19,6 +21,7 @@ SCANNED = sorted(
 ) + [ROOT / "__spark_entry__.py"]
 KERNEL = PKG / "operators" / "parse.py"
 API = PKG / "parser" / "api.py"
+PDF = PKG / "parser" / "pdf.py"
 # the calls that make a Python batch stage of their own
 BATCH_CALLS = (
     "mapInArrow", "mapInPandas", "from_pydict", "from_pylist",
@@ -213,3 +216,96 @@ def test_hot_table_entry_is_the_only_in_body_handler():
                           ("_in_body_end", treebuilder._HOT_END))
     }
     assert shadowed == {"_in_body_start": [], "_in_body_end": []}
+
+
+def _pdf_functions_with(pred):
+    """Names of the functions of ``parser/pdf.py`` holding a node for
+    which ``pred(node)`` is true (f-string pieces included, docstrings
+    left out)."""
+    tree = ast.parse(PDF.read_text())
+    docs = {
+        id(node.body[0].value) for node in ast.walk(tree)
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        and ast.get_docstring(node) is not None
+    }
+    return sorted({
+        fn for node, fn in _scopes(tree)
+        if fn is not None and id(node) not in docs and pred(node)
+    })
+
+
+def _text_constant(node, *needles):
+    return isinstance(node, ast.Constant) and isinstance(
+        node.value, (str, bytes)
+    ) and any(
+        (n.encode() if isinstance(node.value, bytes) else n) in node.value
+        for n in needles
+    )
+
+
+def test_one_pdf_file_serializer():
+    # every writer hands its numbered objects to _write_pdf, the one
+    # place that writes a cross-reference section and startxref; the
+    # encrypt writers share the one loop that appends /Encrypt + trailer
+    xref = _pdf_functions_with(lambda n: _text_constant(
+        n, "startxref\n", " 00000 n ", " 65535 f "))
+    trailer = _pdf_functions_with(lambda n: _text_constant(n, "trailer\n"))
+    assert (xref, trailer) == (
+        ["_write_pdf"], ["_encrypt_streams", "_write_pdf"])
+
+
+def _loops(tree):
+    """(node inside a loop body, name of the outermost function)."""
+    for node, fn in _scopes(tree):
+        if isinstance(node, (ast.For, ast.While)):
+            for inner in ast.walk(node):
+                yield inner, fn
+
+
+def test_one_linear_object_scan():
+    # the `N G obj … endobj` scan loop is _scan_objects; the reader's
+    # fallback and the encrypt writers iterate over it
+    scans = sorted({
+        fn for node, fn in _loops(ast.parse(PDF.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and isinstance(node.func.value, ast.Name)
+        and node.func.value.id == "_OBJ_RE"
+    })
+    assert scans == ["_scan_objects"]
+
+
+def test_one_stream_payload_span():
+    # "/Length, else endstream minus one EOL" is computed in _stream_span
+    # only; _object_body_end reads /Length just to skip the payload
+    ends = _pdf_functions_with(
+        lambda n: isinstance(n, ast.Call) and n.args
+        and _text_constant(n.args[0], "endstream")
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr in ("find", "rfind", "index", "rindex"))
+    lengths = _pdf_functions_with(
+        lambda n: isinstance(n, ast.Name) and n.id == "_LENGTH_RE")
+    assert (ends, lengths) == (
+        ["_stream_span"], ["_object_body_end", "_stream_span"])
+
+
+def _is_paeth_abs(node):
+    # abs(p - a): the predictor-distance step of a Paeth filter
+    return (
+        _called(node, "abs") and len(node.args) == 1
+        and isinstance(node.args[0], ast.BinOp)
+        and isinstance(node.args[0].op, ast.Sub)
+        and isinstance(node.args[0].left, ast.Name)
+        and isinstance(node.args[0].right, ast.Name)
+    )
+
+
+def test_one_png_unfilter():
+    # PDF predictors and PNG decode share parser/pdf.py::_png_unfilter
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) \
+                    and sum(map(_is_paeth_abs, ast.walk(node))) >= 3:
+                found.append(f"{path.relative_to(PKG)}::{node.name}")
+    assert found == ["parser/pdf.py::_png_unfilter"], found
